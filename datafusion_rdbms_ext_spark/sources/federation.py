@@ -10,7 +10,7 @@ columnar batches (binary_reader.rs).
 
 Here the "remote RDBMS" is DuckDB over the fixture parquet (playing
 Postgres), and each partition's fetch runs ON AN EXECUTOR inside
-``mapInPandas`` — N concurrent database cursors feeding Arrow
+``mapInArrow`` — N concurrent database cursors feeding Arrow
 batches, exactly the reference's N concurrent COPY streams
 (PostgresExec). Differences by design:
 
@@ -50,6 +50,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..queries.base import register
+from .connector import (
+    DuckDBConnector,
+    connector_scan,
+    fetch_partitioned,
+    pick_partition_key,
+)
 
 #: information_schema data_type -> Spark type (datatypes.rs:141-176 parity).
 _TYPE_MAP: dict[str, T.DataType] = {
@@ -234,64 +240,6 @@ def compile_query(
     return sql
 
 
-# The partition planning + executor-fetch pipeline lives in the
-# dialect-neutral connector seam (connector.py — the reference's
-# DatabaseConnector shape, mod.rs:33-51); this module keeps its
-# public names as thin DuckDB-dialect bindings so the two dialects
-# cannot drift apart.
-
-
-def _pick_partition_key(schema: T.StructType) -> str | None:
-    from .connector import pick_partition_key
-
-    return pick_partition_key(schema)
-
-
-def plan_range_predicates(
-    sf_dir: str, base_sql: str, key: str, partitions: int
-) -> list[str]:
-    """Plan N disjoint, covering range predicates on ``key`` with
-    remote-quantile split points — balanced slices even for skewed
-    keys, where the naive (max-min)/N equi-width split is not.
-    (DuckDB-dialect binding of Connector.partition_predicates.)"""
-    from .connector import DuckDBConnector
-
-    return DuckDBConnector(sf_dir).partition_predicates(base_sql, key, partitions)
-
-
-def plan_offset_slices(sf_dir: str, base_sql: str, partitions: int) -> list[str]:
-    """Keyless fallback slicing: deterministic ORDER BY ALL
-    LIMIT/OFFSET partition SQLs (N remote sorts — acceptable only
-    when no range key exists). Shared by the library scan and the
-    DataSource reader so the arithmetic cannot drift apart."""
-    total = count_records(sf_dir, base_sql)
-    per = (total + partitions - 1) // partitions if total else 0
-    return [
-        f"SELECT * FROM ({base_sql}) _t ORDER BY ALL LIMIT {per} OFFSET {i * per}"
-        for i in range(partitions)
-        if per > 0
-    ] or [base_sql]
-
-
-def _fetch_partitioned(
-    spark: SparkSession,
-    sf_dir: str,
-    base_sql: str,
-    schema: T.StructType,
-    partitions: int,
-    partition_key: str | None,
-    limited: bool = False,
-) -> DataFrame:
-    """DuckDB-dialect binding of the shared partitioned fetch
-    (connector.fetch_partitioned — PostgresExec parity)."""
-    from .connector import DuckDBConnector, fetch_partitioned
-
-    return fetch_partitioned(
-        spark, DuckDBConnector(sf_dir), base_sql, schema, partitions,
-        partition_key, limited,
-    )
-
-
 def federated_scan(
     spark: SparkSession,
     sf_dir: str,
@@ -306,13 +254,9 @@ def federated_scan(
     remote SQL — table_provider.rs:79-159 parity), fetched through
     key-range partition predicates (``partition_key`` defaults to the
     first integral projected column)."""
-    schema = load_catalog(sf_dir)[table]
-    if columns:
-        schema = T.StructType([f for f in schema.fields if f.name in set(columns)])
-    base_sql = compile_scan(table, columns, predicates, limit)
-    key = partition_key if partition_key is not None else _pick_partition_key(schema)
-    return _fetch_partitioned(
-        spark, sf_dir, base_sql, schema, partitions, key, limited=limit is not None
+    return connector_scan(
+        spark, DuckDBConnector(sf_dir), table, columns, predicates, limit,
+        partitions, partition_key,
     )
 
 
@@ -341,10 +285,11 @@ def federated_query(
     sql = compile_query(table, columns, predicates, group_by, aggs, having, order_by, limit)
     schema = describe_schema(sf_dir, sql)
     key = partition_key if partitions > 1 and partition_key else (
-        _pick_partition_key(schema) if partitions > 1 else None
+        pick_partition_key(schema) if partitions > 1 else None
     )
-    return _fetch_partitioned(
-        spark, sf_dir, sql, schema, partitions, key, limited=limit is not None
+    return fetch_partitioned(
+        spark, DuckDBConnector(sf_dir), sql, schema, partitions, key,
+        limited=limit is not None,
     )
 
 
@@ -365,26 +310,6 @@ def sql_literal(v) -> str:
         return f"DATE '{v}'"
     s = str(v).replace("'", "''")
     return f"'{s}'"
-
-
-_SEMIJOIN_STAGE_ROOT: list[str] = []  # lazily-created, exit-cleaned
-
-
-def _semijoin_stage_dir() -> str:
-    """A fresh stage directory under one process-scoped root that is
-    removed at interpreter exit (ADVICE r12 #3: eager deletion would
-    break lazy re-execution of the returned DataFrame — the remote
-    predicate re-reads the stage — so the stage's lifetime is the
-    session's, and the root keeps /tmp bounded across runs)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    if not _SEMIJOIN_STAGE_ROOT:
-        root = tempfile.mkdtemp(prefix="semijoin_stage_")
-        _SEMIJOIN_STAGE_ROOT.append(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tempfile.mkdtemp(prefix="keys_", dir=_SEMIJOIN_STAGE_ROOT[0])
 
 
 #: Inline semi-join reduction cap — the ONE constant every caller
@@ -465,23 +390,15 @@ def federated_semijoin_scan(
         preds.append(reduction)
     elif spill:
         # Inline cap exceeded: stage the COMPLETE distinct key set as
-        # a side table — distributed write, no driver collect — and
-        # reference it from the remote predicate. The true SDD-1 bulk
-        # key shipment: exact at ANY build-side size, O(1) driver
-        # memory. The DuckDB 'remote' shares a filesystem so the
-        # stage IS the transfer; a networked engine receives the same
-        # side table via its bulk path (COPY into a temp table — the
-        # staging protocol pg_parallel_sink implements). The stage
-        # must OUTLIVE the returned DataFrame (lazy re-execution
-        # re-reads the remote predicate), so cleanup is registered
-        # for interpreter exit, not done eagerly (ADVICE r12 #3: the
-        # unregistered stage leaked a full key copy per execution).
-        stage = _semijoin_stage_dir()
-        keys_df.select(key).distinct().write.mode("overwrite").parquet(
-            stage
+        # a side table the remote predicate reads — the true SDD-1
+        # bulk key shipment: exact at ANY build-side size, O(1) driver
+        # memory. The stage must OUTLIVE the returned DataFrame (lazy
+        # re-execution re-reads the remote predicate), so the
+        # connector drops it at interpreter exit, not eagerly.
+        src = DuckDBConnector(sf_dir).stage_keys(
+            keys_df.select(key).distinct(), [key]
         )
-        glob = os.path.join(stage, "*.parquet")
-        preds.append(f"{key} IN (SELECT {key} FROM read_parquet('{glob}'))")
+        preds.append(f"{key} IN (SELECT {key} FROM {src})")
     # else: cap exceeded with spill disabled — plain pushdown scan,
     # the caller's local join filters
     return federated_scan(
@@ -1142,7 +1059,7 @@ def fed_postgres_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Partitioned fetch from live Postgres (PostgresExec parity, "
     "table_provider.rs:123-158): percentile_disc plans 4 disjoint "
     "covering key ranges, and 4 Spark TASKS each open their own "
-    "wire connection inside mapInPandas — N concurrent remote "
+    "wire connection inside mapInArrow — N concurrent remote "
     "cursors, the reference's N concurrent COPY streams, against a "
     "real server. Distinct-key count proves no slice overlap or "
     "miss.",
@@ -1157,8 +1074,6 @@ def fed_postgres_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     volumes the same code with more partitions and COPY-based
     cursors saturates the wire in parallel."""
     from pyspark.sql import functions as F
-
-    from .connector import connector_scan
 
     con = _pg_connector(spark, sf_dir)
     df = connector_scan(

@@ -12,12 +12,13 @@ against federated tables and the rewrite just happens.
 
 PySpark cannot inject Catalyst rules, so the equivalent seam here is a
 plan-walking rewriter over the ANALYZED logical plan of any DataFrame
-built on the ``duckdb_fed`` Python DataSource
-(:func:`transparent_pushdown`): walk the plan via py4j, unparse each
-supported node into a nested-subquery SQL string bottom-up (Catalyst's
-own ``Expression.sql`` renders the expressions; a small dialect pass
-maps Spark spellings to the remote dialect), validate the result with
-a remote ``DESCRIBE``, and execute it as one federated fetch. If any
+built on a federated Python DataSource (:func:`transparent_pushdown`):
+walk the plan via py4j, unparse each supported node into a
+nested-subquery SQL string bottom-up (Catalyst's own
+``Expression.sql`` renders the expressions; the relations' connector
+names the remote, and its dialect keys the one render-pass table,
+:data:`_DIALECTS`), have the connector validate the result, and
+execute it as one federated fetch. If any
 node is unsupported or the remote rejects the SQL, the ORIGINAL
 DataFrame is returned unchanged — the reference's try-rewrite-else-
 fall-through contract — and the pyds source still applies
@@ -44,17 +45,12 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .connector import FORMATS, Connector, connector_for, fetch_partitioned
+
 # federation is imported lazily at the call sites: a top-level
 # from-import would close the executor-side import cycle
 # federation -> queries/__init__ -> (this module) -> federation
 # while federation is still partially initialized (see pyds._fed).
-
-#: Python-DataSource formats whose relations this rewriter may absorb,
-#: each mapped to its dialect pass. The rewriter itself is
-#: dialect-neutral (VERDICT r5 next #4: the Connector seam's "config,
-#: not code" claim, proven by parametrizing the transparent path over
-#: the second dialect instead of a third pipeline copy).
-_FED_FORMATS = ("duckdb_fed", "sqlite_fed", "pgwire_fed")
 
 # -- dialect pass -----------------------------------------------------------
 # Catalyst Expression.sql() renders Spark SQL: typed numeric literals
@@ -541,6 +537,32 @@ def _dialect_mssql(sql: str) -> str:
     return re.sub(r"\bAS DOUBLE\b(?! PRECISION)", "AS FLOAT", sql)
 
 
+#: Connector dialect -> (render pass, has INTERSECT/EXCEPT, has
+#: their ALL forms): the one place a dialect's spelling and set-op
+#: capability live. SQLite and T-SQL have only the DISTINCT set
+#: operators; MySQL's conservative floor (< 8.0.31) has neither.
+_DIALECTS = {
+    "duckdb": (_dialect, True, True),
+    "sqlite": (_dialect_sqlite, True, False),
+    "postgres": (_dialect_postgres, True, True),
+    "mysql": (_dialect_mysql, False, False),
+    "mssql": (_dialect_mssql, True, False),
+}
+
+
+def _render(u: "_Unparser", sql: str, dialect: str) -> str | None:
+    """Render unparsed ``sql`` for ``dialect``, or None when the plan
+    needs a set operation the dialect lacks or the dialect pass DENIES
+    a construct the remote parses but computes differently."""
+    render, has_setop, has_setop_all = _DIALECTS[dialect]
+    if (u.setop_ie and not has_setop) or (u.setop_all and not has_setop_all):
+        return None
+    try:
+        return render(sql)
+    except _Unsupported:
+        return None
+
+
 def unparse_to_dialect(df: DataFrame, dialect: str) -> str | None:
     """Unparse ``df``'s whole plan and render it for ``dialect``
     ('duckdb', 'sqlite', 'postgres', 'mysql', 'mssql') regardless of which
@@ -552,28 +574,9 @@ def unparse_to_dialect(df: DataFrame, dialect: str) -> str | None:
         sql = u.unparse(df._jdf.queryExecution().analyzed())
     except _Unsupported:
         return None
-    if u.sf_dir is None:
+    if u.conn is None:
         return None
-    # Capability gates mirror try_unparse (ADVICE r7 #5): SQLite has
-    # no INTERSECT/EXCEPT ALL, so rendering such a plan must return
-    # None, not SQL the engine cannot execute faithfully. DuckDB and
-    # Postgres both support the ALL set operators — no gate. MySQL's
-    # conservative floor (< 8.0.31) has NO INTERSECT/EXCEPT at all.
-    if dialect in ("sqlite", "mssql") and u.setop_all:
-        return None  # neither has INTERSECT/EXCEPT ALL
-    if dialect == "mysql" and u.setop_ie:
-        return None
-    passes = {
-        "duckdb": _dialect,
-        "sqlite": _dialect_sqlite,
-        "postgres": _dialect_postgres,
-        "mysql": _dialect_mysql,
-        "mssql": _dialect_mssql,
-    }
-    try:
-        return passes[dialect](sql)
-    except _Unsupported:
-        return None
+    return _render(u, sql, dialect)
 
 
 def _seq(s) -> list:
@@ -588,9 +591,7 @@ class _Unparser:
     """Bottom-up unparse of an analyzed Catalyst plan (py4j handles)."""
 
     def __init__(self) -> None:
-        self.sf_dir: str | None = None
-        self.fmt: str | None = None
-        self.pg_opts: dict | None = None  # pgwire_fed connection opts
+        self.conn: Connector | None = None  # the one remote of the plan
         self.setop_all = False  # INTERSECT/EXCEPT ALL used anywhere
         self.setop_ie = False  # any INTERSECT/EXCEPT (MySQL < 8.0.31 lacks both)
         self._n = 0
@@ -602,36 +603,15 @@ class _Unparser:
     def unparse(self, node) -> str:
         nm = node.getClass().getSimpleName()
         if nm == "DataSourceV2Relation":
-            if node.name() not in _FED_FORMATS:
+            if node.name() not in FORMATS:
                 raise _Unsupported(f"non-federated relation {node.name()}")
             opts = node.options()
-            table = opts.get("table")
-            if node.name() == "pgwire_fed":
-                # dialect three (round 14): the live-Postgres format
-                # identifies its remote by connection options, not a
-                # fixture dir — capture them for the fetch arm and
-                # synthesize a stable identity for the same-remote
-                # check.
-                keys = (
-                    "host", "port", "user", "database", "search_path",
-                    "password", "sslmode", "sslrootcert",
-                )
-                pg_opts = {
-                    k: opts.get(k) for k in keys if opts.get(k) is not None
-                }
-                ident = (
-                    f"pgwire://{pg_opts.get('host', '127.0.0.1')}:"
-                    f"{pg_opts.get('port', '5432')}/"
-                    f"{pg_opts.get('database', 'postgres')}/"
-                    f"{pg_opts.get('search_path', 'public')}"
-                )
-            else:
-                pg_opts, ident = None, opts.get("sf_dir")
-            if self.sf_dir is None:
-                self.sf_dir, self.fmt, self.pg_opts = ident, node.name(), pg_opts
-            elif self.sf_dir != ident or self.fmt != node.name():
+            conn = connector_for(node.name(), opts)
+            if self.conn is None:
+                self.conn = conn
+            elif self.conn != conn:
                 raise _Unsupported("relations from different remotes")
-            return f"SELECT * FROM {table}"
+            return f"SELECT * FROM {opts.get('table')}"
         if nm == "SubqueryAlias":
             # Name scoping is handled by our own nesting; pass through.
             return self.unparse(node.child())
@@ -744,33 +724,19 @@ class _Unparser:
         raise _Unsupported(nm)
 
 
-def try_unparse(df: DataFrame) -> tuple[str, str, str] | None:
+def try_unparse(df: DataFrame) -> tuple[str, Connector] | None:
     """Attempt to unparse ``df``'s WHOLE analyzed plan into one remote
-    SQL. Returns ``(sql, sf_dir, fmt)`` or None if any node is
+    SQL. Returns ``(sql, connector)`` or None if any node is
     unsupported (the else-branch of optimizer.rs:31-36)."""
     u = _Unparser()
     try:
         sql = u.unparse(df._jdf.queryExecution().analyzed())
     except _Unsupported:
         return None
-    if u.sf_dir is None:
+    if u.conn is None:
         return None  # no federated relation anywhere in the plan
-    try:
-        # Dialect passes may DENY (raise) on constructs the remote
-        # parses but computes differently — fall through unrewritten.
-        if u.fmt == "sqlite_fed":
-            if u.setop_all:
-                return None  # SQLite has no INTERSECT/EXCEPT ALL
-            return _dialect_sqlite(sql), u.sf_dir, u.fmt
-        if u.fmt == "pgwire_fed":
-            # dialect three (round 14): live Postgres takes the same
-            # whole-plan rewrite; the middle element carries the
-            # CONNECTION OPTIONS dict (not a fixture dir — the live
-            # remote has none) the caller builds its connector from.
-            return _dialect_postgres(sql), u.pg_opts, u.fmt
-        return _dialect(sql), u.sf_dir, u.fmt
-    except _Unsupported:
-        return None
+    sql = _render(u, sql, u.conn.db_type)
+    return None if sql is None else (sql, u.conn)
 
 
 def transparent_pushdown(
@@ -784,76 +750,32 @@ def transparent_pushdown(
     contract (optimizer.rs:14-39), applied at the API boundary instead
     of inside Catalyst.
 
-    The generated SQL is validated with a remote ``DESCRIBE`` before
-    use: dialect gaps or ambiguous column references make the remote
-    reject it, and the unrewritten plan (with the pyds source's
-    projection/filter pushdown) still runs. Defaults to one fetch
-    partition — transparent rewrites are usually aggregates/limits
-    with small results; pass ``partitions``/``partition_key`` for
-    large pushed projections."""
-    spark = df.sparkSession
+    The generated SQL is validated by the remote before use
+    (``Connector.validate``): dialect gaps or ambiguous column
+    references make the remote reject it, and the unrewritten plan
+    (with the pyds source's projection/filter pushdown) still runs.
+    Defaults to one fetch partition — transparent rewrites are usually
+    aggregates/limits with small results, and partitions=1 executes
+    the SQL exactly once; callers requesting a multi-partition fetch
+    own the determinism of re-executing it under range predicates
+    (don't combine with LIMIT plans)."""
     hit = try_unparse(df)
     if hit is None:
         # Whole-plan unparse failed — usually a fed/local mixed plan.
         # The SDD-1 semi-join reduction is the next rewrite in the
-        # try-rewrite-else-fall-through chain (VERDICT r12 next #2):
-        # a local (semi-)join between a fed subtree and a local frame
-        # gets the local side's keys injected into the remote SQL.
+        # try-rewrite-else-fall-through chain: a local (semi-)join
+        # between a fed subtree and a local frame gets the local
+        # side's keys injected into the remote SQL.
         sj = transparent_semijoin(df, partitions, partition_key)
         if sj is not None:
             return sj[0]
         return df
-    sql, sf_dir, fmt = hit
-    if fmt == "pgwire_fed":
-        # Dialect three (round 14): validate with a LIMIT-0 probe on
-        # the LIVE server, fetch through the dialect-neutral
-        # connector pipeline with the plan's own analyzed schema —
-        # the same shape as the SQLite arm, against the reference's
-        # actual backend.
-        from .connector import fetch_partitioned
-
-        conn = _pg_conn_from_opts(sf_dir)  # sf_dir IS the opts dict
-        try:
-            probe = conn.fetch_pdf(f"SELECT * FROM ({sql}) _v LIMIT 0")
-        except Exception:
-            return df  # remote rejected the unparse — fall through
-        if list(probe.columns) != [f.name for f in df.schema.fields]:
-            return df  # column drift: never fetch a misaligned schema
-        return fetch_partitioned(
-            spark, conn, sql, df.schema, partitions, partition_key,
-            limited=False,
-        )
-    if fmt == "sqlite_fed":
-        # Dialect two: validate with a LIMIT-0 probe (SQLite has no
-        # DESCRIBE of a composed query) and fetch through the
-        # dialect-neutral connector pipeline with the plan's own
-        # analyzed schema — Spark already typed the result.
-        from .connector import SQLiteConnector, fetch_partitioned
-
-        conn = SQLiteConnector(sf_dir)
-        try:
-            probe = conn.fetch_pdf(f"SELECT * FROM ({sql}) _v LIMIT 0")
-        except Exception:
-            return df  # remote rejected the unparse — fall through
-        if list(probe.columns) != [f.name for f in df.schema.fields]:
-            return df  # column drift: never fetch a misaligned schema
-        return fetch_partitioned(
-            spark, conn, sql, df.schema, partitions, partition_key,
-            limited=False,
-        )
-    try:
-        from .federation import describe_schema
-
-        schema = describe_schema(sf_dir, sql)
-    except Exception:
+    sql, conn = hit
+    schema = conn.validate(sql, lambda: df.schema)
+    if schema is None:
         return df  # remote rejected the unparse — fall through
-    # partitions=1 executes the SQL exactly once; callers requesting a
-    # multi-partition fetch own the determinism of re-executing it
-    # under range predicates (don't combine with LIMIT plans).
-    from .federation import _fetch_partitioned
-
-    return _fetch_partitioned(
-        spark, sf_dir, sql, schema, partitions, partition_key, limited=False
+    return fetch_partitioned(
+        df.sparkSession, conn, sql, schema, partitions, partition_key
     )
 
 
@@ -873,7 +795,7 @@ def _side_kind(node) -> str:
     leaves = _seq(node.collectLeaves())
     feds = [
         leaf.getClass().getSimpleName() == "DataSourceV2Relation"
-        and leaf.name() in _FED_FORMATS
+        and leaf.name() in FORMATS
         for leaf in leaves
     ]
     if feds and all(feds):
@@ -883,127 +805,18 @@ def _side_kind(node) -> str:
     return "mixed"
 
 
-def _pg_conn_from_opts(o: dict):
-    """PostgresConnector from the pgwire_fed format's options dict
-    (the unparser captures them off the DataSourceV2Relation)."""
-    from .connector import PostgresConnector
-
-    dsn = (
-        f"host={o.get('host', '127.0.0.1')} port={o.get('port', 5432)} "
-        f"user={o.get('user', 'postgres')} "
-        f"dbname={o.get('database', 'postgres')}"
-    )
-    for k in ("password", "sslmode", "sslrootcert"):
-        if o.get(k):
-            dsn += f" {k}={o[k]}"
-    return PostgresConnector(dsn, schema=o.get("search_path", "public"))
-
-
-#: Spark type -> Postgres DDL type for the semi-join key side table
-#: (the bulk-load staging protocol). Key columns outside this map
-#: fall through to the unreduced plan (guarded by the caller).
-_PG_KEY_DDL = {
-    "bigint": "bigint",
-    "int": "bigint",
-    "smallint": "bigint",
-    "tinyint": "bigint",
-    "string": "text",
-    "double": "double precision",
-    "float": "double precision",
-    "date": "date",
-}
-
-
-def _stage_spill_reduction(u, local_df: DataFrame, pairs) -> str:
-    """Above-cap bulk key shipment for :func:`transparent_semijoin`,
-    per dialect. Stages the COMPLETE distinct set of ALL conjunct key
-    columns (round 14 — the single-key spill left the remote filter
-    looser than the staged table could make it) and returns the
-    remote predicate over the ``_sjr`` alias.
-
-    * DuckDB: distributed parquet write, no driver collect; the
-      shared-filesystem stage IS the transfer (a networked engine
-      receives the same side table via its bulk path).
-    * SQLite: the key set bulk-loads into a ``_sjk_*`` table of the
-      remote database — exactly the staging protocol a networked
-      remote uses (COPY/INSERT into a temp table); the driver-side
-      toPandas is the bulk transfer and is bounded by the build
-      side's distinct keys, the same argument that makes the local
-      join itself feasible.
-
-    Single-key plans keep the ``IN (SELECT ...)`` wire shape the
-    round-13 tests pin; multi-key plans AND every column via a
-    correlated EXISTS."""
-    import os as _os
-
+def _spill_reduction(conn: Connector, local_df: DataFrame, pairs) -> str:
+    """Above-cap bulk key shipment for :func:`transparent_semijoin`:
+    stages the COMPLETE distinct set of ALL conjunct key columns
+    through the connector's staging protocol and returns the remote
+    predicate over the ``_sjr`` alias. Single-key plans keep the
+    ``IN (SELECT ...)`` wire shape; multi-key plans AND every column
+    via a correlated EXISTS, as tight as the staged table allows."""
     fed_cols = [fk for fk, _ in pairs]
-    proj = local_df.select(
+    keys = local_df.select(
         *[F.col(lk).alias(fk) for fk, lk in pairs]
     ).distinct()
-    if u.fmt == "pgwire_fed":
-        # dialect three: the true networked staging protocol — the
-        # key set bulk-loads over COPY FROM STDIN into a _sjk_* table
-        # of the live server (the shape fed_postgres_sink_roundtrip
-        # proves for the sink path). Unsupported key types raise and
-        # the caller falls through.
-        from .pgwire import PgWireClient
-
-        ddl_types = [
-            _PG_KEY_DDL[f.dataType.simpleString()]
-            for f in proj.schema.fields  # KeyError -> guarded caller
-        ]
-        name = f"_sjk_{_os.getpid()}_{abs(hash(tuple(fed_cols))) % 10**8}"
-        conn = _pg_conn_from_opts(u.pg_opts)
-        cli = PgWireClient(**conn._params())
-        try:
-            cli.query(f"DROP TABLE IF EXISTS {name}")
-            cols_ddl = ", ".join(
-                f"{c} {t}" for c, t in zip(fed_cols, ddl_types)
-            )
-            cli.query(f"CREATE TABLE {name} ({cols_ddl})")
-            cli.copy_in_text(
-                name,
-                fed_cols,
-                (tuple(r) for r in proj.collect()),
-            )
-        finally:
-            cli.close()
-        src = name
-    elif u.fmt == "sqlite_fed":
-        import sqlite3 as _sqlite3
-
-        from .sqlite_fed import sqlite_db_path
-
-        db = sqlite_db_path(u.sf_dir)
-        name = f"_sjk_{_os.getpid()}_{abs(hash(tuple(fed_cols))) % 10**8}"
-        con = _sqlite3.connect(db)
-        try:
-            proj.toPandas().to_sql(
-                name, con, index=False, if_exists="replace"
-            )
-            con.commit()
-        finally:
-            con.close()
-        import atexit as _atexit
-
-        def _drop(db=db, name=name):
-            try:
-                c = _sqlite3.connect(db)
-                c.execute(f"DROP TABLE IF EXISTS {name}")
-                c.commit()
-                c.close()
-            except Exception:
-                pass
-
-        _atexit.register(_drop)
-        src = name
-    else:
-        from .federation import _semijoin_stage_dir
-
-        stage = _semijoin_stage_dir()
-        proj.write.mode("overwrite").parquet(stage)
-        glob = _os.path.join(stage, "*.parquet")
-        src = f"read_parquet('{glob}')"
+    src = conn.stage_keys(keys, fed_cols)
     if len(fed_cols) == 1:
         k = fed_cols[0]
         return f"{k} IN (SELECT {k} FROM {src})"
@@ -1052,12 +865,7 @@ def transparent_semijoin(
     inbound, and the rewrite composes with key-range partition
     planning (each fetch task ANDs its range onto the reduced
     scan)."""
-    from .federation import (
-        SEMIJOIN_MAX_KEYS,
-        _fetch_partitioned,
-        describe_schema,
-        semijoin_in_predicate,
-    )
+    from .federation import SEMIJOIN_MAX_KEYS, semijoin_in_predicate
 
     if max_keys is None:
         max_keys = SEMIJOIN_MAX_KEYS
@@ -1177,21 +985,14 @@ def transparent_semijoin(
         raw_sql = u.unparse(fed_node)
     except _Unsupported:
         return None
-    if u.sf_dir is None or u.fmt not in _FED_FORMATS:
+    conn = u.conn
+    if conn is None:
         return None
-    # Dialect seam (VERDICT r13 next #2): the reduction routes through
-    # the same per-dialect SQL pass as whole-plan pushdown, so a
-    # SQLite-fed (and, round 14, a live-Postgres-fed) mixed plan gets
-    # the identical IN-list/side-table reduction instead of silently
-    # falling through to the full fetch.
-    _DIALECT_PASS = {
-        "duckdb_fed": _dialect,
-        "sqlite_fed": _dialect_sqlite,
-        "pgwire_fed": _dialect_postgres,
-    }
-    try:
-        fed_sql = _DIALECT_PASS[u.fmt](raw_sql)
-    except _Unsupported:
+    # The reduction routes through the same dialect table as
+    # whole-plan pushdown, so every federated format gets the
+    # identical IN-list/side-table reduction.
+    fed_sql = _render(u, raw_sql, conn.db_type)
+    if fed_sql is None:
         return None
 
     # Materialize the local side ONCE (ADVICE r13 #2): the key set
@@ -1224,54 +1025,18 @@ def transparent_semijoin(
         # filter is as tight as the staged table can make it —
         # single-key plans keep the pinned IN-subquery wire shape.
         try:
-            reduction = _stage_spill_reduction(u, local_df, pairs)
+            reduction = _spill_reduction(conn, local_df, pairs)
         except Exception:
             return None  # staging failed — fall through, exact
     reduced_sql = f"SELECT * FROM ({fed_sql}) _sjr WHERE {reduction}"
-    if u.fmt == "pgwire_fed":
-        # dialect three: LIMIT-0 probe on the LIVE server + the
-        # dialect-neutral connector fetch (mirrors the whole-plan arm)
-        from .connector import fetch_partitioned
-
-        conn = _pg_conn_from_opts(u.pg_opts)
-        fed_schema = _of_rows(spark, fed_node).schema
-        try:
-            probe = conn.fetch_pdf(f"SELECT * FROM ({reduced_sql}) _v LIMIT 0")
-        except Exception:
-            return None  # remote rejected the composed SQL
-        if list(probe.columns) != [f.name for f in fed_schema.fields]:
-            return None  # column drift: never fetch a misaligned schema
-        reduced = fetch_partitioned(
-            spark, conn, reduced_sql, fed_schema, partitions, partition_key,
-            limited=False,
-        )
-    elif u.fmt == "sqlite_fed":
-        # dialect two: LIMIT-0 probe validation + the dialect-neutral
-        # connector fetch with the subtree's own analyzed schema
-        # (mirrors transparent_pushdown's sqlite arm)
-        from .connector import SQLiteConnector, fetch_partitioned
-
-        conn = SQLiteConnector(u.sf_dir)
-        fed_schema = _of_rows(spark, fed_node).schema
-        try:
-            probe = conn.fetch_pdf(f"SELECT * FROM ({reduced_sql}) _v LIMIT 0")
-        except Exception:
-            return None  # remote rejected the composed SQL
-        if list(probe.columns) != [f.name for f in fed_schema.fields]:
-            return None  # column drift: never fetch a misaligned schema
-        reduced = fetch_partitioned(
-            spark, conn, reduced_sql, fed_schema, partitions, partition_key,
-            limited=False,
-        )
-    else:
-        try:
-            schema = describe_schema(u.sf_dir, reduced_sql)
-        except Exception:
-            return None  # remote rejected the composed SQL — fall through
-        reduced = _fetch_partitioned(
-            spark, u.sf_dir, reduced_sql, schema, partitions, partition_key,
-            limited=False,
-        )
+    schema = conn.validate(
+        reduced_sql, lambda: _of_rows(spark, fed_node).schema
+    )
+    if schema is None:
+        return None  # remote rejected the composed SQL — fall through
+    reduced = fetch_partitioned(
+        spark, conn, reduced_sql, schema, partitions, partition_key
+    )
     how = "inner" if jt == "INNER" else "left_semi"
     cond = None
     for fk, lk in pairs:
@@ -1306,11 +1071,11 @@ def transparent_semijoin(
 from pyspark.sql import functions as F  # noqa: E402
 
 from ..queries.base import register  # noqa: E402
-from .pyds import register_duckdb_source  # noqa: E402
+from .pyds import register_fed_sources  # noqa: E402
 
 
 def _fed_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    register_duckdb_source(spark)
+    register_fed_sources(spark)
     return (
         spark.read.format("duckdb_fed")
         .option("sf_dir", sf_dir)
@@ -1320,9 +1085,7 @@ def _fed_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def _sqlite_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    from .pyds import register_sqlite_source
-
-    register_sqlite_source(spark)
+    register_fed_sources(spark)
     return (
         spark.read.format("sqlite_fed")
         .option("sf_dir", sf_dir)
@@ -1336,10 +1099,9 @@ def _pgwire_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     fixture first — idempotent, memoized per (session, sf_dir))."""
     from .federation import _pg_connector
     from .pgserver import PG_PORT, PG_USER, schema_for
-    from .pyds import register_pgwire_source
 
     _pg_connector(spark, sf_dir)
-    register_pgwire_source(spark)
+    register_fed_sources(spark)
     return (
         spark.read.format("pgwire_fed")
         .option("host", "127.0.0.1")

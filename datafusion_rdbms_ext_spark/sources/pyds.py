@@ -2,13 +2,17 @@
 Spark-4-native.
 
 ``sources/federation.py`` re-expresses the reference's pushdown scan
-as library functions; this module goes one step further and mounts it
-as a first-class Spark data source (``spark.read.format("duckdb_fed")``)
-through PySpark 4's DataSource API — the exact architectural slot the
-reference's ``PostgresTableProvider`` occupies in DataFusion
-(/root/reference/src/sqldb/postgres/table_provider.rs:26-238):
+as library functions; this module mounts it as first-class Spark data
+sources through PySpark 4's DataSource API — the exact architectural
+slot the reference's ``PostgresTableProvider`` occupies in DataFusion
+(reference src/sqldb/postgres/table_provider.rs:26-238). One
+source/reader pair serves every federated format; each format
+(``duckdb_fed``, ``sqlite_fed``, ``pgwire_fed``) is a subclass that
+only declares its name, and ``connector.FORMATS`` maps the name to
+the Connector that does the dialect work:
 
-* ``schema()``        — information_schema inference (mod.rs:67-125)
+* ``schema()``        — the connector's catalog bootstrap
+                        (mod.rs:67-125)
 * ``pushFilters()``   — the Exact/Unsupported filter classifier
                         (table_provider.rs:241-306): supported
                         comparisons compile into the remote WHERE
@@ -17,14 +21,13 @@ reference's ``PostgresTableProvider`` occupies in DataFusion
 * ``partitions()``    — the reference's N-slice split
                         (mod.rs:170-189, table_provider.rs:123-158),
                         upgraded from LIMIT/OFFSET to sort-free
-                        key-range predicates balanced by remote
-                        quantiles (Spark-JDBC partitionColumn shape);
-                        keyless fallback keeps a deterministic
-                        ORDER BY the reference lacks
-* ``read(partition)`` — per-task database cursor streaming Arrow
-                        record batches (the COPY-decode loop,
-                        binary_reader.rs:24-209 — here DuckDB hands
-                        us Arrow directly)
+                        key-range predicates planned by the connector
+                        (Spark-JDBC partitionColumn shape); keyless
+                        fallback keeps a deterministic ORDER BY the
+                        reference lacks where the dialect can pin one
+* ``read(partition)`` — per-task remote cursor through the
+                        connector's slice fetch, handed to Spark as
+                        Arrow record batches
 
 Scale: identical to the JDBC-partitioned-read shape — each Spark task
 holds one remote cursor; pushed filters mean only qualifying rows
@@ -47,6 +50,8 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+
+from .connector import Connector, connector_for, pick_partition_key, plan_slices
 
 # federation is imported LAZILY (see _fed): a module-level import
 # here closes an import cycle — executor-side unpickling can enter
@@ -117,24 +122,61 @@ class _Slice(InputPartition):
         self.sql = sql
 
 
-class DuckDBFederatedSource(DataSource):
-    """``spark.read.format("duckdb_fed")`` with options:
-    ``sf_dir`` (fixture database dir), ``table``, ``partitions``."""
+class FederatedSource(DataSource):
+    """A federated table mounted in the reference's TableProvider slot
+    (table_provider.rs:26-238): the format name picks the connector
+    (``connector.FORMATS`` — the reference's DatabaseConnector db_type
+    switch, mod.rs:33-51), whose options name the remote; ``table``
+    and ``partitions`` name the scan. Schema comes from the
+    connector's catalog bootstrap (mod.rs:67-125)."""
+
+    def _conn(self) -> Connector:
+        return connector_for(self.name(), self.options)
+
+    def schema(self):
+        return self._conn().catalog()[self.options["table"]]
+
+    def reader(self, schema) -> "FederatedReader":
+        return FederatedReader(self._conn(), self.options, schema)
+
+
+class DuckDBFederatedSource(FederatedSource):
+    """``spark.read.format("duckdb_fed")``; option ``sf_dir``."""
 
     @classmethod
     def name(cls) -> str:
         return "duckdb_fed"
 
-    def schema(self):
-        return _fed().load_catalog(self.options["sf_dir"])[self.options["table"]]
 
-    def reader(self, schema) -> "DuckDBFederatedReader":
-        return DuckDBFederatedReader(self.options, schema)
+class SQLiteFederatedSource(FederatedSource):
+    """``spark.read.format("sqlite_fed")``; option ``sf_dir``."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "sqlite_fed"
 
 
-class DuckDBFederatedReader(DataSourceReader):
-    def __init__(self, options, schema):
-        self._sf_dir = options["sf_dir"]
+class PgWireFederatedSource(FederatedSource):
+    """``spark.read.format("pgwire_fed")`` — a LIVE Postgres server
+    over the engine's own wire client; options ``host``, ``port``,
+    ``user``, ``database``, ``search_path``, ``password``,
+    ``sslmode``, ``sslrootcert``. The caller boots/loads the server
+    first (pgserver.load_fixture) — the format itself is pure
+    client."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "pgwire_fed"
+
+
+class FederatedReader(DataSourceReader):
+    """Pushed filters compile into the remote WHERE; partitions are
+    the connector's disjoint slices; each task fetches its slice
+    through the connector's one slice fetch (the same one
+    ``connector.fetch_partitioned`` runs) and hands Spark Arrow."""
+
+    def __init__(self, conn: Connector, options, schema):
+        self._conn = conn
         self._table = options["table"]
         self._n_parts = int(options.get("partitions", _DEFAULT_PARTITIONS))
         self._schema = schema
@@ -165,288 +207,39 @@ class DuckDBFederatedReader(DataSourceReader):
             else:
                 self._pushed.append(sql)
 
-    def _base_sql(self) -> str:
-        cols = ", ".join(field.name for field in self._schema.fields)
-        sql = f"SELECT {cols} FROM {self._table}"
-        if self._pushed:
-            sql += " WHERE " + " AND ".join(f"({p})" for p in self._pushed)
-        return sql
-
     def partitions(self) -> list[_Slice]:
-        """Key-range partition planning (the Spark-JDBC
-        partitionColumn shape): sort-free range predicates from remote
-        quantiles on the first integral column. Keyless tables fall
-        back to deterministic ORDER BY ALL LIMIT/OFFSET slices — the
-        only case that still pays N remote sorts."""
-        base = self._base_sql()
+        """The slice planning of ``fetch_partitioned``: sort-free key
+        ranges on the first integral column, else ORDER BY ALL
+        offsets where the dialect can pin them, else one slice."""
+        base = _fed().compile_scan(self._table, self._schema.names, self._pushed)
         # CONSUME the pushed filters: planning may reuse this reader
         # object for a later query that has nothing to push (then
         # pushFilters is never invoked), and stale conjuncts would
         # over-filter that query's scan — silent wrong results.
         self._pushed = []
-        key = _fed()._pick_partition_key(self._schema)
-        if key is not None and self._n_parts > 1:
-            preds = _fed().plan_range_predicates(self._sf_dir, base, key, self._n_parts)
-            return [_Slice(f"SELECT * FROM ({base}) _t WHERE {p}") for p in preds]
-        if self._n_parts > 1:
-            return [_Slice(s) for s in _fed().plan_offset_slices(self._sf_dir, base, self._n_parts)]
-        return [_Slice(base)]
+        key = pick_partition_key(self._schema)
+        return [
+            _Slice(sql)
+            for sql in plan_slices(self._conn, base, self._schema, self._n_parts, key)
+        ]
 
     def read(self, partition: _Slice):
-        con = _fed()._connect(self._sf_dir)
-        reader = con.execute(partition.sql).fetch_record_batch()
-        try:
-            for batch in reader:
-                yield batch
-        finally:
-            con.close()
+        yield from self._conn.fetch_arrow(partition.sql, self._schema)
 
 
-def _enable_pyds_filter_pushdown(spark) -> None:
-    """Make every Python-DataSource entry point self-sufficient.
+def register_fed_sources(spark) -> None:
+    """Idempotently register every federated format with the session.
 
     Spark 4 hard-fails planning a DataSourceReader that implements
     ``pushFilters`` when ``spark.sql.python.filterPushdown.enabled``
     is off ([DATA_SOURCE_PUSHDOWN_DISABLED]). The engine's session
     factory sets it, but a registered query must also run correctly
-    as the FIRST query of a foreign session (the driver's harness),
-    so each ``register_*_source`` sets it idempotently — it is a
-    runtime-settable conf and a no-op when already on.
-    """
+    as the FIRST query of a foreign session (an external harness),
+    so registration sets it too — a runtime-settable conf, a no-op
+    when already on."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-
-
-def register_duckdb_source(spark) -> None:
-    """Idempotently register the format with the session."""
-    _enable_pyds_filter_pushdown(spark)
-    spark.dataSource.register(DuckDBFederatedSource)
-
-
-class SQLiteFederatedSource(DataSource):
-    """``spark.read.format("sqlite_fed")`` — the SECOND dialect
-    mounted in the same TableProvider slot (the reference's
-    DatabaseConnector db_type switch, mod.rs:33-51, realized as two
-    registered formats sharing one filter classifier). Options:
-    ``sf_dir``, ``table``, ``partitions``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "sqlite_fed"
-
-    def schema(self):
-        from .sqlite_fed import load_catalog_sqlite
-
-        return load_catalog_sqlite(self.options["sf_dir"])[self.options["table"]]
-
-    def reader(self, schema) -> "SQLiteFederatedReader":
-        return SQLiteFederatedReader(self.options, schema)
-
-
-class SQLiteFederatedReader(DataSourceReader):
-    """Same pushdown/partition shape as the DuckDB reader with the
-    dialect's coarser capabilities: equi-width key ranges (no remote
-    quantile aggregate) and a single keyless slice (no ORDER BY ALL
-    to pin deterministic LIMIT/OFFSET paging)."""
-
-    def __init__(self, options, schema):
-        self._sf_dir = options["sf_dir"]
-        self._table = options["table"]
-        self._n_parts = int(options.get("partitions", _DEFAULT_PARTITIONS))
-        self._schema = schema
-        self._pushed: list[str] = []
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        self._pushed = []  # reset per planning pass (see DuckDB reader)
-        for f in filters:
-            sql = _filter_to_sql(f)  # dialect-neutral conjuncts
-            if sql is None:
-                yield f
-            else:
-                self._pushed.append(sql)
-
-    def _base_sql(self) -> str:
-        cols = ", ".join(field.name for field in self._schema.fields)
-        sql = f"SELECT {cols} FROM {self._table}"
-        if self._pushed:
-            sql += " WHERE " + " AND ".join(f"({p})" for p in self._pushed)
-        return sql
-
-    def partitions(self) -> list[_Slice]:
-        from .connector import SQLiteConnector, pick_partition_key
-
-        base = self._base_sql()
-        self._pushed = []  # consume (see DuckDB reader)
-        key = pick_partition_key(self._schema)
-        if key is not None and self._n_parts > 1:
-            conn = SQLiteConnector(self._sf_dir)
-            preds = conn.partition_predicates(base, key, self._n_parts)
-            return [_Slice(f"SELECT * FROM ({base}) _t WHERE {p}") for p in preds]
-        return [_Slice(base)]  # keyless: ONE slice (no ORDER BY ALL)
-
-    def read(self, partition: _Slice):
-        import sqlite3
-
-        from .sqlite_fed import sqlite_db_path
-
-        con = sqlite3.connect(sqlite_db_path(self._sf_dir))
-        try:
-            yield from con.execute(partition.sql)
-        finally:
-            con.close()
-
-
-def register_sqlite_source(spark) -> None:
-    """Idempotently register the SQLite format with the session."""
-    _enable_pyds_filter_pushdown(spark)
-    spark.dataSource.register(SQLiteFederatedSource)
-
-
-class PgWireFederatedSource(DataSource):
-    """``spark.read.format("pgwire_fed")`` — the THIRD dialect in the
-    TableProvider slot (round 10), and the one the reference actually
-    implements (PostgresTableProvider, table_provider.rs:26-238):
-    a LIVE Postgres server mounted as a first-class Spark format over
-    the engine's own wire client. Options: ``host``, ``port``,
-    ``user``, ``database``, ``search_path``, ``table``,
-    ``partitions``. The caller boots/loads the server first
-    (pgserver.load_fixture) — the format itself is pure client."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "pgwire_fed"
-
-    def _conn(self):
-        from .connector import PostgresConnector
-
-        o = self.options
-        dsn = (
-            f"host={o.get('host', '127.0.0.1')} port={o.get('port', 5432)} "
-            f"user={o.get('user', 'postgres')} "
-            f"dbname={o.get('database', 'postgres')}"
-        )
-        # libpq-style auth/TLS options flow through the DSN (round 11)
-        for k in ("password", "sslmode", "sslrootcert"):
-            if o.get(k):
-                dsn += f" {k}={o[k]}"
-        return PostgresConnector(dsn, schema=o.get("search_path", "public"))
-
-    def schema(self):
-        # live two-step information_schema bootstrap (mod.rs:67-125),
-        # arrays typed List<T> via udt_name (datatypes.rs:28-80)
-        return self._conn().catalog()[self.options["table"]]
-
-    def reader(self, schema) -> "PgWireFederatedReader":
-        return PgWireFederatedReader(self.options, schema)
-
-
-class PgWireFederatedReader(DataSourceReader):
-    """Same pushdown/partition shape as the other two dialects with
-    Postgres capabilities: percentile_disc quantile key ranges
-    (planned by ONE remote metadata query on the driver), keyless
-    fallback to a single slice (no ORDER BY ALL), and per-task
-    binary-COPY egress — each Spark task opens its own wire
-    connection and decodes the PGCOPY stream with the per-OID table
-    (binary_reader.rs:24-209), the reference's N concurrent COPY
-    streams as actual DataSource partitions."""
-
-    def __init__(self, options, schema):
-        self._params = {
-            "host": options.get("host", "127.0.0.1"),
-            "port": int(options.get("port", 5432)),
-            "user": options.get("user", "postgres"),
-            "database": options.get("database", "postgres"),
-            "search_path": options.get("search_path") or None,
-            # auth/TLS (round 11): every task connection negotiates
-            # the same way the driver's catalog bootstrap did
-            "password": options.get("password") or None,
-            "sslmode": options.get("sslmode") or None,
-            "sslrootcert": options.get("sslrootcert") or None,
-        }
-        self._table = options["table"]
-        self._n_parts = int(options.get("partitions", _DEFAULT_PARTITIONS))
-        self._schema = schema
-        self._pushed: list[str] = []
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        self._pushed = []  # reset per planning pass (see DuckDB reader)
-        for f in filters:
-            sql = _filter_to_sql(f)  # dialect-neutral conjuncts
-            if sql is None:
-                yield f
-            else:
-                self._pushed.append(sql)
-
-    def _base_sql(self) -> str:
-        cols = ", ".join(field.name for field in self._schema.fields)
-        sql = f"SELECT {cols} FROM {self._table}"
-        if self._pushed:
-            sql += " WHERE " + " AND ".join(f"({p})" for p in self._pushed)
-        return sql
-
-    def partitions(self) -> list[_Slice]:
-        from .connector import PostgresConnector, pick_partition_key
-
-        base = self._base_sql()
-        self._pushed = []  # consume (see DuckDB reader)
-        key = pick_partition_key(self._schema)
-        if key is not None and self._n_parts > 1:
-            o = self._params
-            dsn = (
-                f"host={o['host']} port={o['port']} user={o['user']} "
-                f"dbname={o['database']}"
-            )
-            for k in ("password", "sslmode", "sslrootcert"):
-                if o.get(k):
-                    dsn += f" {k}={o[k]}"
-            conn = PostgresConnector(dsn, schema=o["search_path"] or "public")
-            preds = conn.partition_predicates(base, key, self._n_parts)
-            return [_Slice(f"SELECT * FROM ({base}) _t WHERE {p}") for p in preds]
-        return [_Slice(base)]  # keyless: ONE slice (no ORDER BY ALL)
-
-    def _arrow_schema(self):
-        """pyarrow schema when every column has a vectorizable CSV
-        parse, else None (fall back to the per-field binary decode).
-        Shared with the connector's typed fetch so the two bulk
-        paths cannot drift."""
-        from .connector import spark_schema_to_arrow
-
-        return spark_schema_to_arrow(self._schema)
-
-    def read(self, partition: _Slice):
-        from .pgwire import PgWireClient
-
-        cli = PgWireClient(
-            **{k: v for k, v in self._params.items() if v is not None}
-        )
-        try:
-            arrow_schema = self._arrow_schema()
-            if arrow_schema is not None:
-                # bulk fast path: CSV COPY parsed by Arrow's C++
-                # reader into columnar batches — ~10x the per-field
-                # Python decode; NULL = unquoted empty, empty string
-                # = quoted (the COPY csv contract, mirrored by
-                # quoted_strings_can_be_null=False)
-                from .connector import arrow_csv_to_table
-
-                blob = cli.copy_csv(partition.sql)
-                if not blob:
-                    return
-                yield from arrow_csv_to_table(blob, arrow_schema).to_batches()
-                return
-            # type-tail path (arrays/bytea/uuid/...): binary COPY
-            # decoded per-OID; the LIMIT 0 probe pairs the stream
-            # with its catalog types, exactly the reference's
-            # reader/catalog pairing
-            _cols, oids, _ = cli.query(partition.sql + " LIMIT 0")
-            yield from cli.copy_binary(partition.sql, oids)
-        finally:
-            cli.close()
-
-
-def register_pgwire_source(spark) -> None:
-    """Idempotently register the Postgres format with the session."""
-    _enable_pyds_filter_pushdown(spark)
-    spark.dataSource.register(PgWireFederatedSource)
+    for source in (DuckDBFederatedSource, SQLiteFederatedSource, PgWireFederatedSource):
+        spark.dataSource.register(source)
 
 
 # ---------------------------------------------------------------------------
@@ -476,7 +269,7 @@ from ..queries.base import register  # noqa: E402
     tags=("federation",),
 )
 def fed_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_duckdb_source(spark)
+    register_fed_sources(spark)
     orders = (
         spark.read.format("duckdb_fed")
         .option("sf_dir", sf_dir)
@@ -531,7 +324,7 @@ def fed_postgres_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pgserver import PG_PORT, PG_USER, schema_for
 
     _pg_connector(spark, sf_dir)  # boot + load fixture
-    register_pgwire_source(spark)
+    register_fed_sources(spark)
     cust = (
         spark.read.format("pgwire_fed")
         .option("host", "127.0.0.1")

@@ -1,35 +1,25 @@
-"""Second federation dialect: SQLite (stdlib) behind the same seam.
+"""Second federation dialect: SQLite (stdlib) — the remote behind
+``connector.SQLiteConnector``.
 
 The reference's connector is a value object with a ``db_type``
 switch — ``DatabaseConnector {db_type, params, db_name}``
 (/root/reference/src/sqldb/mod.rs:33-51) — designed for more than
-one backend even though only Postgres is implemented. This module
-proves our federation seam generalizes the same way: a SECOND
-remote engine (SQLite via the stdlib ``sqlite3`` DBAPI) served
-through the same compile-scan / partitioned-executor-fetch shape as
-``federation.py``'s DuckDB backend, with the dialect differences
-isolated where a real multi-backend connector isolates them:
+one backend even though only Postgres is implemented. The dialect
+itself (capabilities, slice fetch, key staging) lives in
+``connector.py`` with every other dialect; this module holds what is
+SQLite-specific below it:
 
+* the remote database: a file-backed SQLite built once per sf_dir
+  from the fixture parquet (driver-side, before any task runs); the
+  per-partition fetches then open ordinary connections on executors.
+  On a real cluster the remote is a server, so only the fetch path
+  matters — the build is fixture plumbing;
 * catalog inference: ``sqlite_master`` + ``PRAGMA table_info``
   instead of ``information_schema`` (mod.rs:67-125 parity, second
-  dialect);
-* type mapping: SQLite's dynamic INTEGER/REAL/TEXT storage classes
-  map lossily onto Spark types — the exact analogue of the
-  reference's lossy OID wire path (numeric → Float64,
-  datatypes.rs:19) versus its precise catalog path;
-* deterministic order: SQLite has no ``ORDER BY ALL``; the dialect
-  pins limited scans with an explicit key order instead;
-* partition planning: no ``quantile_disc`` — the dialect falls back
-  to min/max equi-width ranges on the key (Spark-JDBC's
-  lowerBound/upperBound arithmetic), trading balance for one fewer
-  remote capability, exactly the negotiation a dialect layer exists
-  to make.
-
-The "remote database" is a file-backed SQLite built once per sf_dir
-from the fixture parquet (driver-side, before any task runs); the
-per-partition fetches then open ordinary read-only connections on
-executors. On a real cluster the remote is a server, so only the
-fetch path matters — the build is fixture plumbing.
+  dialect), with SQLite's dynamic INTEGER/REAL/TEXT storage classes
+  mapped lossily onto Spark types — the analogue of the reference's
+  lossy OID wire path (numeric → Float64, datatypes.rs:19) versus its
+  precise catalog path.
 """
 
 from __future__ import annotations
@@ -124,51 +114,6 @@ def load_catalog_sqlite(sf_dir: str) -> dict[str, T.StructType]:
         con.close()
 
 
-def _equi_width_predicates(
-    db: str, base_sql: str, key: str, partitions: int
-) -> list[str]:
-    """Dialect-two partition planning: min/max equi-width ranges
-    (the Spark-JDBC lowerBound/upperBound arithmetic). SQLite has no
-    quantile aggregate, so balance degrades on skewed keys — the
-    capability the DuckDB dialect's quantile path adds back.
-    (Kept as a named binding of SQLiteConnector.partition_predicates;
-    ``db`` is accepted for signature stability but the connector
-    derives it from sf_dir at fetch time.)"""
-    from .connector import SQLiteConnector
-
-    if partitions <= 1:
-        return ["TRUE"]
-    conn = SQLiteConnector(None, db_path=db)
-    return conn.partition_predicates(base_sql, key, partitions)
-
-
-def sqlite_scan(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    columns: list[str] | None = None,
-    predicates: list[str] | None = None,
-    partitions: int = 4,
-    partition_key: str | None = None,
-) -> DataFrame:
-    """Partitioned pushdown scan against the SQLite remote — the same
-    PostgresExec shape as ``federation.federated_scan``, now literally
-    the same code: ``connector.connector_scan`` parametrized over the
-    SQLite dialect (its connector declares PRAGMA cataloging,
-    equi-width partition planning, and no ORDER BY ALL)."""
-    from .connector import SQLiteConnector, connector_scan
-
-    return connector_scan(
-        spark,
-        SQLiteConnector(sf_dir),
-        table,
-        columns=columns,
-        predicates=predicates,
-        partitions=partitions,
-        partition_key=partition_key,
-    )
-
-
 @register(
     "fed_sqlite_scan",
     oracle="""
@@ -193,9 +138,11 @@ def fed_sqlite_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter and projection, N executor cursors stream disjoint key
     ranges, Spark never sees a discarded row. Equi-width ranges are
     the one concession to the dialect's missing quantile aggregate."""
-    return sqlite_scan(
+    from .connector import SQLiteConnector, connector_scan
+
+    return connector_scan(
         spark,
-        sf_dir,
+        SQLiteConnector(sf_dir),
         "customer",
         columns=["c_custkey", "c_mktsegment", "c_acctbal"],
         predicates=["c_acctbal > 5000.0"],

@@ -57,18 +57,14 @@ def test_sqlite_source_first_query_with_conf_unset(spark):
 
 
 def test_all_register_entry_points_set_pushdown_conf(spark):
-    from datafusion_rdbms_ext_spark.sources.pyds import (
-        register_duckdb_source,
-        register_pgwire_source,
-        register_sqlite_source,
-    )
+    from datafusion_rdbms_ext_spark.sources.pyds import register_fed_sources
 
-    for reg in (register_duckdb_source, register_sqlite_source,
-                register_pgwire_source):
-        _unset(spark)
-        reg(spark)
-        assert spark.conf.get(_CONF) == "true", reg.__name__
-    spark.conf.set(_CONF, "true")
+    _unset(spark)
+    try:
+        register_fed_sources(spark)
+        assert spark.conf.get(_CONF) == "true"
+    finally:
+        spark.conf.set(_CONF, "true")
 
 
 def _numeric_blob(ndigits, weight, sign, dscale, digits=()):

@@ -12,16 +12,22 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
 from datafusion_rdbms_ext_spark.plans import plan_string
 from datafusion_rdbms_ext_spark.queries import REGISTRY
+from datafusion_rdbms_ext_spark.sources.connector import (
+    DuckDBConnector,
+    SQLiteConnector,
+    connector_for,
+    fetch_partitioned,
+)
 from datafusion_rdbms_ext_spark.sources.federation import (
     compile_query,
     describe_schema,
     federated_query,
     federated_scan,
-    plan_range_predicates,
 )
-from datafusion_rdbms_ext_spark.sources.pyds import DuckDBFederatedReader
 
 from .conftest import SF_DIR
 
@@ -66,8 +72,8 @@ def test_fed_agg_remote_sql_contains_group_by():
 
 
 def test_range_predicates_are_sort_free_and_partition_the_domain():
-    preds = plan_range_predicates(
-        SF_DIR, "SELECT c_custkey, c_acctbal FROM customer", "c_custkey", 4
+    preds = DuckDBConnector(SF_DIR).partition_predicates(
+        "SELECT c_custkey, c_acctbal FROM customer", "c_custkey", 4
     )
     assert len(preds) == 4
     joined = " ".join(preds)
@@ -78,29 +84,112 @@ def test_range_predicates_are_sort_free_and_partition_the_domain():
     assert preds[-1].count(">=") == 1 and "<" not in preds[-1]
 
 
-def test_datasource_partitions_are_range_predicated(spark):
-    """The mounted DataSource plans sort-free range slices for keyed
-    tables (the VERDICT r2 scale-killer: N remote full sorts)."""
-    from datafusion_rdbms_ext_spark.sources.pyds import DuckDBFederatedSource
+def _fed_options(spark, fmt: str) -> dict:
+    """Options naming the fixture remote of ``fmt`` (the live server
+    is booted and loaded first for pgwire_fed)."""
+    if fmt != "pgwire_fed":
+        return {"sf_dir": SF_DIR}
+    from datafusion_rdbms_ext_spark.sources.federation import _pg_connector
+    from datafusion_rdbms_ext_spark.sources.pgserver import (
+        PG_PORT,
+        PG_USER,
+        schema_for,
+    )
 
-    src = DuckDBFederatedSource.__new__(DuckDBFederatedSource)
-    src.options = {"sf_dir": SF_DIR, "table": "orders", "partitions": "4"}
-    reader = DuckDBFederatedReader(src.options, src.schema())
+    _pg_connector(spark, SF_DIR)
+    return {
+        "host": "127.0.0.1",
+        "port": str(PG_PORT),
+        "user": PG_USER,
+        "database": "postgres",
+        "search_path": schema_for(SF_DIR),
+    }
+
+
+@pytest.mark.parametrize("fmt", ["duckdb_fed", "sqlite_fed", "pgwire_fed"])
+def test_fed_reader_pushdown_and_slices(spark, fmt):
+    """The one federated reader over every format: unsupported
+    filters are declined, supported ones compile into the remote
+    WHERE of every slice; keyed slices are sort-free range predicates
+    (the VERDICT r2 scale-killer: N remote full sorts) that are
+    disjoint and cover every qualifying row; pushFilters RESETS per
+    planning pass and partitions() CONSUMES the pushed filters (no
+    cross-query WHERE leakage)."""
+    from pyspark.sql.datasource import EqualTo, GreaterThan, IsNull
+
+    from datafusion_rdbms_ext_spark.sources.pyds import FederatedSource
+
+    source = {c.name(): c for c in FederatedSource.__subclasses__()}[fmt]
+    opts = {**_fed_options(spark, fmt), "table": "customer", "partitions": "4"}
+    src = source(options=opts)
+    reader = src.reader(src.schema())
+    kept = list(
+        reader.pushFilters(
+            [GreaterThan(("c_acctbal",), 3000.0), IsNull(("c_name",))]
+        )
+    )
+    assert len(kept) == 1 and isinstance(kept[0], IsNull)  # declined
     slices = reader.partitions()
     assert len(slices) == 4
     for s in slices:
         assert "ORDER BY" not in s.sql, s.sql
-        assert "o_orderkey" in s.sql  # range predicate on the key
-    # Disjointness/covering: union of slice counts == table count.
-    from datafusion_rdbms_ext_spark.sources.federation import _connect
+        base, pred = s.sql.rsplit(" _t WHERE ", 1)  # key-range slice
+        assert "(c_acctbal > 3000.0)" in base and "c_custkey" in pred, s.sql
+    keys = [
+        k
+        for s in slices
+        for batch in reader.read(s)
+        for k in batch.column("c_custkey").to_pylist()
+    ]
+    conn = connector_for(fmt, opts)
+    expect = conn.count("SELECT * FROM customer WHERE c_acctbal > 3000.0")
+    assert len(keys) == len(set(keys)) == expect > 0
+    # consumed: a pass with nothing to push plans the unfiltered scan
+    assert all("c_acctbal > 3000.0" not in s.sql for s in reader.partitions())
+    # reset: a second pass with different filters must not leak the
+    # first pass' conjunct (the projected column list still names
+    # c_acctbal — match the conjunct text)
+    list(reader.pushFilters([EqualTo(("c_nationkey",), 3)]))
+    parts2 = reader.partitions()
+    assert all("(c_acctbal > 3000.0)" not in p.sql for p in parts2)
+    assert all("(c_nationkey = 3)" in p.sql for p in parts2)
 
-    con = _connect(SF_DIR)
-    total = con.execute("SELECT COUNT(*) FROM orders").fetchone()[0]
-    sliced = sum(
-        con.execute(f"SELECT COUNT(*) FROM ({s.sql}) a").fetchone()[0] for s in slices
+
+def test_pgwire_type_tail_reader_matches_fetch_partitioned(spark):
+    """A type-tail schema (array column — no vectorized CSV parse)
+    gives the same rows through the pgwire_fed format read and
+    through fetch_partitioned: both ride the connector's one slice
+    fetch."""
+    from pyspark.sql import types as T
+
+    from datafusion_rdbms_ext_spark.sources.pgwire import PgWireClient
+    from datafusion_rdbms_ext_spark.sources.pyds import register_fed_sources
+
+    opts = {**_fed_options(spark, "pgwire_fed"), "table": "reader_tail"}
+    conn = connector_for("pgwire_fed", opts)
+    cli = PgWireClient(**conn._params())
+    try:
+        cli.query("DROP TABLE IF EXISTS reader_tail")
+        cli.query(
+            "CREATE TABLE reader_tail AS SELECT n_regionkey AS k, "
+            "array_agg(n_nationkey ORDER BY n_nationkey) AS keys "
+            "FROM nation GROUP BY n_regionkey"
+        )
+    finally:
+        cli.close()
+    register_fed_sources(spark)
+    reader = spark.read.format("pgwire_fed")
+    for k, v in {**opts, "partitions": "2"}.items():
+        reader = reader.option(k, v)
+    df = reader.load()
+    assert df.schema["keys"].dataType == T.ArrayType(T.LongType())
+    via_format = sorted((r.k, tuple(r.keys)) for r in df.collect())
+    fetched = fetch_partitioned(
+        spark, conn, "SELECT k, keys FROM reader_tail", df.schema, 2, "k"
     )
-    con.close()
-    assert sliced == total
+    via_fetch = sorted((r.k, tuple(r.keys)) for r in fetched.collect())
+    assert via_format == via_fetch
+    assert len(via_format) == 5 and sum(len(t) for _, t in via_format) == 25
 
 
 def test_federated_query_limit_only_fetches_limit_rows(spark, oracle):
@@ -246,8 +335,8 @@ def test_transparent_unparse_sql_shape(spark):
     )
     hit = try_unparse(df)
     assert hit is not None
-    sql, sf_dir, fmt = hit
-    assert sf_dir == SF_DIR and fmt == "duckdb_fed" 
+    sql, conn = hit
+    assert conn == DuckDBConnector(SF_DIR)
     assert "GROUP BY" in sql and "LIMIT 5" in sql
     # Dialect pass stripped Spark literal suffixes (5000.0D -> 5000.0).
     assert "5000.0" in sql and "5000.0D" not in sql
@@ -574,7 +663,7 @@ def test_sqlite_transparent_setop_all_falls_back(spark):
     assert try_unparse(a.exceptAll(b)) is None
     # ...but the distinct set op IS within SQLite's capability.
     hit = try_unparse(a.intersect(b))
-    assert hit is not None and hit[2] == "sqlite_fed"
+    assert hit is not None and hit[1] == SQLiteConnector(SF_DIR)
 
 
 # ---------------------------------------------------------------------------
@@ -662,7 +751,6 @@ def _battery(spark):
 
 
 def test_dialect_battery_rewrites_and_fallbacks(spark):
-    from datafusion_rdbms_ext_spark.sources.federation import describe_schema
     from datafusion_rdbms_ext_spark.sources.pushdown import try_unparse
 
     wrong = []
@@ -671,7 +759,7 @@ def test_dialect_battery_rewrites_and_fallbacks(spark):
         ok = hit is not None
         if ok:
             try:
-                describe_schema(hit[1], hit[0])
+                hit[1].describe(hit[0])
             except Exception:
                 ok = False
         if ok != expect_rewrite:
@@ -819,7 +907,7 @@ def test_sqlite_concat_rewritten_to_pipes_and_value_correct(spark):
         F.concat(F.lit(None).cast("string"), F.col("c_name")).alias("null_x"),
     )
     hit = try_unparse(df)
-    assert hit is not None and hit[2] == "sqlite_fed"
+    assert hit is not None and hit[1] == SQLiteConnector(SF_DIR)
     sql = hit[0]
     assert "concat" not in sql.lower(), sql
     assert "||" in sql, sql
@@ -852,7 +940,7 @@ def test_sqlite_like_denied_case_insensitivity(spark):
         F.col("c_mktsegment") == "like me"
     ).select("c_custkey")
     hit = try_unparse(ok)
-    assert hit is not None and hit[2] == "sqlite_fed"
+    assert hit is not None and hit[1] == SQLiteConnector(SF_DIR)
 
 
 def test_sqlite_concat_ws_denied(spark):
@@ -1064,7 +1152,7 @@ def test_semijoin_agg_pushdown_no_spark_aggregate(spark):
 # (SQLite remote), the multi-column spill, and the ADVICE r13
 # fall-through / consistency guarantees.
 # ---------------------------------------------------------------------------
-def _sqlite_semijoin_case(spark, segment_filter=True):
+def _sqlite_semijoin_case(spark, regions=(1, 2)):
     from pyspark.sql import functions as F
 
     from datafusion_rdbms_ext_spark.sources.pushdown import _sqlite_table
@@ -1074,7 +1162,7 @@ def _sqlite_semijoin_case(spark, segment_filter=True):
     )
     keys = (
         spark.read.parquet(f"{SF_DIR}/nation.parquet")
-        .filter(F.col("n_regionkey").isin(1, 2))
+        .filter(F.col("n_regionkey").isin(*regions))
         .select("n_nationkey")
     )
     return fed.join(
@@ -1146,6 +1234,69 @@ def test_sqlite_transparent_semijoin_spill_bulk_loads_remote_table(spark):
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, df.collect())
     )
+    # the exit-time cleanup drops the staged table
+    SQLiteConnector(SF_DIR).unstage(m.group(1))
+    con = sqlite3.connect(sqlite_db_path(SF_DIR))
+    try:
+        left = con.execute(
+            "SELECT COUNT(*) FROM sqlite_master WHERE name = ?", [m.group(1)]
+        ).fetchone()[0]
+    finally:
+        con.close()
+    assert left == 0
+
+
+def test_sqlite_spills_on_the_same_key_keep_their_own_stage(spark, oracle):
+    """Two lazy spilled semi-joins on the same key column each read
+    their own staged key set: building the second must not replace
+    the key table the first still reads (a shared stage name made the
+    first DataFrame return 0 rows once the second was built)."""
+    from datafusion_rdbms_ext_spark.sources.pushdown import (
+        transparent_semijoin,
+    )
+
+    first, sql_first = transparent_semijoin(
+        _sqlite_semijoin_case(spark, regions=(1, 2)), max_keys=0
+    )
+    expect = oracle.execute(
+        "SELECT COUNT(*) FROM customer WHERE c_nationkey IN "
+        "(SELECT n_nationkey FROM nation WHERE n_regionkey IN (1, 2))"
+    ).fetchone()[0]
+    assert first.count() == expect > 0
+    second, sql_second = transparent_semijoin(
+        _sqlite_semijoin_case(spark, regions=(3,)), max_keys=0
+    )
+    assert second.count() > 0
+    assert first.count() == expect
+    assert sql_first != sql_second
+
+
+def test_connectors_hash_by_value_and_exit_cleanup_is_quiet():
+    """Connectors compare AND hash by value, so they work as dict/set
+    keys; the exit-time stage drop swallows errors (by exit the remote
+    may be gone), while a direct ``unstage`` still raises."""
+    from datafusion_rdbms_ext_spark.sources.connector import PostgresConnector
+
+    a, b = SQLiteConnector(SF_DIR), SQLiteConnector(SF_DIR)
+    assert a == b and hash(a) == hash(b)
+    assert len({a, b, DuckDBConnector(SF_DIR)}) == 2
+    gone = PostgresConnector("host=127.0.0.1 port=1")
+    with pytest.raises(OSError):
+        gone.unstage("_sjk_gone")
+    assert gone._unstage_at_exit("_sjk_gone") is None
+
+
+def test_duckdb_validate_never_analyzes_the_spark_plan():
+    """DuckDB types rewritten SQL with DESCRIBE, so its validation
+    never calls the Spark-schema thunk (a plan analysis over py4j)."""
+
+    def analyze():
+        raise AssertionError("Spark schema analyzed for a DuckDB rewrite")
+
+    schema = DuckDBConnector(SF_DIR).validate(
+        "SELECT n_nationkey FROM nation", analyze
+    )
+    assert schema is not None and schema.names == ["n_nationkey"]
 
 
 def test_transparent_semijoin_multikey_spill_ships_all_columns(spark):
@@ -1388,6 +1539,14 @@ def test_pg_transparent_semijoin_spill_copies_into_live_table(spark):
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, df.collect())
     )
+    # the exit-time cleanup drops the staged table
+    con.unstage(m.group(1))
+    cli = PgWireClient(**con._params())
+    try:
+        _c, _o, left = cli.query(f"SELECT to_regclass('{m.group(1)}')")
+    finally:
+        cli.close()
+    assert left[0][0] is None
 
 
 def test_pg_transparent_whole_plan_no_spark_aggregate(spark):

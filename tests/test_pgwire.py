@@ -609,77 +609,6 @@ def test_parallel_sink_roundtrip_and_abort(spark, pg):
         cli.close()
 
 
-def test_pgwire_datasource_pushdown_and_partitions(spark, pg):
-    """The pgwire_fed reader: supported filters compile into the
-    remote WHERE (consumed), unsupported ones stay in the Spark
-    plan; partitions are disjoint percentile_disc key ranges whose
-    SQL embeds the pushed base; pushFilters RESETS per planning
-    pass (no cross-query WHERE leakage)."""
-    from pyspark.sql.datasource import EqualTo, GreaterThan, IsNull
-
-    from datafusion_rdbms_ext_spark.queries.base import ensure_tables
-    from datafusion_rdbms_ext_spark.sources.pgserver import schema_for
-    from datafusion_rdbms_ext_spark.sources.pyds import (
-        PgWireFederatedReader,
-        PgWireFederatedSource,
-    )
-
-    ensure_tables(spark, SF_DIR)
-    opts = {
-        "host": pg["host"],
-        "port": pg["port"],
-        "user": pg["user"],
-        "database": pg["database"],
-        "search_path": schema_for(SF_DIR),
-        "table": "customer",
-        "partitions": 4,
-    }
-    src = PgWireFederatedSource(options={k: str(v) for k, v in opts.items()})
-    schema = src.schema()
-    assert [f.name for f in schema.fields][:2] == ["c_custkey", "c_name"]
-    rdr = PgWireFederatedReader(
-        {k: str(v) for k, v in opts.items()}, schema
-    )
-    kept = list(
-        rdr.pushFilters(
-            [GreaterThan(("c_acctbal",), 3000.0), IsNull(("c_name",))]
-        )
-    )
-    assert len(kept) == 1 and isinstance(kept[0], IsNull)  # declined
-    parts = rdr.partitions()
-    assert len(parts) == 4
-    assert all("(c_acctbal > 3000.0)" in p.sql for p in parts)
-    # disjoint + covering: the slices sum to the pushed-filter count
-    # (the bulk path yields Arrow RecordBatches — the vectorized CSV
-    # parse — while the type-tail path yields tuples)
-    import pyarrow as pa
-
-    n_rows = 0
-    for p in parts:
-        for item in rdr.read(p):
-            n_rows += (
-                item.num_rows if isinstance(item, pa.RecordBatch) else 1
-            )
-    from datafusion_rdbms_ext_spark.sources.pgwire import PgWireClient
-
-    cli = PgWireClient(**pg)
-    try:
-        expect = cli.query(
-            "SELECT COUNT(*) FROM customer WHERE c_acctbal > 3000.0"
-        )[2][0][0]
-    finally:
-        cli.close()
-    assert n_rows == expect > 0
-    # a second planning pass with different filters must not leak
-    # the first pass' WHERE
-    list(rdr.pushFilters([EqualTo(("c_nationkey",), 3)]))
-    parts2 = rdr.partitions()
-    # the first pass' WHERE conjunct must not leak (the projected
-    # column list still names c_acctbal — match the conjunct text)
-    assert all("(c_acctbal > 3000.0)" not in p.sql for p in parts2)
-    assert all("(c_nationkey = 3)" in p.sql for p in parts2)
-
-
 def test_csv_arrow_path_parity_and_fallback(spark, pg):
     """The vectorized CSV bulk path decodes the SAME values as the
     binary per-OID path (NULL vs empty string, quotes, bool t/f,
@@ -692,10 +621,10 @@ def test_csv_arrow_path_parity_and_fallback(spark, pg):
 
     from pyspark.sql import types as T
 
-    from datafusion_rdbms_ext_spark.sources.pgwire import PgWireClient
-    from datafusion_rdbms_ext_spark.sources.pyds import (
-        PgWireFederatedReader,
+    from datafusion_rdbms_ext_spark.sources.connector import (
+        spark_schema_to_arrow,
     )
+    from datafusion_rdbms_ext_spark.sources.pgwire import PgWireClient
 
     cli = PgWireClient(**{k: v for k, v in pg.items() if k != "search_path"})
     try:
@@ -732,18 +661,16 @@ def test_csv_arrow_path_parity_and_fallback(spark, pg):
     arows = [tuple(r.values()) for r in table.to_pylist()]
     assert arows == brows  # bit-for-bit across both bulk paths
     # fallback selection: an array column disables the CSV path
-    opts = {"host": "x", "port": "1", "user": "u", "database": "d",
-            "table": "t", "partitions": "1"}
     tail = T.StructType(
         [T.StructField("k", T.LongType()),
          T.StructField("keys", T.ArrayType(T.LongType()))]
     )
-    assert PgWireFederatedReader(opts, tail)._arrow_schema() is None
+    assert spark_schema_to_arrow(tail) is None
     plain = T.StructType(
         [T.StructField("k", T.LongType()),
          T.StructField("m", T.DecimalType(38, 4))]
     )
-    s = PgWireFederatedReader(opts, plain)._arrow_schema()
+    s = spark_schema_to_arrow(plain)
     assert s is not None and s.field("m").type == pa.decimal128(38, 4)
 
 
@@ -1017,14 +944,12 @@ def test_pgwire_fed_datasource_with_scram_and_tls(spark, pg):
         ensure_ssl,
         schema_for,
     )
-    from datafusion_rdbms_ext_spark.sources.pyds import (
-        register_pgwire_source,
-    )
+    from datafusion_rdbms_ext_spark.sources.pyds import register_fed_sources
 
     ensure_tables(spark, SF_DIR)
     ensure_scram_role()
     ensure_ssl()
-    register_pgwire_source(spark)
+    register_fed_sources(spark)
     cust = (
         spark.read.format("pgwire_fed")
         .option("host", "127.0.0.1")

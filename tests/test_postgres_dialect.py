@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import types as T
 
 from datafusion_rdbms_ext_spark.sources.connector import (
+    Connector,
     PostgresConnector,
     connector_scan,
 )
@@ -40,11 +41,11 @@ class CannedPostgres(PostgresConnector):
             raise AssertionError(f"unexpected wire SQL: {key!r}")
         return self.canned[key]
 
-    def fetch_pdf_typed(self, sql: str, schema) -> pd.DataFrame:
+    def fetch_arrow(self, sql: str, schema):
         # the double's contract: EVERY wire interaction goes through
-        # the canned fetch (the real connector's typed override opens
-        # a live CSV-COPY connection instead)
-        return self.fetch_pdf(sql)
+        # the canned fetch (the real connector's override opens a
+        # live CSV-COPY connection instead)
+        return Connector.fetch_arrow(self, sql, schema)
 
 
 def _canned_catalog() -> dict[str, pd.DataFrame]:
@@ -162,8 +163,8 @@ def test_capability_negotiation_refuses_bare_limit(spark):
 
 
 def test_driverless_wire_fallback():
-    """With no psycopg2 installed, fetch_pdf rides the engine's own
-    protocol-v3 client (round 9): an unreachable host surfaces the
+    """fetch_pdf rides the engine's own protocol-v3 client (no
+    driver package): an unreachable host surfaces the
     OS connection error; a live server answers driverless (the
     end-to-end path is tests/test_pgwire.py + fed_postgres_scan)."""
     conn = PostgresConnector("host=127.0.0.1 port=1 user=x dbname=x")

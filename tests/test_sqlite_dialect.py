@@ -8,8 +8,8 @@ import sqlite3
 
 from pyspark.sql import types as T
 
+from datafusion_rdbms_ext_spark.sources.connector import SQLiteConnector
 from datafusion_rdbms_ext_spark.sources.sqlite_fed import (
-    _equi_width_predicates,
     load_catalog_sqlite,
     sqlite_db_path,
 )
@@ -29,7 +29,7 @@ def test_catalog_inference_types():
 def test_equi_width_predicates_disjoint_and_covering():
     db = sqlite_db_path(SF_DIR)
     base = "SELECT c_custkey, c_acctbal FROM customer"
-    preds = _equi_width_predicates(db, base, "c_custkey", 4)
+    preds = SQLiteConnector(SF_DIR).partition_predicates(base, "c_custkey", 4)
     assert len(preds) == 4
     con = sqlite3.connect(db)
     try:
@@ -48,9 +48,8 @@ def test_equi_width_predicates_disjoint_and_covering():
 
 
 def test_partition_sqls_are_sort_free():
-    db = sqlite_db_path(SF_DIR)
-    preds = _equi_width_predicates(
-        db, "SELECT c_custkey FROM customer", "c_custkey", 3
+    preds = SQLiteConnector(SF_DIR).partition_predicates(
+        "SELECT c_custkey FROM customer", "c_custkey", 3
     )
     assert all("ORDER BY" not in p.upper() for p in preds)
 
@@ -63,7 +62,6 @@ import pytest  # noqa: E402
 
 from datafusion_rdbms_ext_spark.sources.connector import (  # noqa: E402
     DuckDBConnector,
-    SQLiteConnector,
     connector_scan,
 )
 
