@@ -103,6 +103,7 @@ def salted_join(
 from pyspark.sql import SparkSession  # noqa: E402
 
 from ..queries.base import register  # noqa: E402
+from ..sources.connector import local_frame  # noqa: E402
 
 
 @register(
@@ -176,7 +177,8 @@ def op_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     build key so hot it defeats split shuffles. Replication costs
     buckets x |dim| — dim is 5 rows, so the 8x replication is free
     while the probe's hot key fans across 8 independent tasks."""
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("click", 1), ("view", 2), ("purchase", 10), ("signup", 5), ("error", 0)],
         "event_type string, weight int",
     ).withColumnRenamed("event_type", "d_type")

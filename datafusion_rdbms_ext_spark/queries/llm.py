@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.compat import sql_dsum
+from ..sources.connector import local_frame
 from .base import register
 
 # ---------------------------------------------------------------------------
@@ -1197,11 +1198,9 @@ def _local_cents_df(spark: SparkSession, rows) -> DataFrame:
     """(cid, cemb) DataFrame built from driver-held centroid rows,
     tagged with ``_local_cents`` so the assignment/probe helpers take
     the literal fast path (zero jobs to re-ship the centroids)."""
-    df = spark.createDataFrame(
-        [(int(c), [int(v) for v in e]) for c, e in rows],
-        "cid int, cemb array<bigint>",
-    )
-    df._local_cents = [(int(c), [int(v) for v in e]) for c, e in rows]
+    data = [(int(c), [int(v) for v in e]) for c, e in rows]
+    df = local_frame(spark, data, "cid int, cemb array<bigint>")
+    df._local_cents = data
     return df
 
 
@@ -2953,7 +2952,7 @@ def llm_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("bulk")
     )
     # len(_MIX_RATES) == 3 rows at ANY scale — a true constant dim.
-    mix_spec = spark.createDataFrame(list(_MIX_RATES), "cls string, rate int")
+    mix_spec = local_frame(spark, _MIX_RATES, "cls string, rate int")
     rates = F.broadcast(mix_spec)
     keep = (
         _phash(F.col("doc_id").cast("string"), "mix") % 100 < F.col("rate")
@@ -5409,9 +5408,7 @@ def _local_keyed_df(spark: SparkSession, rows, cell_type: str) -> DataFrame:
     data = [
         (c, int(cid), [int(v) for v in e]) for c, cid, e in rows
     ]
-    df = spark.createDataFrame(
-        data, f"cell {cell_type}, cid int, cemb array<bigint>"
-    )
+    df = local_frame(spark, data, f"cell {cell_type}, cid int, cemb array<bigint>")
     df._local_keyed_cents = data
     return df
 
@@ -8177,9 +8174,7 @@ def llm_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-explode + broadcast hash join + two-level rollup, all
     map-side until the per-doc aggregation. Swapping the lexicon for
     a model-scored UDF changes one stage, not the plan."""
-    lex = spark.createDataFrame(
-        sorted(_SENT_LEXICON.items()), "t string, pol int"
-    )
+    lex = local_frame(spark, sorted(_SENT_LEXICON.items()), "t string, pol int")
     tok = spark.table("documents").select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("t")
     )
@@ -10294,7 +10289,8 @@ def llm_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rules, _ = bpe_train(words, _BPE_ROUNDS, batch=1)
     out_rows = [(s, m, c, t) for (s, m, c, t) in rules]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "step INT, merged STRING, pair_cnt BIGINT, corpus_tokens_after BIGINT",
     ).orderBy("step")
@@ -12220,9 +12216,7 @@ def mmr_select(
         (i + 1, int(r["vec_id"]), int(r["rel_ppm"]))
         for i, r in enumerate(picked)
     ]
-    return spark.createDataFrame(
-        out, "rk bigint, vec_id bigint, rel_ppm bigint"
-    )
+    return local_frame(spark, out, "rk bigint, vec_id bigint, rel_ppm bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -12336,7 +12330,7 @@ def kcenter_select(
     ).localCheckpoint()
     seed_rows = eq.orderBy("vec_id").limit(1).collect()
     if not seed_rows:
-        return spark.createDataFrame([], "rk bigint, vec_id bigint, d2 bigint")
+        return local_frame(spark, [], "rk bigint, vec_id bigint, d2 bigint")
     seed = seed_rows[0]
     picked = [(1, int(seed["vec_id"]), 0)]
     picked_ids = {int(seed["vec_id"])}
@@ -12405,9 +12399,7 @@ def kcenter_select(
                 if d < c[0]:
                     c[0] = d
             fresh = False
-    return spark.createDataFrame(
-        picked, "rk bigint, vec_id bigint, d2 bigint"
-    )
+    return local_frame(spark, picked, "rk bigint, vec_id bigint, d2 bigint")
 
 
 _KC_PP_K = 6  # pre-pick gate: selected set size
@@ -12581,6 +12573,4 @@ def kcenter_select_prepick(
         .collect()
     ]
     picked = _fps_greedy_rows(pool, k)
-    return spark.createDataFrame(
-        picked, "rk bigint, vec_id bigint, d2 bigint"
-    )
+    return local_frame(spark, picked, "rk bigint, vec_id bigint, d2 bigint")

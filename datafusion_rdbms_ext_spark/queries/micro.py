@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.connector import local_frame
 from .base import register
 
 _DEC = "decimal(30,8)"
@@ -705,8 +706,10 @@ def micro_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def micro_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the literal relation is driver-built and broadcast —
     the canonical small-dim pattern."""
-    v = spark.createDataFrame(
-        [("1-URGENT", 5), ("2-HIGH", 4), ("5-LOW", 1)], "prio string, weight long"
+    v = local_frame(
+        spark,
+        [("1-URGENT", 5), ("2-HIGH", 4), ("5-LOW", 1)],
+        "prio string, weight long",
     )
     return (
         v.join(

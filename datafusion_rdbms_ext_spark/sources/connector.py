@@ -220,6 +220,41 @@ def spark_schema_to_arrow(schema: T.StructType):
     return pa.schema(fields)
 
 
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """DataFrame over driver-held ``rows`` (tuples, or dicts keyed by
+    field name), shipped to the JVM as one Arrow table.
+
+    ``createDataFrame(<list>)`` pickles the list into a Python RDD, so
+    every job reading the frame runs Python-worker tasks; Arrow
+    batches land JVM-side. Rows are still checked against ``schema``
+    first (the list path's ``verifySchema``: ``1.5`` into a ``long``
+    raises instead of truncating), and a naive datetime is UTC wall
+    clock, as the pgwire decoder rebases it, whatever the driver's
+    local zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    names = schema.names
+    verify = T._make_type_verifier(schema)
+    tuples = []
+    for row in rows:
+        verify(row)
+        tuples.append(
+            tuple(row.get(n) for n in names) if isinstance(row, dict) else row
+        )
+    columns = list(zip(*tuples)) if tuples else [()] * len(names)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, type=to_arrow_type(f.dataType))
+            for col, f in zip(columns, schema.fields)
+        ],
+        names=names,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def arrow_csv_to_table(blob: bytes, arrow_schema):
     """Parse a COPY (FORMAT csv) stream under the COPY contract:
     NULL = unquoted empty field, empty string = quoted, bool = t/f."""
@@ -948,20 +983,16 @@ def fetch_partitioned(
     if limited:
         partitions = 1
     part_sqls = plan_slices(conn, base_sql, schema, partitions, partition_key)
-
-    # repartitionByRange gives exactly one pid per task — a plain hash
-    # repartition collides pids (murmur3 on small ints), serializing
-    # two remote fetches in one task while another sits idle.
-    spec = spark.createDataFrame(
-        [(i, sql) for i, sql in enumerate(part_sqls)], "pid int, part_sql string"
-    ).repartitionByRange(len(part_sqls), "pid")
+    n = len(part_sqls)
 
     def fetch(batches: Iterator) -> Iterator:
         for batch in batches:
-            for sql in batch.column("part_sql").to_pylist():
-                yield from conn.fetch_arrow(sql, schema)
+            for i in batch.column("id").to_pylist():
+                yield from conn.fetch_arrow(part_sqls[i], schema)
 
-    return spec.mapInArrow(fetch, schema)
+    # one slice id per partition, JVM-generated: no Python seed RDD,
+    # no range-sampling job, no exchange
+    return spark.range(0, n, 1, n).mapInArrow(fetch, schema)
 
 
 def connector_scan(

@@ -54,6 +54,7 @@ from .connector import (
     DuckDBConnector,
     connector_scan,
     fetch_partitioned,
+    local_frame,
     pick_partition_key,
 )
 
@@ -911,10 +912,7 @@ def fed_postgres_binary_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = cli.copy_binary(sql, oids)
     finally:
         cli.close()
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, event_type string",
-    )
+    df = local_frame(spark, rows, "event_id long, ts timestamp, event_type string")
     from ..functions.compat import ts_micros
 
     return (
@@ -984,9 +982,7 @@ def fed_postgres_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         cols, _oids, rows = cli.query(sql)
     finally:
         cli.close()
-    out = spark.createDataFrame(
-        rows, "c_mktsegment string, n_rich long, bal_cents long"
-    )
+    out = local_frame(spark, rows, "c_mktsegment string, n_rich long, bal_cents long")
     return out.orderBy("c_mktsegment")
 
 
@@ -1042,9 +1038,9 @@ def fed_postgres_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         cli.close()
-    return spark.createDataFrame(
-        rows, "n_regionkey long, n_nations long"
-    ).orderBy("n_regionkey")
+    return local_frame(spark, rows, "n_regionkey long, n_nations long").orderBy(
+        "n_regionkey"
+    )
 
 
 @register(
@@ -1138,8 +1134,8 @@ def fed_postgres_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         cli.close()
-    return spark.createDataFrame(
-        rows, "c_mktsegment string, n_cust long, bal_cents long"
+    return local_frame(
+        spark, rows, "c_mktsegment string, n_cust long, bal_cents long"
     ).orderBy("c_mktsegment")
 
 
@@ -1209,7 +1205,7 @@ def fed_postgres_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         cli.close()
     schema = con.catalog()["typed_sidecar"]  # udt_name -> ArrayType
-    df = spark.createDataFrame(trows, schema=schema)
+    df = local_frame(spark, trows, schema)
     return (
         df.select(
             "n_regionkey",
@@ -1278,7 +1274,7 @@ def fed_postgres_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         cli.close()
     schema = con.catalog()["decimal_ledger"]  # amount: Decimal(38,4)
-    df = spark.createDataFrame(rows, schema=schema)
+    df = local_frame(spark, rows, schema)
     return (
         df.select(
             "n_nationkey",
@@ -1408,8 +1404,8 @@ def pg_parallel_sink(
 
     p = dict(params)  # plain picklable dict into the task closure
 
-    def _copy_partition(pdfs):
-        import pandas as pd  # noqa: F401
+    def _copy_partition(batches):
+        import pyarrow as pa
         from pyspark import TaskContext
 
         from datafusion_rdbms_ext_spark.sources.pgwire import PgWireClient
@@ -1438,17 +1434,13 @@ def pg_parallel_sink(
                 _c, _o, prior = task_cli.query(
                     f"SELECT n FROM {claims} WHERE part_id = {part_id}"
                 )
-                yield pd.DataFrame({"staged": [int(prior[0][0])]})
+                yield pa.RecordBatch.from_pydict({"staged": [int(prior[0][0])]})
                 return
             n = 0
-            for pdf in pdfs:
-                rows = (
-                    tuple(
-                        None if (isinstance(v, float) and v != v) else v
-                        for v in row
-                    )
-                    for row in pdf.itertuples(index=False)
-                )
+            for batch in batches:
+                # Arrow keeps NULL apart from NaN and a nullable bigint
+                # an int (a pandas frame turns both into float NaN)
+                rows = zip(*(c.to_pylist() for c in batch.columns))
                 if bin_types is not None:
                     n += task_cli.copy_in_binary(
                         stage, cols, rows, bin_types
@@ -1459,7 +1451,7 @@ def pg_parallel_sink(
             # the rows: any visible ledger row already has its final n
             task_cli.query(f"UPDATE {claims} SET n = {n} WHERE part_id = {part_id}")
             task_cli.query("COMMIT")
-            yield pd.DataFrame({"staged": [n]})
+            yield pa.RecordBatch.from_pydict({"staged": [n]})
         finally:
             task_cli.close()
 
@@ -1473,7 +1465,7 @@ def pg_parallel_sink(
 
     try:
         staged = (
-            df.mapInPandas(_copy_partition, "staged long")
+            df.mapInArrow(_copy_partition, "staged long")
             .groupBy()
             .sum("staged")
             .collect()[0][0]
@@ -1569,6 +1561,6 @@ def fed_postgres_parallel_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         cli.close()
-    return spark.createDataFrame(
-        rows, "c_mktsegment string, n_cust long, n_keys long, bal_cents long"
+    return local_frame(
+        spark, rows, "c_mktsegment string, n_cust long, n_keys long, bal_cents long"
     ).orderBy("c_mktsegment")

@@ -45,7 +45,13 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .connector import FORMATS, Connector, connector_for, fetch_partitioned
+from .connector import (
+    FORMATS,
+    Connector,
+    connector_for,
+    fetch_partitioned,
+    local_frame,
+)
 
 # federation is imported lazily at the call sites: a top-level
 # from-import would close the executor-side import cycle
@@ -1639,9 +1645,7 @@ def fed_three_engine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         cli.close()
-    supp = spark.createDataFrame(
-        rows, "s_nationkey long, n_supp long, bal_cents long"
-    )
+    supp = local_frame(spark, rows, "s_nationkey long, n_supp long, bal_cents long")
     return (
         nat.join(cust, F.col("c_nationkey") == F.col("n_nationkey"))
         .join(supp, F.col("s_nationkey") == F.col("n_nationkey"))

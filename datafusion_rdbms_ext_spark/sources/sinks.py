@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import dsum, sql_dsum
 from ..queries.base import register
+from .connector import local_frame
 
 #: One written copy per (session, sf_dir) — the sink equivalent of the
 #: catalog's registration memo. Keyed in the session conf so lifetime
@@ -316,9 +317,12 @@ def sink_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     even though the query text names none of them."""
     path = partitioned_documents_path(spark, sf_dir)
     fact = spark.read.parquet(path)
-    dim = spark.createDataFrame(
-        [("en", 1), ("de", 1), ("zh", 2)], "lang string, prio int"
-    )
+    # lazy local checkpoint: over a bare LocalRelation the optimizer
+    # folds the prio filter into the rows, and DPP only fires for a
+    # build side that still carries a selective filter
+    dim = local_frame(
+        spark, [("en", 1), ("de", 1), ("zh", 2)], "lang string, prio int"
+    ).localCheckpoint(eager=False)
     return (
         fact.join(dim.filter(F.col("prio") == 1), "lang")
         .groupBy("lang")
@@ -1658,7 +1662,8 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 visible = read_version(spark, root, 7).count()
         rows.append((name, n_staged, v_null, v_dup, published, visible))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "candidate string, staged_rows long, null_violations long, "
         "key_collisions long, published boolean, visible_docs long",

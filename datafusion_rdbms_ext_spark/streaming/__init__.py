@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 from ..catalog import normalize_ts
 from ..functions.compat import dsum, sql_dsum
 from ..queries.base import register
+from ..sources.connector import local_frame
 
 #: Monotonic suffix so each invocation gets a fresh memory-sink table.
 _RUN_SEQ = [0]
@@ -651,7 +652,8 @@ def stream_cms_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    sketch = spark.createDataFrame(
+    sketch = local_frame(
+        spark,
         [
             (int(k.split(",")[0]), int(k.split(",")[1]), c)
             for k, c in state.latest().items()
@@ -772,7 +774,8 @@ def stream_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    daily = spark.createDataFrame(
+    daily = local_frame(
+        spark,
         [(*k.split("|", 1), n) for k, n in state.latest().items()],
         "event_type STRING, day STRING, n BIGINT",
     )
@@ -1707,7 +1710,8 @@ def stream_cdf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     check, kill-and-restart proven in tests/test_deletion_vectors.py."""
     cdf_consume(spark, sf_dir)  # reach the head (no-op when already there)
     final, replay_applied = cdf_consume(spark, sf_dir)  # replay pass
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 final["frontier"],
@@ -2172,8 +2176,9 @@ def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in sorted(_glob.glob(os.path.join(root, "report_*.json"))):
         with open(p) as fh:
             rows.append(json.load(fh))
-    return spark.createDataFrame(
-        pd.DataFrame(rows),
+    return local_frame(
+        spark,
+        rows,
         "batch_seq long, n_new long, n_dup_prior long, "
         "n_dup_batch_only long, n_admitted long",
     ).orderBy("batch_seq")
@@ -2482,8 +2487,9 @@ def stream_semdedup_tree_admission(
     for p in sorted(_glob.glob(os.path.join(root, "report_*.json"))):
         with open(p) as fh:
             rows.append(json.load(fh))
-    return spark.createDataFrame(
-        pd.DataFrame(rows),
+    return local_frame(
+        spark,
+        rows,
         "batch_seq long, n_new long, n_dup_prior long, "
         "n_dup_batch_only long, n_admitted long",
     ).orderBy("batch_seq")

@@ -1091,6 +1091,50 @@ def test_parallel_sink_binary_path_selection():
     ]
 
 
+@pytest.mark.parametrize(
+    "ddl",
+    [
+        "k bigint, d double precision, v bigint",  # binary COPY
+        "k bigint, d double precision, v bigint, tag char(1)",  # text COPY
+    ],
+    ids=["binary", "text"],
+)
+def test_parallel_sink_keeps_nan_null_and_nullable_bigint(spark, pg, ddl):
+    """A NaN double lands as NaN (not NULL), a null double as NULL, and
+    a nullable bigint holding a null stays an exact int on both COPY
+    formats."""
+    from datafusion_rdbms_ext_spark.sources.connector import local_frame
+    from datafusion_rdbms_ext_spark.sources.federation import (
+        _ddl_binary_types,
+        pg_parallel_sink,
+    )
+    from datafusion_rdbms_ext_spark.sources.pgwire import PgWireClient
+
+    text = "tag" in ddl
+    assert (_ddl_binary_types(ddl) is None) == text
+    rows = [(1, float("nan"), 2**53 + 1), (2, None, None), (3, -0.5, 7)]
+    schema = "k long, d double, v long"
+    if text:
+        rows = [r + ("x",) for r in rows]
+        schema += ", tag string"
+    # one partition: the null and the ints share a batch
+    src = local_frame(spark, rows, schema).coalesce(1)
+    assert pg_parallel_sink(src, dict(pg), "psink_nan_probe", ddl) == 3
+    cli = PgWireClient(**pg)
+    try:
+        _c, _o, got = cli.query(
+            "SELECT k, d::text, v FROM psink_nan_probe ORDER BY k"
+        )
+        cli.query("DROP TABLE psink_nan_probe")
+    finally:
+        cli.close()
+    assert [tuple(r) for r in got] == [
+        (1, "NaN", 2**53 + 1),
+        (2, None, None),
+        (3, "-0.5", 7),
+    ]
+
+
 def test_copy_in_binary_numeric_exact(spark, pg):
     """Round 12: the base-10000 numeric ENCODER — the write-side
     mirror of the exact reader. Full-precision decimals (beyond
