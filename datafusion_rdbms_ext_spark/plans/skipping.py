@@ -46,7 +46,7 @@ class SkippingIndex:
     """Handle to a composed skipping index over one base table."""
 
     base_table: str  #: unqualified base table name (SubqueryAlias id)
-    root: str  #: index root (manifest.json + bloom/ parquet)
+    root: str  #: index root (manifest.json, schema.json, data/, bloom/)
     manifest: dict  #: file -> [min, max] zonemap over range_col
     m: int  #: bloom bitmap width
     range_col: str  #: zonemap column (e.g. l_orderkey)
@@ -180,14 +180,21 @@ def _try_filter_scan(
         cond,
     )
     plain = _strip_base_qualifier(plain, idx.base_table)
-    if not files:
-        # every file pruned: a zero-read scan of one file's schema,
-        # statically empty
-        files = sorted(idx.manifest)[:1]
-        return spark.read.parquet(*files).filter(F.lit(False))
-    out = spark.read.parquet(*files).filter(F.expr(plain))
+    out = _serve(spark, idx, files, plain)
     out.schema  # force analysis inside the guard
     return out
+
+
+def _serve(
+    spark: SparkSession, idx: SkippingIndex, files: list[str], predicate: str
+) -> DataFrame:
+    """The pruned scan: the surviving ``files`` read with the index's
+    recorded data schema (so building it starts no Spark job), the
+    full predicate re-applied. No surviving file is a zero-read scan."""
+    from ..sources.sinks import composed_schema, read_written
+
+    data = read_written(spark, composed_schema(idx.root, "data"), *files)
+    return data.filter(F.expr(predicate))
 
 
 def _raise():

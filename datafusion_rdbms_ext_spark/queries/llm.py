@@ -277,12 +277,12 @@ def _lsh_index(spark: SparkSession):
     # verify intersection) — without truncation the scan + shingle +
     # hash subtree planned AND executed up to 12x per query (r15
     # before-plan: 12 parquet scans in llm_dedup_minhash_lsh).
-    # Materialize the hashed occurrence stream once (the "write the
-    # token table" move of an inverted-index build, the same step
-    # llm_minhash_containment already took), then freeze the two
-    # derived index tables in PARALLEL (guide §2.6) so each is
-    # computed exactly once. 16-32 bytes per occurrence, hashes only
-    # — shingle strings still never leave their scan partition.
+    # Freeze the two derived index tables in PARALLEL (guide §2.6) so
+    # each is computed exactly once. The hashed occurrence stream
+    # `occ` they share is NOT checkpointed: its scan + shingle + hash
+    # subtree runs once per freeze (twice) and again for any later
+    # consumer of `sig`. 16-32 bytes per occurrence, hashes only —
+    # shingle strings still never leave their scan partition.
     occ = ds0.select(
         "doc_id",
         F.xxhash64("s").alias("hsh"),

@@ -28,6 +28,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.compat import dsum, sql_dsum
 from ..queries.base import register
@@ -683,6 +684,29 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _VERSIONED_DIR_CONF = "spark.datafusion_rdbms_ext.versioned_dir"
 _VBUCKET = 250  # doc_ids per bucket file-group
+#: Delete sidecars have fixed schemas: a positional sidecar holds the
+#: two parquet ``_metadata`` fields that harvested it, an equality
+#: sidecar the keys ``spark.range`` produced.
+_DV_SCHEMA = "file_path string, row_index long"
+_EQ_SCHEMA = "doc_id long"
+#: What a manifest derived from its parent carries forward unchanged.
+_CARRIED = ("schema", "delete_vectors", "equality_deletes")
+
+
+def read_written(spark: SparkSession, schema, *paths: str) -> DataFrame:
+    """Read parquet files the engine wrote, with the schema their
+    writer recorded: a manifest's ``schema`` (StructType JSON), a
+    staged frame's StructType, or a DDL string.
+
+    ``spark.read.parquet`` without a schema starts a Spark job to read
+    a footer for a schema the writer already knew; with one, the read
+    is planned with no job. Every snapshot, stage and sidecar read of
+    this layer goes through here, and there is no inference fallback:
+    a manifest without ``schema`` is an error. No paths reads as an
+    empty table of the schema."""
+    if isinstance(schema, dict):
+        schema = T.StructType.fromJson(schema)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 class CommitConflict(RuntimeError):
@@ -782,7 +806,10 @@ def versioned_corpus_root(spark: SparkSession, sf_dir: str) -> str:
     )
     gen1 = _bucket_files(root, "gen1")
     manifest1 = sorted(f for fs in gen1.values() for f in fs)
-    _write_manifest(root, 1, {"version": 1, "files": manifest1})
+    schema = base.schema.jsonValue()
+    _write_manifest(
+        root, 1, {"version": 1, "files": manifest1, "schema": schema}
+    )
 
     upd_a = (
         spark.table("documents")
@@ -819,6 +846,7 @@ def versioned_corpus_root(spark: SparkSession, sf_dir: str) -> str:
             "files": sorted(carried + rewritten),
             "carried_over": sorted(carried),
             "rewritten_buckets": changed,
+            "schema": schema,
         },
     )
     spark.conf.set(key, root)
@@ -827,6 +855,9 @@ def versioned_corpus_root(spark: SparkSession, sf_dir: str) -> str:
 
 def read_version(spark: SparkSession, root: str, version: int) -> DataFrame:
     """Expand a version's manifest into a DataFrame (time travel).
+
+    The files are read with the manifest's recorded ``schema``, so
+    building the frame starts no Spark job.
 
     A manifest may carry a ``delete_vectors`` sidecar (merge-on-read
     row-level deletes, Iceberg-v2 position deletes): the read applies
@@ -837,10 +868,10 @@ def read_version(spark: SparkSession, root: str, version: int) -> DataFrame:
 
     with open(os.path.join(root, f"v{version}.json")) as fh:
         manifest = json.load(fh)
-    df = spark.read.parquet(*manifest["files"])
+    df = read_written(spark, manifest["schema"], *manifest["files"])
     dv_dir = manifest.get("delete_vectors")
     if dv_dir:
-        dv = spark.read.parquet(os.path.join(root, dv_dir))
+        dv = read_written(spark, _DV_SCHEMA, os.path.join(root, dv_dir))
         df = df.withColumns(
             {
                 "_f": F.col("_metadata.file_path"),
@@ -857,7 +888,7 @@ def read_version(spark: SparkSession, root: str, version: int) -> DataFrame:
         # the other Iceberg-v2 delete flavor: deletes by KEY VALUE
         # (no scan needed at commit time — the writer never learned
         # positions), applied as a key anti-join after the DV pass
-        eq = spark.read.parquet(os.path.join(root, eq_dir))
+        eq = read_written(spark, _EQ_SCHEMA, os.path.join(root, eq_dir))
         df = df.join(eq, "doc_id", "left_anti")
     return df.select("doc_id", "text")
 
@@ -1082,7 +1113,16 @@ def compact_version(spark: SparkSession, root: str) -> None:
     import glob as _glob
 
     files = sorted(_glob.glob(os.path.join(root, "gen3", "*.parquet")))
-    _write_manifest(root, 3, {"version": 3, "files": files, "compacted_from": 2})
+    _write_manifest(
+        root,
+        3,
+        {
+            "version": 3,
+            "files": files,
+            "compacted_from": 2,
+            "schema": v2.schema.jsonValue(),
+        },
+    )
 
 
 def deletion_vector_root(spark: SparkSession, sf_dir: str) -> str:
@@ -1112,8 +1152,9 @@ def deletion_vector_root(spark: SparkSession, sf_dir: str) -> str:
     if os.path.exists(os.path.join(root, "v5.json")):
         return root
     with open(os.path.join(root, "v2.json")) as fh:
-        v2_files = json.load(fh)["files"]
-    tagged = spark.read.parquet(*v2_files).select(
+        m2 = json.load(fh)
+    v2_files = m2["files"]
+    tagged = read_written(spark, m2["schema"], *v2_files).select(
         "doc_id",
         F.col("_metadata.file_path").alias("file_path"),
         F.col("_metadata.row_index").alias("row_index"),
@@ -1131,6 +1172,7 @@ def deletion_vector_root(spark: SparkSession, sf_dir: str) -> str:
                 "files": sorted(v2_files),
                 "delete_vectors": "dv4",
                 "deleted_from": 2,
+                "schema": m2["schema"],
             },
         )
     except CommitConflict:
@@ -1138,7 +1180,7 @@ def deletion_vector_root(spark: SparkSession, sf_dir: str) -> str:
     # -- v5: rewrite ONLY the files the vector touches ------------------
     dv_plain = {
         r["file_path"].removeprefix("file:")
-        for r in spark.read.parquet(os.path.join(root, "dv4"))
+        for r in read_written(spark, _DV_SCHEMA, os.path.join(root, "dv4"))
         .select("file_path")
         .distinct()
         .collect()
@@ -1148,13 +1190,13 @@ def deletion_vector_root(spark: SparkSession, sf_dir: str) -> str:
     if affected:
         # clean files are carried by reference; only DV-bearing files
         # are re-read (with the vector applied) and rewritten
-        rewrite = spark.read.parquet(*affected).withColumns(
+        rewrite = read_written(spark, m2["schema"], *affected).withColumns(
             {
                 "_f": F.col("_metadata.file_path"),
                 "_p": F.col("_metadata.row_index"),
             }
         )
-        dvdf = spark.read.parquet(os.path.join(root, "dv4"))
+        dvdf = read_written(spark, _DV_SCHEMA, os.path.join(root, "dv4"))
         (
             rewrite.join(
                 dvdf,
@@ -1178,6 +1220,7 @@ def deletion_vector_root(spark: SparkSession, sf_dir: str) -> str:
                 "files": carried + gen5,
                 "carried_over": carried,
                 "materialized_from": 4,
+                "schema": m2["schema"],
             },
         )
     except CommitConflict:
@@ -1272,13 +1315,13 @@ def mor_update_root(spark: SparkSession, sf_dir: str) -> str:
         return root
     with open(os.path.join(root, "v4.json")) as fh:
         m4 = json.load(fh)
-    base = spark.read.parquet(*m4["files"]).withColumns(
+    base = read_written(spark, m4["schema"], *m4["files"]).withColumns(
         {
             "_f": F.col("_metadata.file_path"),
             "_p": F.col("_metadata.row_index"),
         }
     )
-    dv4 = spark.read.parquet(os.path.join(root, "dv4"))
+    dv4 = read_written(spark, _DV_SCHEMA, os.path.join(root, "dv4"))
     live = base.join(
         dv4,
         (F.col("_f") == dv4["file_path"])
@@ -1315,6 +1358,7 @@ def mor_update_root(spark: SparkSession, sf_dir: str) -> str:
                 "delete_vectors": "dv6",
                 "appended": gen6,
                 "updated_from": 4,
+                "schema": m4["schema"],
             },
         )
     except CommitConflict:
@@ -1383,13 +1427,13 @@ def source_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _wap_stage(
     spark: SparkSession, root: str, staged: DataFrame, stage_name: str
-) -> str:
+) -> DataFrame:
     """Stage a candidate batch as its own immutable file group and
-    return the stage directory. Stages are IMMUTABLE once written (a
-    published manifest points at these exact file paths — an
-    overwrite would orphan it): write to a temp dir and atomically
-    rename into place, the same discipline as the result cache
-    (ADVICE r8 #5)."""
+    return the staged files, read with the batch's schema. Stages are
+    IMMUTABLE once written (a published manifest points at these
+    exact file paths — an overwrite would orphan it): write to a temp
+    dir and atomically rename into place, the same discipline as the
+    result cache."""
     stage_dir = os.path.join(root, f"stage_{stage_name}")
     if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
         # _unique_suffix, not PID-only: two driver threads (e.g.
@@ -1403,7 +1447,7 @@ def _wap_stage(
             import shutil
 
             shutil.rmtree(tmp, ignore_errors=True)
-    return stage_dir
+    return read_written(spark, staged.schema, stage_dir)
 
 
 def _wap_publish(
@@ -1428,17 +1472,40 @@ def _wap_publish(
         "appended": stage_files,
         "published_from_stage": stage_name,
     }
-    # carry BOTH delete sidecar flavors forward (ADVICE r14 #3: the
-    # other publish sites copy equality_deletes too; dropping it here
-    # would resurrect equality-deleted rows if published over such a
-    # base — v6 has none today, but the helper is shared)
-    for key in ("delete_vectors", "equality_deletes"):
+    # carry the schema and BOTH delete sidecar flavors forward, as
+    # every publish site does: dropping equality_deletes here would
+    # resurrect equality-deleted rows if published over such a base
+    # (v6 has none today, but the helper is shared)
+    for key in _CARRIED:
         if prev.get(key):
             payload[key] = prev[key]
     try:
         _write_manifest(root, version_to, payload)
     except CommitConflict:
         pass  # concurrent identical publish won the link race
+
+
+def _published_stage(root: str, version: int, stage_name: str) -> bool:
+    """Whether manifest v{version} is stage ``stage_name`` appended —
+    the post-publish check. :func:`_wap_publish` returns quietly when
+    another commit already holds the version (a crashed prior run, a
+    non-identical stage, a second clean candidate), so only the
+    manifest tells a won publish from a lost one."""
+    import glob as _glob
+    import json
+
+    path = os.path.join(root, f"v{version}.json")
+    if not os.path.exists(path):
+        return False
+    with open(path) as fh:
+        m = json.load(fh)
+    stage_files = sorted(
+        _glob.glob(os.path.join(root, f"stage_{stage_name}", "*.parquet"))
+    )
+    return (
+        m.get("published_from_stage") == stage_name
+        and m.get("appended") == stage_files
+    )
 
 
 def wap_attempt(
@@ -1461,8 +1528,9 @@ def wap_attempt(
     ``text`` within the batch, and key-collision of ``doc_id``
     against the snapshot (a left-semi probe — at scale this prunes
     through the skipping index rather than scanning the table).
-    Returns the audit report either way."""
-    sdf = spark.read.parquet(_wap_stage(spark, root, staged, stage_name))
+    Returns the audit report either way; ``published`` is true only
+    when v{version_to} is this stage appended."""
+    sdf = _wap_stage(spark, root, staged, stage_name)
     table = read_version(spark, root, version_from)
     # ONE aggregation job for all three audit counts (was three
     # sequential actions): the left join against the DISTINCT
@@ -1490,9 +1558,10 @@ def wap_attempt(
     n_staged = int(audit["n_staged"])
     v_null = int(audit["v_null"])
     v_dup = int(audit["v_dup"])
-    published = (v_null + v_dup) == 0
-    if published:
+    clean = (v_null + v_dup) == 0
+    if clean:
         _wap_publish(root, version_from, version_to, stage_name)
+    published = clean and _published_stage(root, version_to, stage_name)
     return {
         "staged_rows": n_staged,
         "null_violations": v_null,
@@ -1597,8 +1666,9 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v7.files == v6.files + stage files, verified by
     # tests/test_round14_opt.py::test_wap_fused_matches_sequential).
     staged = {
-        name: spark.read.parquet(_wap_stage(spark, root, cand, name))
-        .withColumn("candidate", F.lit(name))
+        name: _wap_stage(spark, root, cand, name).withColumn(
+            "candidate", F.lit(name)
+        )
         for name, cand in (("bad", bad), ("good", good))
     }
     table = read_version(spark, root, 6)
@@ -1633,34 +1703,22 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_staged = int(rep["n_staged"]) if rep is not None else 0
         v_null = int(rep["v_null"]) if rep is not None else 0
         v_dup = int(rep["v_dup"]) if rep is not None else 0
-        published = (v_null + v_dup) == 0
-        if published:
+        clean = (v_null + v_dup) == 0
+        if clean:
             _wap_publish(root, 6, 7, name)
-        # a rejected batch reports the snapshot it audited against —
-        # a published one the appended snapshot (v6 files + its own
-        # staged rows). The append arithmetic is only valid when v7
-        # really is THIS stage appended to v6: if a divergent v7
-        # already existed (crashed prior run, non-identical stage),
-        # _wap_publish early-returned and the honest number is the
-        # real snapshot count (ADVICE r14 #2; the manifest check is a
-        # tiny json read, so deterministic replays stay arithmetic).
+        # A candidate is published only if v7 really is THIS stage
+        # appended to v6: if another commit holds v7 (crashed prior
+        # run, non-identical stage, the other candidate),
+        # _wap_publish returned quietly. A published batch reports
+        # v6 + its own staged rows (the append arithmetic), a
+        # rejected one the snapshot it audited against, and a clean
+        # one that lost v7 the real v7 count.
+        published = clean and _published_stage(root, 7, name)
         visible = v6_count
         if published:
-            import glob as _glob
-            import json as _json
-
-            with open(os.path.join(root, "v7.json")) as fh:
-                m7 = _json.load(fh)
-            stage_files = sorted(
-                _glob.glob(os.path.join(root, f"stage_{name}", "*.parquet"))
-            )
-            if (
-                m7.get("appended") == stage_files
-                and m7.get("published_from_stage") == name
-            ):
-                visible = v6_count + n_staged
-            else:
-                visible = read_version(spark, root, 7).count()
+            visible = v6_count + n_staged
+        elif clean:
+            visible = read_version(spark, root, 7).count()
         rows.append((name, n_staged, v_null, v_dup, published, visible))
     return local_frame(
         spark,
@@ -1718,6 +1776,7 @@ def equality_delete_root(spark: SparkSession, sf_dir: str) -> str:
                 "delete_vectors": m6["delete_vectors"],
                 "equality_deletes": "eq8",
                 "deleted_from": 6,
+                "schema": m6["schema"],
             },
         )
     except CommitConflict:
@@ -1799,8 +1858,10 @@ def compact_equality_deletes(spark: SparkSession, sf_dir: str) -> str:
         return root
     with open(os.path.join(root, "v8.json")) as fh:
         m8 = json.load(fh)
-    eq = spark.read.parquet(os.path.join(root, m8["equality_deletes"]))
-    base = spark.read.parquet(*m8["files"]).select(
+    eq = read_written(
+        spark, _EQ_SCHEMA, os.path.join(root, m8["equality_deletes"])
+    )
+    base = read_written(spark, m8["schema"], *m8["files"]).select(
         "doc_id",
         F.col("_metadata.file_path").alias("file_path"),
         F.col("_metadata.row_index").alias("row_index"),
@@ -1809,8 +1870,8 @@ def compact_equality_deletes(spark: SparkSession, sf_dir: str) -> str:
     eq_pos = base.join(eq, "doc_id", "left_semi").select(
         "file_path", "row_index"
     )
-    dv_old = spark.read.parquet(
-        os.path.join(root, m8["delete_vectors"])
+    dv_old = read_written(
+        spark, _DV_SCHEMA, os.path.join(root, m8["delete_vectors"])
     )
     if not os.path.exists(os.path.join(root, "dv9", "_SUCCESS")):
         tmp = os.path.join(root, f"dv9.tmp.{_unique_suffix()}")
@@ -1832,6 +1893,7 @@ def compact_equality_deletes(spark: SparkSession, sf_dir: str) -> str:
                 "files": sorted(m8["files"]),
                 "delete_vectors": "dv9",
                 "compacted_deletes_from": 8,
+                "schema": m8["schema"],
             },
         )
     except CommitConflict:
@@ -2188,9 +2250,12 @@ def branch_commit(
             .first()[0]
         )
 
+    def _audit_stage() -> int:
+        return _audit(read_written(spark, staged.schema, stage_dir))
+
     if os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
         # replayed batch: audit the durable files, exactly as before
-        bad = _audit(spark.read.parquet(stage_dir))
+        bad = _audit_stage()
     else:
         # Round 15 (guide §2.6, VERDICT r14 next #5): the stage write
         # and the audit aggregation are independent jobs over the SAME
@@ -2201,7 +2266,7 @@ def branch_commit(
         # leaves the staged files exactly like the sequential form.
         from ..queries.llm import _overlap
 
-        def _write() -> None:
+        def _write() -> bool:
             # _unique_suffix, not PID-only: two driver threads (e.g.
             # foreachBatch) racing the same stage_name share a PID and
             # would rmtree each other's in-flight staging write.
@@ -2209,12 +2274,23 @@ def branch_commit(
             staged.coalesce(1).write.mode("overwrite").parquet(tmp)
             try:
                 os.rename(tmp, stage_dir)
+                return True
             except OSError:
                 import shutil
 
                 shutil.rmtree(tmp, ignore_errors=True)
+                return False
 
-        _, bad = _overlap(_write, lambda: _audit(staged))
+        renamed, bad = _overlap(_write, lambda: _audit(staged))
+        if not renamed:
+            # Lost the rename: stage_dir holds another writer's files,
+            # which the overlapped audit never saw. They are what the
+            # manifest commits, so audit them.
+            if not os.path.isdir(stage_dir):
+                raise RuntimeError(
+                    f"branch WAP stage {stage_name!r} was not written"
+                )
+            bad = _audit_stage()
     if bad:
         raise RuntimeError(
             f"branch WAP audit failed for {stage_name!r}: {bad} violations"
@@ -2229,7 +2305,7 @@ def branch_commit(
         "parent": parent,
         "branch": branch,
     }
-    for carry in ("delete_vectors", "equality_deletes"):
+    for carry in _CARRIED:
         if prev.get(carry):
             payload[carry] = prev[carry]
     try:
@@ -2310,7 +2386,7 @@ def cherry_pick(
             f"v{version} is not an append commit: cannot cherry-pick"
         )
     target = read_version(spark, root, cur)
-    picked = spark.read.parquet(*appended)
+    picked = read_written(spark, src["schema"], *appended)
     dup = picked.join(target.select("doc_id"), "doc_id", "left_semi").count()
     if dup:
         raise RuntimeError(
@@ -2326,7 +2402,7 @@ def cherry_pick(
         "parent": cur,
         "cherry_picked_from": version,
     }
-    for carry in ("delete_vectors", "equality_deletes"):
+    for carry in _CARRIED:
         if prev.get(carry):
             payload[carry] = prev[carry]
     try:
@@ -3034,7 +3110,9 @@ _COMPOSED_KEY = 1  # suppkey present at every sf, uncorrelated with layout
 def composed_skip_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict, int]:
     """Write lineitem range-clustered on l_orderkey once per
     (session, sf_dir) with a manifest holding per-file zonemaps AND a
-    per-file Bloom bitmap index over l_suppkey.
+    per-file Bloom bitmap index over l_suppkey. ``schema.json`` records
+    the schemas of the data and Bloom tables, which every read of
+    them uses (:func:`composed_schema`).
 
     Scale: the layout + zonemap half is exactly zonemap_lineitem_root;
     the Bloom half is a distributed parquet index table (file, bit) —
@@ -3052,14 +3130,14 @@ def composed_skip_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict, int
                 return root, _json.load(fh), int(m)
     root = tempfile.mkdtemp(prefix="sink_composed_skip_")
     data = os.path.join(root, "data")
+    lineitem = spark.table("lineitem")
     (
-        spark.table("lineitem")
-        .repartitionByRange(_ZONEMAP_FILES, "l_orderkey")
+        lineitem.repartitionByRange(_ZONEMAP_FILES, "l_orderkey")
         .sortWithinPartitions("l_orderkey")
         .write.mode("overwrite")
         .parquet(data)
     )
-    by_file = spark.read.parquet(data).select(
+    by_file = read_written(spark, lineitem.schema, data).select(
         F.input_file_name().alias("f"), "l_orderkey", "l_suppkey"
     )
     stats = (
@@ -3097,8 +3175,25 @@ def composed_skip_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict, int
     bits.repartition(1).write.mode("overwrite").parquet(
         os.path.join(root, "bloom")
     )
+    with open(os.path.join(root, "schema.json"), "w") as fh:
+        _json.dump(
+            {
+                "data": lineitem.schema.jsonValue(),
+                "bloom": bits.schema.jsonValue(),
+            },
+            fh,
+        )
     spark.conf.set(key, f"{root}|{m}")
     return root, manifest, m
+
+
+def composed_schema(root: str, table: str) -> dict:
+    """The recorded schema of the composed index's ``data`` or
+    ``bloom`` table."""
+    import json as _json
+
+    with open(os.path.join(root, "schema.json")) as fh:
+        return _json.load(fh)[table]
 
 
 def composed_skip_files(
@@ -3121,7 +3216,9 @@ def composed_skip_files(
     if not range_files:
         return [], []
     probes = sorted(set(_bloom_bits_py(point_key, m)))
-    idx = spark.read.parquet(os.path.join(root, "bloom"))
+    idx = read_written(
+        spark, composed_schema(root, "bloom"), os.path.join(root, "bloom")
+    )
     rows = (
         idx.filter(
             F.regexp_replace(F.col("f"), "^file://", "").isin(range_files)
@@ -3179,14 +3276,9 @@ def sink_skipping_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, files = composed_skip_files(
         spark, root, manifest, m, _ZONEMAP_LO, _ZONEMAP_HI, _COMPOSED_KEY
     )
-    if not files:
-        # Every file pruned: aggregate over an empty, zero-read scan.
-        files = sorted(manifest)[:1]
-        return _composed_agg(
-            spark.read.parquet(*files).filter(F.lit(False))
-        )
+    # every file pruned: no paths reads as an empty, zero-read scan
     return _composed_agg(
-        spark.read.parquet(*files).filter(
+        read_written(spark, composed_schema(root, "data"), *files).filter(
             F.col("l_orderkey").between(_ZONEMAP_LO, _ZONEMAP_HI)
             & (F.col("l_suppkey") == _COMPOSED_KEY)
         )

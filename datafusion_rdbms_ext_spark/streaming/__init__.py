@@ -858,9 +858,8 @@ def versioned_stream_commit(root: str, batch_df: DataFrame, batch_id: int) -> No
     # loser's directory is deleted, the winner's is the one the
     # manifest references.
     gen_dir = os.path.join(root, f"gen{version}_{uuid.uuid4().hex[:8]}")
-    batch_df.select("event_id", "event_type").write.mode("overwrite").parquet(
-        gen_dir
-    )
+    rows = batch_df.select("event_id", "event_type")
+    rows.write.mode("overwrite").parquet(gen_dir)
     files = sorted(_glob.glob(os.path.join(gen_dir, "*.parquet")))
     if version > 1:
         with open(os.path.join(root, f"v{version - 1}.json")) as fh:
@@ -869,7 +868,13 @@ def versioned_stream_commit(root: str, batch_df: DataFrame, batch_id: int) -> No
         prev = []
     try:
         _write_manifest(
-            root, version, {"version": version, "files": prev + files}
+            root,
+            version,
+            {
+                "version": version,
+                "files": prev + files,
+                "schema": rows.schema.jsonValue(),
+            },
         )
     except CommitConflict:
         # Lost a commit race for this version: the durable manifest
@@ -907,6 +912,8 @@ def stream_versioned_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import tempfile
 
+    from ..sources.sinks import read_written
+
     root = tempfile.mkdtemp(prefix="stream_versioned_")
 
     _RUN_SEQ[0] += 1
@@ -926,8 +933,8 @@ def stream_versioned_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         for p in _glob.glob(os.path.join(root, "v*.json"))
     )
     with open(os.path.join(root, f"v{latest}.json")) as fh:
-        files = json.load(fh)["files"]
-    snap = spark.read.parquet(*files)
+        manifest = json.load(fh)
+    snap = read_written(spark, manifest["schema"], *manifest["files"])
     return (
         snap.groupBy("event_type")
         .agg(
@@ -1816,7 +1823,11 @@ def stream_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
 
     files = sorted(_glob.glob(os.path.join(base_dir, "*.parquet")))
-    _write_manifest(root, 1, {"version": 1, "files": files})
+    _write_manifest(
+        root,
+        1,
+        {"version": 1, "files": files, "schema": base.schema.jsonValue()},
+    )
     branch_init(root, "main", 1)
     branch_init(root, "ingest", 1)
 

@@ -9,6 +9,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import types as T
 
 from datafusion_rdbms_ext_spark.sources.sinks import (
     CommitConflict,
@@ -21,6 +22,14 @@ from datafusion_rdbms_ext_spark.sources.sinks import (
     read_branch,
     vacuum,
 )
+
+#: the schema every hand-written manifest here records (tiny_root's)
+DOCS = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+    ]
+).jsonValue()
 
 
 @pytest.fixture()
@@ -39,7 +48,7 @@ def tiny_root(spark, tmp_path):
     files = sorted(
         glob.glob(os.path.join(root, "gen1", "bucket=0", "*.parquet"))
     )
-    _write_manifest(root, 1, {"version": 1, "files": files})
+    _write_manifest(root, 1, {"version": 1, "files": files, "schema": DOCS})
     return root
 
 
@@ -69,8 +78,10 @@ def test_branch_write_invisible_until_merge(spark, tiny_root):
 def test_branch_cas_exactly_one_winner(tiny_root):
     root = tiny_root
     branch_init(root, "b", 1)
-    _write_manifest(root, 2, {"version": 2, "files": [], "parent": 1})
-    _write_manifest(root, 3, {"version": 3, "files": [], "parent": 1})
+    for v in (2, 3):
+        _write_manifest(
+            root, v, {"version": v, "files": [], "parent": 1, "schema": DOCS}
+        )
     branch_advance(root, "b", 1, 2)  # winner
     with pytest.raises(CommitConflict):
         branch_advance(root, "b", 1, 3)  # stale expect: loser
@@ -109,6 +120,7 @@ def test_fast_forward_rejects_divergence(spark, tiny_root):
         {
             "version": 3,
             "files": json.load(open(os.path.join(root, "v1.json")))["files"],
+            "schema": DOCS,
         },
     )
     branch_advance(root, "main", 1, 3)
@@ -145,7 +157,9 @@ def test_vacuum_retains_branch_heads(spark, tiny_root):
     g2 = sorted(glob.glob(os.path.join(root, "gen2", "bucket=0", "*.parquet")))
     v1_files = json.load(open(os.path.join(root, "v1.json")))["files"]
     _write_manifest(
-        root, 2, {"version": 2, "files": v1_files + g2, "parent": 1}
+        root,
+        2,
+        {"version": 2, "files": v1_files + g2, "parent": 1, "schema": DOCS},
     )
     branch_init(root, "pinner", 2)
     deleted = vacuum(root, keep=1)
@@ -219,7 +233,9 @@ def test_cherry_pick_semantics(spark, tiny_root):
     with pytest.raises(RuntimeError, match="audit failed"):
         cherry_pick(spark, root, "main", 2, 5)
     # a non-append manifest is refused
-    _write_manifest(root, 6, {"version": 6, "files": [], "parent": 4})
+    _write_manifest(
+        root, 6, {"version": 6, "files": [], "parent": 4, "schema": DOCS}
+    )
     with pytest.raises(CommitConflict, match="not an append commit"):
         cherry_pick(spark, root, "main", 6, 7)
 
@@ -233,7 +249,9 @@ def test_branch_cas_true_thread_race(tiny_root):
     root = tiny_root
     branch_init(root, "b", 1)
     for v in range(2, 10):
-        _write_manifest(root, v, {"version": v, "files": [], "parent": 1})
+        _write_manifest(
+            root, v, {"version": v, "files": [], "parent": 1, "schema": DOCS}
+        )
 
     def racer(v):
         try:
@@ -248,3 +266,67 @@ def test_branch_cas_true_thread_race(tiny_root):
     assert len(wins) == 1, results
     head = branch_head(root, "b")
     assert head == (wins[0], 2)
+
+
+def test_branch_commit_audits_the_stage_it_lost_the_rename_to(
+    spark, tiny_root
+):
+    """The fresh path audits the batch lineage while the
+    stage is written. When another writer's stage_<name> got there
+    first, the rename loses and the manifest would commit files that
+    audit never saw; they are audited instead, so a NULL text in them
+    fails the commit."""
+    root = tiny_root
+    branch_init(root, "dev", 1)
+    stage = os.path.join(root, "stage_t_lost")
+    spark.createDataFrame(
+        [(900, None)], "doc_id long, text string"
+    ).coalesce(1).write.parquet(stage)
+    os.remove(os.path.join(stage, "_SUCCESS"))  # unfinished: no replay
+    clean = spark.createDataFrame([(901, "clean")], "doc_id long, text string")
+    with pytest.raises(RuntimeError, match="audit failed"):
+        branch_commit(spark, root, "dev", clean, "t_lost", 2)
+    assert branch_head(root, "dev") == (1, 1)
+    assert not os.path.exists(os.path.join(root, "v2.json"))
+
+
+def test_branch_commit_lost_rename_without_a_stage_raises(
+    spark, tiny_root, monkeypatch
+):
+    """A rename that fails with no stage_<name> left behind commits
+    nothing: there are no files to audit or to append."""
+    root = tiny_root
+    branch_init(root, "dev", 1)
+    rename = os.rename
+
+    def lose(src, dst):
+        if os.path.basename(dst) == "stage_t_gone":
+            raise OSError("rename lost")
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", lose)
+    clean = spark.createDataFrame([(902, "clean")], "doc_id long, text string")
+    with pytest.raises(RuntimeError, match="was not written"):
+        branch_commit(spark, root, "dev", clean, "t_gone", 2)
+    assert branch_head(root, "dev") == (1, 1)
+    assert not os.path.exists(os.path.join(root, "v2.json"))
+
+
+def test_wap_attempt_reports_a_lost_publish(spark, tiny_root):
+    """A clean candidate whose target version another
+    commit already holds is not published, and its report says so."""
+    from datafusion_rdbms_ext_spark.sources.sinks import (
+        read_version,
+        wap_attempt,
+    )
+
+    root = tiny_root
+    v1 = json.load(open(os.path.join(root, "v1.json")))
+    _write_manifest(root, 2, dict(v1, version=2))  # a divergent v2
+    batch = spark.createDataFrame([(600, "late")], "doc_id long, text string")
+    rep = wap_attempt(spark, root, 1, 2, batch, "t_late")
+    assert (rep["null_violations"], rep["key_collisions"]) == (0, 0)
+    assert rep["published"] is False
+    # the same stage published to a free version does report it
+    assert wap_attempt(spark, root, 1, 3, batch, "t_late")["published"]
+    assert read_version(spark, root, 3).count() == 5

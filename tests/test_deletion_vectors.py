@@ -235,3 +235,38 @@ def test_cdf_consumer_restart_resumes_at_frontier(spark):
     assert resumed == final
     again, applied2 = cdf_consume(spark, SF_DIR)
     assert applied2 == 0 and again == final
+
+
+def test_wap_publish_reports_a_lost_v7(spark):
+    """When v7 is already held by a different commit, the
+    clean candidate is not published and its row says so; visible_docs
+    is the real v7 count. Runs on a private v1-v6 chain so the shared
+    corpus keeps its own v7."""
+    from datafusion_rdbms_ext_spark.sources.sinks import (
+        _VERSIONED_DIR_CONF,
+        _write_manifest,
+        mor_update_root,
+        sink_wap_publish,
+    )
+
+    ensure_tables(spark, SF_DIR)
+    key = f"{_VERSIONED_DIR_CONF}.{abs(hash(SF_DIR))}"
+    shared = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        root = mor_update_root(spark, SF_DIR)
+        assert root != shared
+        m6 = _manifest(root, 6)
+        _write_manifest(root, 7, dict(m6, version=7, appended=[]))
+        out = sink_wap_publish(spark, SF_DIR).collect()
+        rows = {r["candidate"]: r for r in out}
+    finally:
+        if shared is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, shared)
+    good = rows["good"]
+    assert (good["null_violations"], good["key_collisions"]) == (0, 0)
+    assert good["published"] is False
+    assert good["visible_docs"] == read_version(spark, root, 6).count()
+    assert rows["bad"]["published"] is False

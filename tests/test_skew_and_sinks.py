@@ -247,9 +247,14 @@ def test_manifest_commit_is_exclusive(tmp_path):
     )
 
     root = str(tmp_path)
-    _write_manifest(root, 7, {"version": 7, "files": ["a.parquet"]})
+    schema = {"type": "struct", "fields": []}
+    _write_manifest(
+        root, 7, {"version": 7, "files": ["a.parquet"], "schema": schema}
+    )
     with pytest.raises(CommitConflict):
-        _write_manifest(root, 7, {"version": 7, "files": ["b.parquet"]})
+        _write_manifest(
+            root, 7, {"version": 7, "files": ["b.parquet"], "schema": schema}
+        )
     m = json.load(open(os.path.join(root, "v7.json")))
     assert m["files"] == ["a.parquet"]
     assert not [f for f in os.listdir(root) if ".tmp." in f], "temp leak"
