@@ -36,22 +36,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _fixtures_fingerprint() -> str:
-    """size+mtime digest of the fixture parquet (same construction as
-    scripts/scale_probe.py): identifies the fixture GENERATION a bench
-    run measured, so claim folds can refuse cross-generation merges."""
-    import hashlib
+    """size+mtime digest of the fixture parquet: identifies the
+    fixture GENERATION a bench run measured, so claim folds can refuse
+    cross-generation merges."""
+    from datafusion_rdbms_ext_spark.catalog import fixture_fingerprint
 
-    from datafusion_rdbms_ext_spark.catalog import TABLES
-
-    parts = []
-    for name in TABLES:
-        p = os.path.join(SF_DIR, f"{name}.parquet")
-        try:
-            st = os.stat(p)
-            parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            parts.append(f"{name}:absent")
-    return hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
+    return fixture_fingerprint(SF_DIR)
 
 
 def _force(df) -> None:

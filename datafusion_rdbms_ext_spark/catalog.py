@@ -18,6 +18,7 @@ are unambiguous, so names flatten to 1-part temp views (SURVEY.md §7
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +51,22 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def fixture_fingerprint(sf_dir: str, tables: tuple[str, ...] = TABLES) -> str:
+    """Cheap content fingerprint of ``tables``' parquet under
+    ``sf_dir``: size + mtime_ns per file, no data read. A regenerated
+    fixture moves it even at equal row counts, so every memo keyed on
+    it (the DuckDB catalog, the live Postgres load, the bench's
+    fixture generation) invalidates itself."""
+    parts = []
+    for name in tables:
+        try:
+            st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
+            parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
+        except OSError:
+            parts.append(f"{name}:absent")
+    return hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
 
 
 def register_tables(

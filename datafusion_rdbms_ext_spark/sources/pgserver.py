@@ -18,6 +18,7 @@ import os
 import socket
 import subprocess
 
+from ..catalog import fixture_fingerprint
 from .pgwire import PgWireClient
 
 PG_PORT = 54329
@@ -103,24 +104,15 @@ def ensure_pg_server() -> dict:
 
 
 def _fixture_fingerprint(sf_dir: str) -> str:
-    """Cheap content fingerprint of the source parquet files (size +
-    mtime_ns per file — no data read). Folded into both the session
-    memo and the server-side marker so a REGENERATED fixture with
-    equal row counts still reloads (ADVICE r9 #2: the count-only
-    check left stale values in the live schema and the differential
-    gate then compared new-fixture Spark against old-fixture
-    Postgres)."""
-    parts = []
-    for name in ("nation", "region", "supplier", "customer", "events"):
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        try:
-            st = os.stat(p)
-            parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            parts.append(f"{name}:absent")
-    import hashlib
-
-    return hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
+    """Fingerprint of the source parquet the server loads. Folded into
+    both the session memo and the server-side marker so a REGENERATED
+    fixture with equal row counts still reloads (ADVICE r9 #2: the
+    count-only check left stale values in the live schema and the
+    differential gate then compared new-fixture Spark against
+    old-fixture Postgres)."""
+    return fixture_fingerprint(
+        sf_dir, ("nation", "region", "supplier", "customer", "events")
+    )
 
 
 def _memo_key(sf_dir: str) -> str:

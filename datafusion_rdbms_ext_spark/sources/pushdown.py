@@ -1077,47 +1077,23 @@ def transparent_semijoin(
 from pyspark.sql import functions as F  # noqa: E402
 
 from ..queries.base import register  # noqa: E402
-from .pyds import register_fed_sources  # noqa: E402
+from .pyds import fed_table  # noqa: E402
 
 
 def _fed_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    register_fed_sources(spark)
-    return (
-        spark.read.format("duckdb_fed")
-        .option("sf_dir", sf_dir)
-        .option("table", table)
-        .load()
-    )
+    return fed_table(spark, "duckdb_fed", table, sf_dir=sf_dir)
 
 
 def _sqlite_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    register_fed_sources(spark)
-    return (
-        spark.read.format("sqlite_fed")
-        .option("sf_dir", sf_dir)
-        .option("table", table)
-        .load()
-    )
+    return fed_table(spark, "sqlite_fed", table, sf_dir=sf_dir)
 
 
 def _pgwire_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """The LIVE-Postgres DSv2 mount (boots the server and loads the
     fixture first — idempotent, memoized per (session, sf_dir))."""
-    from .federation import _pg_connector
-    from .pgserver import PG_PORT, PG_USER, schema_for
+    from .federation import _pg_options
 
-    _pg_connector(spark, sf_dir)
-    register_fed_sources(spark)
-    return (
-        spark.read.format("pgwire_fed")
-        .option("host", "127.0.0.1")
-        .option("port", PG_PORT)
-        .option("user", PG_USER)
-        .option("database", "postgres")
-        .option("search_path", schema_for(sf_dir))
-        .option("table", table)
-        .load()
-    )
+    return fed_table(spark, "pgwire_fed", table, **_pg_options(spark, sf_dir))
 
 
 def _prepare_pg_pd(spark: SparkSession, sf_dir: str) -> None:

@@ -12,7 +12,10 @@ only declares its name, and ``connector.FORMATS`` maps the name to
 the Connector that does the dialect work:
 
 * ``schema()``        — the connector's catalog bootstrap
-                        (mod.rs:67-125)
+                        (mod.rs:67-125), for loads that give no
+                        schema; the package's own loads go through
+                        :func:`fed_table`, which reads the catalog on
+                        the driver and passes it
 * ``pushFilters()``   — the Exact/Unsupported filter classifier
                         (table_provider.rs:241-306): supported
                         comparisons compile into the remote WHERE
@@ -228,7 +231,8 @@ class FederatedReader(DataSourceReader):
 
 
 def register_fed_sources(spark) -> None:
-    """Idempotently register every federated format with the session.
+    """Register every federated format the session does not know yet
+    (re-registering replaces the source and logs a WARN per format).
 
     Spark 4 hard-fails planning a DataSourceReader that implements
     ``pushFilters`` when ``spark.sql.python.filterPushdown.enabled``
@@ -238,8 +242,24 @@ def register_fed_sources(spark) -> None:
     so registration sets it too — a runtime-settable conf, a no-op
     when already on."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    known = spark._jsparkSession.sessionState().dataSourceManager()
     for source in (DuckDBFederatedSource, SQLiteFederatedSource, PgWireFederatedSource):
-        spark.dataSource.register(source)
+        if not known.dataSourceExists(source.name()):
+            spark.dataSource.register(source)
+
+
+def fed_table(spark: SparkSession, fmt: str, table: str, **options) -> DataFrame:
+    """Load ``table`` from the remote that ``fmt`` and ``options``
+    name — the package's one federated load.
+
+    The schema comes from the connector's catalog on the driver and is
+    handed to the reader, so the JVM never asks a Python planner
+    worker for it (``FederatedSource.schema`` serves loads that give
+    none). The relation's options are unchanged: the unparser and the
+    reader rebuild the same connector from them."""
+    register_fed_sources(spark)
+    schema = connector_for(fmt, options).catalog()[table]
+    return spark.read.format(fmt).schema(schema).options(table=table, **options).load()
 
 
 # ---------------------------------------------------------------------------
@@ -269,14 +289,7 @@ from ..queries.base import register  # noqa: E402
     tags=("federation",),
 )
 def fed_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_fed_sources(spark)
-    orders = (
-        spark.read.format("duckdb_fed")
-        .option("sf_dir", sf_dir)
-        .option("table", "orders")
-        .option("partitions", 4)
-        .load()
-    )
+    orders = fed_table(spark, "duckdb_fed", "orders", sf_dir=sf_dir, partitions=4)
     return (
         orders.filter((F.col("o_totalprice") > 300000.0) & (F.col("o_orderstatus") == "F"))
         .groupBy("o_orderpriority")
@@ -302,10 +315,12 @@ def fed_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="LIVE Postgres mounted as a first-class Spark format "
     "(spark.read.format('pgwire_fed'), round 10): schema from the "
-    "live information_schema bootstrap, both filters consumed by "
-    "pushFilters into the remote WHERE, 4 percentile_disc key-range "
-    "partitions each streaming its own binary-COPY decode inside a "
-    "Spark task — the reference's PostgresTableProvider "
+    "live information_schema bootstrap, read on the driver, both "
+    "filters consumed by pushFilters into the remote WHERE, 4 "
+    "percentile_disc key-range partitions each fetching its slice "
+    "inside a Spark task as a CSV COPY parsed by Arrow (the "
+    "text-protocol fetch for column types Arrow's CSV reader cannot "
+    "parse) — the reference's PostgresTableProvider "
     "(table_provider.rs:26-238) occupied by its actual backend as a "
     "DataSource, completing the format trio (duckdb_fed, "
     "sqlite_fed, pgwire_fed). Distinct-key count pins no slice "
@@ -318,23 +333,12 @@ def fed_postgres_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the plan is the Spark-JDBC shape — one metadata query
     plans N disjoint key ranges, each task holds one COPY stream;
     pushed filters mean only qualifying rows cross the wire, and
-    the per-OID binary decode is column-type-driven exactly like
-    binary_reader.rs."""
-    from .federation import _pg_connector
-    from .pgserver import PG_PORT, PG_USER, schema_for
+    the decode is typed by the catalog schema
+    (``PostgresConnector.fetch_arrow``)."""
+    from .federation import _pg_options
 
-    _pg_connector(spark, sf_dir)  # boot + load fixture
-    register_fed_sources(spark)
-    cust = (
-        spark.read.format("pgwire_fed")
-        .option("host", "127.0.0.1")
-        .option("port", PG_PORT)
-        .option("user", PG_USER)
-        .option("database", "postgres")
-        .option("search_path", schema_for(sf_dir))
-        .option("table", "customer")
-        .option("partitions", 4)
-        .load()
+    cust = fed_table(
+        spark, "pgwire_fed", "customer", partitions=4, **_pg_options(spark, sf_dir)
     )
     return (
         cust.filter((F.col("c_acctbal") > 3000.0) & (F.col("c_nationkey") < 20))

@@ -302,19 +302,9 @@ def _src_fingerprint() -> str:
     REGENERATES them between rounds (round-10 finding — the r8 bench
     deltas were a fixture-generation change), so a cached synthesis
     from a prior generation must not serve a new round's probe."""
-    import hashlib
+    from datafusion_rdbms_ext_spark.catalog import fixture_fingerprint
 
-    from datafusion_rdbms_ext_spark.catalog import TABLES
-
-    parts = []
-    for name in TABLES:
-        p = os.path.join(SRC, f"{name}.parquet")
-        try:
-            st = os.stat(p)
-            parts.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-        except OSError:
-            parts.append(f"{name}:absent")
-    return hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
+    return fixture_fingerprint(SRC)
 
 
 def synthesize(spark) -> None:

@@ -89,21 +89,9 @@ def _fed_options(spark, fmt: str) -> dict:
     is booted and loaded first for pgwire_fed)."""
     if fmt != "pgwire_fed":
         return {"sf_dir": SF_DIR}
-    from datafusion_rdbms_ext_spark.sources.federation import _pg_connector
-    from datafusion_rdbms_ext_spark.sources.pgserver import (
-        PG_PORT,
-        PG_USER,
-        schema_for,
-    )
+    from datafusion_rdbms_ext_spark.sources.federation import _pg_options
 
-    _pg_connector(spark, SF_DIR)
-    return {
-        "host": "127.0.0.1",
-        "port": str(PG_PORT),
-        "user": PG_USER,
-        "database": "postgres",
-        "search_path": schema_for(SF_DIR),
-    }
+    return _pg_options(spark, SF_DIR)
 
 
 @pytest.mark.parametrize("fmt", ["duckdb_fed", "sqlite_fed", "pgwire_fed"])

@@ -503,21 +503,29 @@ def test_bucketed_join_query_is_exchange_free_below_agg(spark):
     assert count_exchanges(j) == 0
 
 
-def test_substring_dedup_no_cartesian_and_hashed_keys(spark):
+def test_substring_dedup_no_cartesian_and_hashed_keys(spark, monkeypatch):
     """The 10-gram inverted index must self-join on 8-byte hashes with
     no cartesian anywhere — same contract as the 3-gram index."""
-    df = _df(spark, "llm_dedup_substring")
-    assert not has_cartesian(df)
-    p = plan_string(df)
     # Round 15: the df-capped posting table is localCheckpointed (the
     # ngram_exact r7 move), so the map-side xxhash64 lives inside the
-    # checkpointed subtree. The contract — no W-gram STRING ever
-    # crosses a shuffle — then shows in the final plan as the pair
-    # join reading ONLY the materialized (doc_id, h) long table, with
-    # no parquet scan left to smuggle strings in.
-    assert "xxhash64" in p or (
-        "ExistingRDD" in p and "Scan parquet" not in p
-    ), "W-grams must be hashed map-side (in-plan or behind the checkpoint)"
+    # checkpointed subtree: check the plan of the frame handed to
+    # localCheckpoint, before the checkpoint hides its lineage.
+    checkpointed = []
+    frame = type(spark.range(1))
+    real = frame.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        checkpointed.append(plan_string(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", capture)
+    df = _df(spark, "llm_dedup_substring")
+    assert not has_cartesian(df)
+    assert len(checkpointed) == 1
+    assert "xxhash64" in checkpointed[0], (
+        "W-grams must be hashed map-side, before the posting table is "
+        "checkpointed"
+    )
 
 
 def test_cms_counters_broadcast_to_audit_join(spark):
