@@ -1165,13 +1165,19 @@ def _l2q(a, b) -> Column:
     )
 
 
-#: Cap on centroid VALUES (rows * dim) carried as a driver-side list /
-#: folded plan literal. Centroid state is metadata the broadcast path
-#: already collects to the driver in full (BroadcastExchange ships the
-#: whole relation through the driver), so holding it as Python ints is
-#: byte-equivalent driver pressure — the cap only bounds the PLAN
-#: literal size (64k longs = 512 KB). Above it (self-scaling K at
-#: 100 TB) every helper falls back to the distributed broadcast chain.
+#: Cap on centroid VALUES (prefixes * k * dim) a trainer keeps on the
+#: driver and folds into plans as ONE SQL-text map literal
+#: (:func:`_cs_map_literal`). Centroid state is metadata the broadcast
+#: path already ships through the driver, so the cap bounds PLANNING
+#: cost, not driver memory. Measured at the cap (k=1024, dim=64 —
+#: 65,536 values — assigning 2,000 quantized vectors, 4 vCPUs): the
+#: SQL-text literal builds in 0.05 s and analyzes+optimizes+plans in
+#: 2.2 s; the same literal built with the Column API
+#: (F.array/F.struct/F.lit) takes 135 s to build and 3.7 s to plan;
+#: the assignment itself executes in 26 s either way. Planning is a
+#: small share of the work at the cap, and the Column API loses.
+#: Above the cap (self-scaling K at 100 TB) :func:`_train_keyed` runs
+#: the distributed broadcast chain.
 _CENT_LOCAL_MAX = 1 << 16
 
 _CS_TYPE = "array<struct<cid:int,cemb:array<bigint>>>"
@@ -1181,26 +1187,24 @@ def _sql_cemb(emb) -> str:
     return "array(" + ",".join(f"{int(v)}L" for v in emb) + ")"
 
 
-def _cs_literal(rows) -> Column:
-    """The sorted (cid, cemb) struct array as ONE foldable literal
-    expression — the driver-local twin of the broadcast one-row
-    ``collect_list`` aggregate (ConstantFolding collapses it to a
-    single Literal before codegen, so per-row cost is identical to
-    reading the broadcast array)."""
-    items = ",".join(
-        f"named_struct('cid',{int(cid)},'cemb',{_sql_cemb(emb)})"
-        for cid, emb in rows
-    )
-    return F.expr(f"CAST(array({items}) AS {_CS_TYPE})")
+def _one_prefix(vecs: DataFrame) -> DataFrame:
+    """``vecs`` under one constant prefix ``cell``: flat k-means is
+    the keyed chain at one prefix. Against driver-local centroids the
+    map-literal probe on the constant key folds to the plain centroid
+    array literal — no ``element_at``, Filter or Join survives
+    optimization (tests/test_round15_opt.py)."""
+    return vecs.withColumn("cell", F.lit(0))
 
 
-def _local_cents_df(spark: SparkSession, rows) -> DataFrame:
-    """(cid, cemb) DataFrame built from driver-held centroid rows,
-    tagged with ``_local_cents`` so the assignment/probe helpers take
-    the literal fast path (zero jobs to re-ship the centroids)."""
-    data = [(int(c), [int(v) for v in e]) for c, e in rows]
-    df = local_frame(spark, data, "cid int, cemb array<bigint>")
-    df._local_cents = data
+def _local_keyed_df(spark: SparkSession, rows, cell_type: str) -> DataFrame:
+    """(cell, cid, cemb) DataFrame from driver-held centroid rows,
+    tagged with ``_local_keyed_cents`` so assignment and probing fold
+    them into the plan as one map literal (no job re-ships them)."""
+    data = [
+        (c, int(cid), [int(v) for v in e]) for c, cid, e in rows
+    ]
+    df = local_frame(spark, data, f"cell {cell_type}, cid int, cemb array<bigint>")
+    df._local_keyed_cents = data
     return df
 
 
@@ -1208,45 +1212,96 @@ def _ckpt_unless_local(cents: DataFrame) -> DataFrame:
     """localCheckpoint for distributed centroid frames; a no-op for
     driver-local ones (already materialized — a checkpoint would only
     add a job AND strip the fast-path tag)."""
-    if getattr(cents, "_local_cents", None) is not None:
-        return cents
     if getattr(cents, "_local_keyed_cents", None) is not None:
         return cents
     return cents.localCheckpoint()
 
 
-def _with_cents_cs(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """``vecs`` plus a ``cs`` column holding the full sorted
-    (cid, cemb) centroid array: a folded literal when the centroids
-    are driver-local (no job), else the broadcast one-row aggregate."""
-    local = getattr(cents, "_local_cents", None)
-    if local:
-        return vecs.withColumn("cs", _cs_literal(local))
-    cents_arr = cents.agg(
+def _cents_arr_keyed(cents: DataFrame) -> DataFrame:
+    """(cell, cs): each prefix's sorted (cid, cemb) struct array —
+    the broadcast side of distributed assignment (one row per prefix
+    of b structs; centroid metadata, never data-sized)."""
+    return cents.groupBy("cell").agg(
         F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("cs")
     )
-    return vecs.crossJoin(F.broadcast(cents_arr))
 
 
-def _assign_cells(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment, fully MAP-SIDE: the K centroids
-    collapse to one broadcast array-of-structs row (or a folded plan
-    literal when driver-local), and each vector picks argmin(dist,
-    cid) with array_min — no shuffle, no N*K row blowup. This is the
-    distributed-k-means assignment step done the scalable way (a
-    crossJoin+groupBy(vec) formulation would shuffle N*K rows per
-    iteration)."""
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                _l2q(F.col("eq"), c.getField("cemb")).alias("dist"),
-                c.getField("cid").alias("cid"),
-            ),
+def _cs_map_literal(rows) -> Column:
+    """cell -> sorted (cid, cemb) struct array as ONE foldable map
+    literal — the driver-local twin of broadcasting
+    :func:`_cents_arr_keyed` (BIGINT keys; callers probe with
+    ``element_at(map, cell.cast("long"))``)."""
+    by_cell: dict = {}
+    for cell, cid, emb in rows:
+        by_cell.setdefault(int(cell), []).append((int(cid), emb))
+    entries = ",".join(
+        f"{cell}L,CAST(array("
+        + ",".join(
+            f"named_struct('cid',{cid},'cemb',{_sql_cemb(emb)})"
+            for cid, emb in sorted(cs)
         )
+        + f") AS {_CS_TYPE})"
+        for cell, cs in sorted(by_cell.items())
     )
-    return _with_cents_cs(vecs, cents).select(
-        "vec_id", "eq", best.getField("cid").alias("cid")
+    return F.expr(f"map({entries})")
+
+
+def _with_cents_cs_keyed(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """``vecs`` plus its own cell's ``cs`` centroid array, with inner
+    -join semantics (vectors whose cell trained no centroids drop
+    out): a folded map-literal probe when the keyed centroids are
+    driver-local (no job, no join), else the broadcast equi-join on
+    ``cell``."""
+    local = getattr(cents, "_local_keyed_cents", None)
+    if local:
+        return vecs.withColumn(
+            "cs", F.element_at(_cs_map_literal(local), F.col("cell").cast("long"))
+        ).filter(F.col("cs").isNotNull())
+    # cents_arr: per-cell centroid arrays — metadata-sized (see
+    # _cents_arr_keyed), the whitelisted bounded-cardinality broadcast
+    cents_arr = _cents_arr_keyed(cents)
+    return vecs.join(F.broadcast(cents_arr), "cell")
+
+
+def _cent_dists() -> Column:
+    """(dist, cid) from the row's ``eq`` to every centroid of its
+    ``cs`` array: the exact integer squared-L2 that assignment,
+    probing and the beam walk all rank by, ties broken by cid."""
+    return F.transform(
+        F.col("cs"),
+        lambda c: F.struct(
+            _l2q(F.col("eq"), c.getField("cemb")).alias("dist"),
+            c.getField("cid").alias("cid"),
+        ),
+    )
+
+
+def _assign_keyed(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment within each vector's prefix, fully
+    MAP-SIDE: vecs (cell, vec_id, eq) meet their prefix's sorted
+    centroid array (a folded literal when driver-local, else a
+    broadcast join) and take argmin(dist, cid) with array_min — no
+    shuffle, no N*K row blowup (a crossJoin+groupBy(vec) formulation
+    would shuffle N*K rows per iteration)."""
+    return _with_cents_cs_keyed(vecs, cents).select(
+        "cell",
+        "vec_id",
+        "eq",
+        F.array_min(_cent_dists()).getField("cid").alias("cid"),
+    )
+
+
+def _probe_keyed(vecs: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(vec_id, cell, subcell): each vector's ``nprobe`` nearest
+    centroids WITHIN its own prefix — the IVF search-time recall
+    knob. Same map-side shape as :func:`_assign_keyed`, keeping the
+    first ``nprobe`` of the (dist, cid)-sorted array instead of the
+    argmin."""
+    ranked = F.slice(F.array_sort(_cent_dists()), 1, nprobe)
+    return (
+        _with_cents_cs_keyed(vecs, cents)
+        .select("cell", "vec_id", F.explode(ranked).alias("p"))
+        .select("vec_id", "cell", F.col("p.cid").alias("subcell"))
     )
 
 
@@ -1269,10 +1324,22 @@ _INT_MEAN_SQL = (
 )
 
 
-def _update_centroids(assigned: DataFrame, dim: int = _IVF_DIM) -> DataFrame:
-    """Lloyd's update: per-component integer mean. posexplode feeds a
-    (cid, pos)-keyed partial aggregation, so the shuffle carries only
-    K*dim partial sums — independent of corpus size.
+def _component_means(assigned: DataFrame) -> DataFrame:
+    """(cell, cid, pos, comp): the Lloyd's update's per-component
+    integer mean. posexplode feeds one (cell, cid, pos)-keyed partial
+    aggregation, so the shuffle carries prefixes*b*dim partial sums —
+    independent of corpus size. Driver-local training collects these
+    rows; :func:`_update_keyed` folds them into centroid arrays."""
+    return (
+        assigned.select("cell", "cid", F.posexplode("eq").alias("pos", "val"))
+        .groupBy("cell", "cid", "pos")
+        .agg(F.expr(_INT_MEAN_SPARK).alias("comp"))
+    )
+
+
+def _update_keyed(assigned: DataFrame) -> DataFrame:
+    """Lloyd's update: (cell, cid, cemb) from the per-component means
+    of :func:`_component_means`.
 
     Round-14 measurement (guide §1: re-measure after each change): a
     one-exchange rewrite — ``dim`` SUM(eq[i]) columns + COUNT in ONE
@@ -1283,14 +1350,9 @@ def _update_centroids(assigned: DataFrame, dim: int = _IVF_DIM) -> DataFrame:
     per-row evaluation than the extra exchange saves: isolated
     best-of-3 at sf0.1 was llm_semdedup 8.32s vs 4.66s, tree_deep
     8.77s vs 5.59s, sim_topk_tree 5.80s vs 3.86s in posexplode's
-    favor. ``dim`` is accepted for signature stability (PQ codebooks
-    train on _PQ_SUBDIM-long slices); the posexplode form derives
-    positions from the data."""
-    comps = assigned.select("cid", F.posexplode("eq").alias("pos", "val"))
-    means = comps.groupBy("cid", "pos").agg(
-        F.expr(_INT_MEAN_SPARK).alias("comp")
-    )
-    return means.groupBy("cid").agg(
+    favor. The posexplode form derives positions from the data, so
+    the PQ codebooks' 16-long slices need no ``dim``."""
+    return _component_means(assigned).groupBy("cell", "cid").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "comp"))),
             lambda s: s.getField("comp"),
@@ -1321,103 +1383,102 @@ def _overlap(*thunks):
         return [f.result() for f in futs]
 
 
-def _lloyds(
+def _seed_keyed(
+    vecs: DataFrame, b: int, seed_tag: str, prefixes: int
+) -> DataFrame:
+    """(cell, h, vec_id, eq): the ``b`` vectors of lowest portable
+    hash rank ``h`` in each prefix — deterministic seeding, so engine
+    and oracle run the SAME k-means bit-for-bit. One prefix takes a
+    distributed top-b (orderBy+limit, a TakeOrdered); many prefixes
+    rank in a window PARTITIONED by cell (a prefix with fewer than b
+    members seeds them all, exactly like limit on the slice). A
+    window on a constant key would sort all N rows in one task."""
+    hv = vecs.select(
+        "cell",
+        "vec_id",
+        "eq",
+        _phash(F.col("vec_id").cast("string"), seed_tag).alias("h"),
+    )
+    if prefixes == 1:
+        return hv.orderBy("h", "vec_id").limit(b)
+    w = Window.partitionBy("cell").orderBy("h", "vec_id")
+    return (
+        hv.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= b)
+        .drop("rk")
+    )
+
+
+def _train_keyed(
     vecs: DataFrame,
-    k: int,
-    iters: int,
+    b: int,
     seed_tag: str,
+    prefixes: int,
+    iters: int = _IVF_ITERS,
     dim: int = _IVF_DIM,
 ) -> DataFrame:
-    """(cid, cemb) after ``iters`` rounds of DataFrame-native Lloyd's
-    over ``vecs`` (vec_id, eq). Seeding is deterministic (portable md5
-    rank of vec_id, distributed top-K via orderBy+limit — no
-    data-sized global window), so engine and oracle run the SAME
-    k-means bit-for-bit. Shared by the IVF coarse index (full vectors)
-    and the PQ codebooks (per-subspace slices).
+    """(cell, cid, cemb) after ``iters`` rounds of DataFrame-native
+    Lloyd's with ``b`` centroids per prefix of ``vecs`` (cell,
+    vec_id, eq) — the package's one k-means trainer. Flat k-means is
+    the one-prefix case (:func:`_one_prefix`, ``prefixes=1``); a
+    tree level trains every prefix of the level above in ONE chain,
+    so its job count does not grow with ``prefixes``.
 
-    Round 15 (guide §1.2 "the distributed algorithm" + §5 driver
-    notes): when the centroid state is plan-literal-sized
-    (k*dim <= _CENT_LOCAL_MAX) each iteration runs as ONE collect job
-    — map-side assignment against the previous round's folded-literal
-    centroids feeding the same (cid, pos) integer-mean aggregation,
-    whose K*dim result rows come back to the driver. The old form
-    nested every iteration inside the next one's BroadcastExchange,
-    costing 3 sequential AQE stage round-trips + a broadcast build per
-    iteration; centroids are metadata the broadcast path already
-    collected to the driver anyway, so this moves no new bytes and
-    changes no integer (same assignment expression, same
-    _INT_MEAN_SPARK aggregate — bit-identical, oracle-gated). Above
-    the cap (self-scaling K at 100 TB) the distributed chain below is
-    the unchanged production path."""
-    if 0 < k * dim <= _CENT_LOCAL_MAX:
-        return _lloyds_local(vecs, k, iters, seed_tag)
-    seed_rows = (
-        vecs.withColumn("h", _phash(F.col("vec_id").cast("string"), seed_tag))
-        .orderBy("h", "vec_id")
-        .limit(k)
-    )
-    w = Window.orderBy("h", "vec_id")  # over exactly K rows
-    cents = (
-        seed_rows.withColumn("cid", F.row_number().over(w).cast("int"))
-        .select("cid", F.col("eq").alias("cemb"))
-    )
-    for _ in range(iters):
-        cents = _update_centroids(_assign_cells(vecs, cents), dim)
-    return cents
-
-
-def _lloyds_local(
-    vecs: DataFrame, k: int, iters: int, seed_tag: str
-) -> DataFrame:
-    """Driver-local-iteration Lloyd's: same seeding (top-K by the
-    portable hash rank — TakeOrdered returns the rows already in
-    (h, vec_id) order; re-sorted defensively on the collected longs),
-    same map-side assignment, same distributed integer-mean
-    aggregation; only the K*dim centroid RESULT rows land on the
-    driver instead of being re-broadcast through a nested subtree."""
-    spark = vecs.sparkSession
-    seed = (
-        vecs.withColumn("h", _phash(F.col("vec_id").cast("string"), seed_tag))
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .select("h", "vec_id", "eq")
-        .collect()
-    )
-    seed.sort(key=lambda r: (r["h"], r["vec_id"]))
-    rows = [(i + 1, list(r["eq"])) for i, r in enumerate(seed)]
-    if not rows:
-        # empty training set: keep the distributed empty-cents shape
-        return _local_cents_df(spark, [])
-    cents = _local_cents_df(spark, rows)
-    for _ in range(iters):
-        means = (
-            _assign_cells(vecs, cents)
-            .select("cid", F.posexplode("eq").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.expr(_INT_MEAN_SPARK).alias("comp"))
-            .collect()
+    When the centroid state (prefixes * b * dim values) fits under
+    ``_CENT_LOCAL_MAX`` the seeds collect once and each round is ONE
+    collect job: map-literal assignment feeding the (cell, cid, pos)
+    integer-mean aggregation, whose rows land on the driver. Above
+    the cap every round nests inside the next round's broadcast.
+    Both paths run the same seeding, assignment expression and
+    ``_INT_MEAN_SPARK`` aggregate, so they are bit-identical
+    (tests/test_round15_opt.py)."""
+    seeds = _seed_keyed(vecs, b, seed_tag, prefixes)
+    if prefixes * b * dim > _CENT_LOCAL_MAX:
+        w = Window.partitionBy("cell").orderBy("h", "vec_id")  # seed rows only
+        cents = seeds.select(
+            "cell",
+            F.row_number().over(w).cast("int").alias("cid"),
+            F.col("eq").alias("cemb"),
         )
+        for _ in range(iters):
+            cents = _update_keyed(_assign_keyed(vecs, cents))
+        return cents
+    spark = vecs.sparkSession
+    cell_type = vecs.schema["cell"].dataType.simpleString()
+    rows: list = []
+    for r in sorted(
+        seeds.collect(), key=lambda r: (r["cell"], r["h"], r["vec_id"])
+    ):
+        first = not rows or rows[-1][0] != r["cell"]
+        rows.append((r["cell"], 1 if first else rows[-1][1] + 1, list(r["eq"])))
+    cents = _local_keyed_df(spark, rows, cell_type)
+    if not rows:
+        return cents
+    for _ in range(iters):
+        means = _component_means(_assign_keyed(vecs, cents)).collect()
         acc: dict = {}
         for r in means:
-            acc.setdefault(r["cid"], {})[r["pos"]] = r["comp"]
+            acc.setdefault((r["cell"], r["cid"]), {})[r["pos"]] = r["comp"]
         rows = [
-            (cid, [m[p] for p in sorted(m)]) for cid, m in sorted(acc.items())
+            (cell, cid, [m[p] for p in sorted(m)])
+            for (cell, cid), m in sorted(acc.items())
         ]
-        cents = _local_cents_df(spark, rows)
+        cents = _local_keyed_df(spark, rows, cell_type)
     return cents
 
 
 def _learned_centroids(
     spark: SparkSession, k: int | None = None, seed: str = "ivfseed"
 ) -> DataFrame:
-    """``k=None`` derives the self-scaling default (K ~ sqrt N) from
+    """Flat IVF centroids (cell, cid, cemb) over the quantized corpus.
+    ``k=None`` derives the self-scaling default (K ~ sqrt N) from
     a cheap corpus count; registered gate queries pass the pinned
     ``_IVF_K`` so their DuckDB oracles stay exact. ``seed`` picks an
     independent deterministic seeding (a second clustering level
     must not degenerate into the first)."""
     if k is None:
         k = default_ivf_k(spark.table("embeddings").count())
-    return _lloyds(_quantize(spark), k, _IVF_ITERS, seed)
+    return _train_keyed(_one_prefix(_quantize(spark)), k, seed, 1)
 
 
 def learned_ivf_cells(
@@ -1426,34 +1487,9 @@ def learned_ivf_cells(
     """(vec_id, cell) under the learned centroids — the learned
     replacement for the fixture ``label`` column (VERDICT r2 missing
     #6: a real ANN path computes its own cells)."""
-    return _assign_cells(
-        _quantize(spark), _learned_centroids(spark, k, seed)
+    return _assign_keyed(
+        _one_prefix(_quantize(spark)), _learned_centroids(spark, k, seed)
     ).select("vec_id", F.col("cid").alias("cell"))
-
-
-def _probe_cells(vecs: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
-    """(vec_id, cell): each vector's ``nprobe`` NEAREST cells — the
-    IVF search-time recall knob. Same map-side shape as assignment
-    (broadcast centroid array), but keeps the first ``nprobe`` of the
-    distance-sorted struct array instead of the argmin."""
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cs"),
-                lambda c: F.struct(
-                    _l2q(F.col("eq"), c.getField("cemb")).alias("dist"),
-                    c.getField("cid").alias("cid"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
-    )
-    return (
-        _with_cents_cs(vecs, cents)
-        .select("vec_id", F.explode(ranked).alias("p"))
-        .select("vec_id", F.col("p.cid").alias("cell"))
-    )
 
 
 def _sql_lloyds_cells(
@@ -1526,8 +1562,8 @@ def _sql_lloyds_cells(
     )
 
 
-#: frozen-index assignment distance (SQL mirror of _assign_cells /
-#: _probe_cells): exact integer squared-L2 between a quantized vector
+#: frozen-index assignment distance (SQL mirror of _assign_keyed /
+#: _probe_keyed): exact integer squared-L2 between a quantized vector
 #: aliased ``e`` and a centroid aliased ``c``.
 _SQL_ASSIGN_DIST = (
     f"list_sum(list_transform(range(1, {_IVF_DIM + 1}),"
@@ -1541,7 +1577,7 @@ def _sql_probe_cells(
     name: str = "probe2",
     col: str = "cell2",
 ) -> str:
-    """DuckDB CTE mirroring :func:`_probe_cells`: each vector's
+    """DuckDB CTE mirroring :func:`_probe_keyed`: each vector's
     ``nprobe`` nearest cells of the ``{prefix}centroids`` index
     (same integer distance and (dist, cid) tie-break as the Spark
     side). Composes after a :func:`_sql_lloyds_cells` chain."""
@@ -1669,12 +1705,12 @@ def llm_sim_topk_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     still shuffles on the cell id only — work per query is
     nprobe/K of the corpus, the IVF contract. Cells are disjoint, so
     candidates across probes never need dedup."""
-    vecs = _quantize(spark)
+    vecs = _one_prefix(_quantize(spark))
     cents = _learned_centroids(spark, _IVF_K)
-    cells = _assign_cells(vecs, cents).select("vec_id", F.col("cid").alias("cell"))
+    cells = _assign_keyed(vecs, cents).select("vec_id", F.col("cid").alias("cell"))
     base = _vectors_with_norm(spark).drop("label").join(cells, "vec_id")
-    probes = _probe_cells(vecs.filter(F.col("vec_id") < 30), cents, _NPROBE).select(
-        F.col("vec_id").alias("q_id"), F.col("cell").alias("p_cell")
+    probes = _probe_keyed(vecs.filter(F.col("vec_id") < 30), cents, _NPROBE).select(
+        F.col("vec_id").alias("q_id"), F.col("subcell").alias("p_cell")
     )
     q = base.filter(F.col("vec_id") < 30).select(
         F.col("vec_id").alias("q_id"),
@@ -1716,8 +1752,12 @@ _PQ_NQ = 30  # query set: vec_id < 30, matching the other topk queries
 
 
 def _pq_sub(vecs: DataFrame, m: int) -> DataFrame:
-    return vecs.select(
-        "vec_id", F.slice("eq", m * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("eq")
+    """Subspace ``m``'s slices under one prefix (each codebook is a
+    flat k-means)."""
+    return _one_prefix(
+        vecs.select(
+            "vec_id", F.slice("eq", m * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("eq")
+        )
     )
 
 
@@ -1726,8 +1766,8 @@ def _pq_codebooks(spark: SparkSession) -> list[DataFrame]:
     over that subspace's 16-dim slices, seeded independently."""
     vecs = _quantize(spark)
     return [
-        _lloyds(
-            _pq_sub(vecs, m), _PQ_K, _PQ_ITERS, f"pqseed{m}", dim=_PQ_SUBDIM
+        _train_keyed(
+            _pq_sub(vecs, m), _PQ_K, f"pqseed{m}", 1, _PQ_ITERS, _PQ_SUBDIM
         )
         for m in range(_PQ_M)
     ]
@@ -1737,7 +1777,7 @@ def _pq_codes(vecs: DataFrame, books: list[DataFrame]) -> DataFrame:
     """(vec_id, k0..kM-1): the corpus encoded against the codebooks."""
     codes = vecs.select("vec_id")
     for m, cb in enumerate(books):
-        a = _assign_cells(_pq_sub(vecs, m), cb).select(
+        a = _assign_keyed(_pq_sub(vecs, m), cb).select(
             "vec_id", F.col("cid").alias(f"k{m}")
         )
         codes = codes.join(a, "vec_id")
@@ -2162,14 +2202,14 @@ def llm_sim_topk_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame
     compressed scan bounded by nprobe, raw-vector IO bounded by the
     shortlist. Cells are disjoint, so multiprobe candidates never
     need dedup."""
-    vecs = _quantize(spark)
+    vecs = _one_prefix(_quantize(spark))
     cents = _learned_centroids(spark, _IVF_K)
-    cells = _assign_cells(vecs, cents).select("vec_id", F.col("cid").alias("cell"))
+    cells = _assign_keyed(vecs, cents).select("vec_id", F.col("cid").alias("cell"))
     books = _pq_codebooks(spark)
     codes = _pq_codes(vecs, books)
     qvecs = vecs.filter(F.col("vec_id") < _PQ_NQ)
-    probes = _probe_cells(qvecs, cents, _NPROBE).select(
-        F.col("vec_id").alias("q_id"), F.col("cell").alias("p_cell")
+    probes = _probe_keyed(qvecs, cents, _NPROBE).select(
+        F.col("vec_id").alias("q_id"), F.col("subcell").alias("p_cell")
     )
     q = qvecs.select(F.col("vec_id").alias("q_id"), F.col("eq").alias("qe"))
     cand = (
@@ -4421,7 +4461,7 @@ def llm_semdedup_shard_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-level's) are property-proven in
     tests/test_round11_props.py and test_round12_props.py; this
     query puts the MAGNITUDES under the differential gate."""
-    q2 = _quantize(spark)
+    q2 = _one_prefix(_quantize(spark))
 
     # level-1 index trained once and kept as centroids (not just the
     # assignment) so the round-13 level-1 probe expansion shares the
@@ -4430,7 +4470,7 @@ def llm_semdedup_shard_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _level(k: int, seed: str, col: str):
         cents = _ckpt_unless_local(_learned_centroids(spark, k, seed))
         cells = (
-            _assign_cells(q2, cents)
+            _assign_keyed(q2, cents)
             .select("vec_id", F.col("cid").alias(col))
             .localCheckpoint()
         )
@@ -4440,9 +4480,11 @@ def llm_semdedup_shard_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _level(_IVF_K, "ivfseed", "cell"),
         lambda: _level(_SEM_K2, "ivfseed2", "cell2"),
     )
-    probes1 = _probe_cells(q2, cents1, _SEM_NPROBE)
-    probes2 = _probe_cells(q2, cents2, _SEM_NPROBE).withColumnRenamed(
-        "cell", "cell2"
+    probes1 = _probe_keyed(q2, cents1, _SEM_NPROBE).select(
+        "vec_id", F.col("subcell").alias("cell")
+    )
+    probes2 = _probe_keyed(q2, cents2, _SEM_NPROBE).select(
+        "vec_id", F.col("subcell").alias("cell2")
     )
     base = (
         _vectors_with_norm(spark)
@@ -4739,7 +4781,7 @@ def semdedup_admit_batch(
     streaming operator's contract (stream_semdedup_admission, round
     12), where batch sequence is physical."""
     is_new = F.col("vec_id") % mod == 0
-    q = _quantize(spark)
+    q = _one_prefix(_quantize(spark))
     if k is None:
         k = default_ivf_k(
             spark.table("embeddings")
@@ -4748,8 +4790,8 @@ def semdedup_admit_batch(
         )
     # the trained centroids have one consumer (the full assignment) —
     # no checkpoint; the chain runs once inside that broadcast
-    cents = _lloyds(q.filter(~is_new), k, _IVF_ITERS, "ivfseed")
-    cells_all = _assign_cells(q, cents).select(
+    cents = _train_keyed(q.filter(~is_new), k, "ivfseed", 1)
+    cells_all = _assign_keyed(q, cents).select(
         "vec_id", F.col("cid").alias("cell")
     ).localCheckpoint()
     base = (
@@ -4982,7 +5024,7 @@ def semdedup_prune_sharded_mp(
     ``recall_mpb_ppm`` column.
 
     Scale: the probe expansion happens MAP-SIDE against the broadcast
-    level-1/level-2 centroid arrays (``_probe_cells``) — no extra
+    level-1/level-2 centroid arrays (``_probe_keyed``) — no extra
     shuffle; the pair join stays bucketed on (cell, cell2); the
     DISTINCT absorbs a pair matching via multiple probes. At 100 TB
     raise the shard target or either nprobe independently — recall
@@ -4992,7 +5034,7 @@ def semdedup_prune_sharded_mp(
         d1, d2 = sharded_shard_counts(spark.table("embeddings").count())
         k1 = k1 or d1
         k2 = k2 or d2
-    q2 = _quantize(spark)
+    q2 = _one_prefix(_quantize(spark))
     # each level's index: train ONCE, then both the single assignment
     # (base side) and the probe expansion (query side) reuse the
     # same frozen centroids — without the checkpoint the Lloyd's
@@ -5000,7 +5042,7 @@ def semdedup_prune_sharded_mp(
     def _level(k: int, seed: str, col: str):
         cents = _ckpt_unless_local(_learned_centroids(spark, k, seed))
         cells = (
-            _assign_cells(q2, cents)
+            _assign_keyed(q2, cents)
             .select("vec_id", F.col("cid").alias(col))
             .localCheckpoint()
         )
@@ -5011,8 +5053,8 @@ def semdedup_prune_sharded_mp(
         lambda: _level(k1, "ivfseed", "cell"),
         lambda: _level(k2, "ivfseed2", "cell2"),
     )
-    probes2 = _probe_cells(q2, cents2, nprobe).withColumnRenamed(
-        "cell", "cell2"
+    probes2 = _probe_keyed(q2, cents2, nprobe).select(
+        "vec_id", F.col("subcell").alias("cell2")
     )
     base = (
         _vectors_with_norm(spark)
@@ -5022,7 +5064,9 @@ def semdedup_prune_sharded_mp(
         .localCheckpoint()
     )
     if nprobe1 > 1:
-        probes1 = _probe_cells(q2, cents1, nprobe1)
+        probes1 = _probe_keyed(q2, cents1, nprobe1).select(
+            "vec_id", F.col("subcell").alias("cell")
+        )
         aq = (
             base.select("vec_id", "embedding", "nrm")
             .join(probes1, "vec_id")
@@ -5088,7 +5132,7 @@ _SEM_MNT_K = 12  # re-derived K, pinned so the oracle is exact
 
 def _sql_assign_to(name: str, cents: str, col: str, where: str = "") -> str:
     """DuckDB CTE: nearest-centroid assignment of ``eqv_all`` rows to
-    a frozen ``{cents}`` index (mirror of :func:`_assign_cells`)."""
+    a frozen ``{cents}`` index (mirror of :func:`_assign_keyed`)."""
     return f"""
     {name} AS (
       SELECT vec_id, cid AS {col} FROM (
@@ -5207,7 +5251,7 @@ def semdedup_maintain_report(
     deterministic seeding makes the maintained index IDENTICAL to a
     fresh index over the same corpus — which is exactly what the
     differential oracle verifies."""
-    q = _quantize(spark)
+    q = _one_prefix(_quantize(spark))
     is_batch = F.col("vec_id") % batch_mod == 0
     grown_q = q.filter(~is_batch)
     if k_new is None:
@@ -5218,20 +5262,20 @@ def semdedup_maintain_report(
     # and the maintenance retrain (grown corpus, deterministic →
     # equal to a fresh index) are independent chains — overlap them
     cents_old, cents_new = _overlap(
-        lambda: _lloyds(
-            grown_q.filter(F.col("vec_id") % stale_mod != 0),
-            k_old,
-            _IVF_ITERS,
-            "ivfseed",
-        ).localCheckpoint(),
-        lambda: _lloyds(
-            grown_q, k_new, _IVF_ITERS, "ivfseed"
-        ).localCheckpoint(),
+        lambda: _ckpt_unless_local(
+            _train_keyed(
+                grown_q.filter(F.col("vec_id") % stale_mod != 0),
+                k_old,
+                "ivfseed",
+                1,
+            )
+        ),
+        lambda: _ckpt_unless_local(_train_keyed(grown_q, k_new, "ivfseed", 1)),
     )
-    old_asg = _assign_cells(q, cents_old).select(
+    old_asg = _assign_keyed(q, cents_old).select(
         "vec_id", F.col("cid").alias("old_cell")
     )
-    new_asg = _assign_cells(q, cents_new).select(
+    new_asg = _assign_keyed(q, cents_new).select(
         "vec_id", F.col("cid").alias("cell")
     )
     base = (
@@ -5342,7 +5386,7 @@ def _sql_tree_cells(
     :func:`_sql_lloyds_cells` sub-chain PER level-1 cell (training
     set = that cell's members, via the ``cells`` CTE the caller must
     have defined), unioned into ``tree_cells (vec_id, cell,
-    subcell)``. Mirrors :func:`hierarchical_cells` exactly."""
+    subcell)``. Mirrors :func:`hierarchical_index` exactly."""
     chains = ",".join(
         _sql_lloyds_cells(
             k=b2,
@@ -5371,7 +5415,7 @@ def _sql_tree_probes(
     multi-probe (mirror of :func:`hierarchical_index` with
     ``nprobe``): within each level-1 cell, every member's ``nprobe``
     nearest SUB-centroids of that cell's OWN index — same integer
-    distance and (dist, cid) tie-break as :func:`_probe_cells`.
+    distance and (dist, cid) tie-break as :func:`_probe_keyed`.
     Composes after :func:`_sql_tree_cells` (reuses its ``t{i}_eqv``
     and ``t{i}_centroids`` CTEs). Union target: ``tree_probes
     (vec_id, cell, subcell)``."""
@@ -5392,203 +5436,11 @@ def _sql_tree_probes(
     return chains + f", tree_probes AS ({union})"
 
 
-def _cents_arr_keyed(cents: DataFrame) -> DataFrame:
-    """(cell, cs): each cell's sorted (cid, cemb) struct array — the
-    keyed twin of :func:`_assign_cells`'s one-row broadcast (b1 rows
-    of b2 structs; centroid metadata, never data-sized)."""
-    return cents.groupBy("cell").agg(
-        F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("cs")
-    )
-
-
-def _local_keyed_df(spark: SparkSession, rows, cell_type: str) -> DataFrame:
-    """(cell, cid, cemb) DataFrame from driver-held keyed centroid
-    rows, tagged with ``_local_keyed_cents`` for the map-literal fast
-    path (the keyed twin of :func:`_local_cents_df`)."""
-    data = [
-        (c, int(cid), [int(v) for v in e]) for c, cid, e in rows
-    ]
-    df = local_frame(spark, data, f"cell {cell_type}, cid int, cemb array<bigint>")
-    df._local_keyed_cents = data
-    return df
-
-
-def _cs_map_literal(rows) -> Column:
-    """cell -> sorted (cid, cemb) struct array as ONE foldable map
-    literal — the driver-local twin of broadcasting
-    :func:`_cents_arr_keyed` (BIGINT keys; callers probe with
-    ``element_at(map, cell.cast("long"))``)."""
-    by_cell: dict = {}
-    for cell, cid, emb in rows:
-        by_cell.setdefault(int(cell), []).append((int(cid), emb))
-    entries = ",".join(
-        f"{cell}L,CAST(array("
-        + ",".join(
-            f"named_struct('cid',{cid},'cemb',{_sql_cemb(emb)})"
-            for cid, emb in sorted(cs)
-        )
-        + f") AS {_CS_TYPE})"
-        for cell, cs in sorted(by_cell.items())
-    )
-    return F.expr(f"map({entries})")
-
-
-def _with_cents_cs_keyed(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """``vecs`` plus its own cell's ``cs`` centroid array, with inner
-    -join semantics (vectors whose cell trained no centroids drop
-    out): a folded map-literal probe when the keyed centroids are
-    driver-local (no job, no join), else the broadcast equi-join on
-    ``cell``."""
-    local = getattr(cents, "_local_keyed_cents", None)
-    if local:
-        return vecs.withColumn(
-            "cs", F.element_at(_cs_map_literal(local), F.col("cell").cast("long"))
-        ).filter(F.col("cs").isNotNull())
-    # cents_arr: per-cell centroid arrays — metadata-sized (see
-    # _cents_arr_keyed), the whitelisted bounded-cardinality broadcast
-    cents_arr = _cents_arr_keyed(cents)
-    return vecs.join(F.broadcast(cents_arr), "cell")
-
-
-def _assign_keyed(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Per-cell nearest-sub-centroid assignment, map-side: vecs
-    (cell, vec_id, eq) join the BROADCAST per-cell centroid arrays on
-    cell and take argmin(dist, cid) within their own cell — the
-    keyed twin of :func:`_assign_cells`, same integer distance and
-    tie-break."""
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                _l2q(F.col("eq"), c.getField("cemb")).alias("dist"),
-                c.getField("cid").alias("cid"),
-            ),
-        )
-    )
-    return _with_cents_cs_keyed(vecs, cents).select(
-        "cell", "vec_id", "eq", best.getField("cid").alias("cid")
-    )
-
-
-def _update_keyed(assigned: DataFrame) -> DataFrame:
-    """Keyed Lloyd's update: per-(cell, cid, pos) integer mean in one
-    partial aggregation — the shuffle carries b1*b2*dim partial sums
-    regardless of corpus size (the keyed twin of
-    :func:`_update_centroids`, same ``_INT_MEAN_SPARK`` formula; see
-    there for why the one-exchange wide-aggregate rewrite was
-    measured and reverted)."""
-    comps = assigned.select(
-        "cell", "cid", F.posexplode("eq").alias("pos", "val")
-    )
-    means = comps.groupBy("cell", "cid", "pos").agg(
-        F.expr(_INT_MEAN_SPARK).alias("comp")
-    )
-    return means.groupBy("cell", "cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "comp"))),
-            lambda s: s.getField("comp"),
-        ).alias("cemb")
-    )
-
-
-def _seed_keyed(vecs: DataFrame, b2: int, seed_tag: str) -> DataFrame:
-    """Per-cell top-b2 seeding by the portable hash rank — the keyed
-    twin of :func:`_lloyds`' orderBy+limit seeding (the window is
-    PARTITIONED by cell, so no global sort; a cell with fewer than b2
-    members seeds them all, exactly like limit on the slice)."""
-    w = Window.partitionBy("cell").orderBy("h", "vec_id")
-    return (
-        vecs.withColumn(
-            "h", _phash(F.col("vec_id").cast("string"), seed_tag)
-        )
-        .withColumn("cid", F.row_number().over(w).cast("int"))
-        .filter(F.col("cid") <= b2)
-        .select("cell", "cid", F.col("eq").alias("cemb"))
-    )
-
-
-def _train_keyed(
-    vecs: DataFrame,
-    b: int,
-    seed_tag: str,
-    prefixes: int,
-    iters: int = _IVF_ITERS,
-) -> DataFrame:
-    """One keyed Lloyd's level: per-cell seeding + ``iters`` keyed
-    update rounds. When the level's centroid state is plan-literal-
-    sized (prefixes * b * dim values, same cap as :func:`_lloyds`)
-    the level runs driver-local-iteration style: the seed window
-    collects once, and each round is ONE collect job (map-literal
-    assignment feeding the same (cell, cid, pos) integer-mean
-    aggregation) instead of three nested shuffle stages + a keyed
-    broadcast build per round. Bit-identical by construction (same
-    seeding window, same assignment expression, same
-    _INT_MEAN_SPARK aggregate); above the cap the distributed keyed
-    chain is the unchanged production path."""
-    if prefixes * b * _IVF_DIM > _CENT_LOCAL_MAX:
-        cents = _seed_keyed(vecs, b, seed_tag)
-        for _ in range(iters):
-            cents = _update_keyed(_assign_keyed(vecs, cents))
-        return cents
-    spark = vecs.sparkSession
-    cell_type = vecs.schema["cell"].dataType.simpleString()
-    seed = _seed_keyed(vecs, b, seed_tag).collect()
-    rows = sorted(
-        (r["cell"], r["cid"], list(r["cemb"])) for r in seed
-    )
-    if not rows:
-        return _local_keyed_df(spark, [], cell_type)
-    cents = _local_keyed_df(spark, rows, cell_type)
-    for _ in range(iters):
-        means = (
-            _assign_keyed(vecs, cents)
-            .select("cell", "cid", F.posexplode("eq").alias("pos", "val"))
-            .groupBy("cell", "cid", "pos")
-            .agg(F.expr(_INT_MEAN_SPARK).alias("comp"))
-            .collect()
-        )
-        acc: dict = {}
-        for r in means:
-            acc.setdefault((r["cell"], r["cid"]), {})[r["pos"]] = r["comp"]
-        rows = [
-            (cell, cid, [m[p] for p in sorted(m)])
-            for (cell, cid), m in sorted(acc.items())
-        ]
-        cents = _local_keyed_df(spark, rows, cell_type)
-    return cents
-
-
-def _probe_keyed(vecs: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
-    """(vec_id, cell, subcell): each vector's ``nprobe`` nearest
-    sub-centroids WITHIN its own level-1 cell — the keyed twin of
-    :func:`_probe_cells` (same map-side broadcast shape, same
-    (dist, cid) tie-break)."""
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cs"),
-                lambda c: F.struct(
-                    _l2q(F.col("eq"), c.getField("cemb")).alias("dist"),
-                    c.getField("cid").alias("cid"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
-    )
-    return (
-        _with_cents_cs_keyed(vecs, cents)
-        .select("cell", "vec_id", F.explode(ranked).alias("p"))
-        .select("vec_id", "cell", F.col("p.cid").alias("subcell"))
-    )
-
-
 def hierarchical_index(
     spark: SparkSession,
     b1: int,
     b2: int,
     seed1: str = "ivfseed",
-    seed2: str = "treeseed",
     nprobe: int | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The 2-level hierarchical quantizer, trained ONCE: returns
@@ -5600,62 +5452,24 @@ def hierarchical_index(
     search-time recall knob; level 1 stays single-assigned, so
     probing multiplies pair work by nprobe, never by b1).
 
-    Scale: the b1 sub-trainings are NOT a driver loop — they run as
-    ONE KEYED Lloyd's chain (``_seed_keyed``/``_assign_keyed``/
-    ``_update_keyed``): centroid identity is (cell, cid), seeding is
-    a per-cell window over the same portable hash rank, assignment
-    is map-side against the per-cell broadcast centroid arrays, and
-    the update is a single (cell, cid, pos)-keyed partial
-    aggregation whose shuffle carries b1*b2*dim partial sums — so
-    the hierarchy costs the job count of one flat k-means at b2
-    regardless of b1 (the earlier per-cell thread-pool form paid a
-    per-cell scheduling floor that grew with b1; the keyed chain is
-    both faster at fixture scale and b1-independent at 100 TB, where
-    the self-scaling b1 ~ sqrt(N/target) keeps growing). Values are
-    BIT-IDENTICAL to the per-cell formulation — same seeds, ties
-    and integer means — which is what the unchanged per-cell DuckDB
-    oracle (_sql_tree_cells) verifies."""
-    q = _quantize(spark)
-    # cents1 has one consumer (the level-1 assignment) — no
-    # checkpoint; its chain runs once inside that broadcast
-    cents1 = _lloyds(q, b1, _IVF_ITERS, seed1)
-    vecs = (
-        _assign_cells(q, cents1)
-        .select(F.col("cid").alias("cell"), "vec_id", "eq")
-        .localCheckpoint()
-    )
-    cents = _train_keyed(vecs, b2, seed2, b1)
-    if nprobe is not None:
-        # frozen once for both consumers (assignment + probes),
-        # which then checkpoint in parallel (guide §2.6)
-        cents = _ckpt_unless_local(cents)
-        out, probes = _overlap(
-            lambda: _assign_keyed(vecs, cents)
-            .select("vec_id", "cell", F.col("cid").alias("subcell"))
-            .localCheckpoint(),
-            lambda: _probe_keyed(vecs, cents, nprobe).localCheckpoint(),
+    This is :func:`tree_index_deep` at depth 2 with the packed key
+    unpacked (``cell div pack``, ``cell mod pack``): the b1
+    sub-trainings run as ONE keyed Lloyd's chain, so the hierarchy
+    costs the job count of one flat k-means at b2 regardless of b1.
+    Values are BIT-IDENTICAL to the per-cell formulation — same
+    seeds, ties and integer means — which is what the per-cell
+    DuckDB oracle (_sql_tree_cells) verifies."""
+    asg, probes = tree_index_deep(spark, (b1, b2), seed1, nprobe=nprobe)
+
+    def unpack(df: DataFrame) -> DataFrame:
+        return df.select(
+            "vec_id",
+            F.expr(f"CAST(cell div {_TREE_PACK} AS INT)").alias("cell"),
+            (F.col("cell") % _TREE_PACK).cast("int").alias("subcell"),
         )
-        return out, probes
-    # single consumer: skip the centroid checkpoint
-    out = (
-        _assign_keyed(vecs, cents)
-        .select("vec_id", "cell", F.col("cid").alias("subcell"))
-        .localCheckpoint()
-    )
-    return out, None
 
+    return unpack(asg), None if probes is None else unpack(probes)
 
-def hierarchical_cells(
-    spark: SparkSession,
-    b1: int,
-    b2: int,
-    seed1: str = "ivfseed",
-    seed2: str = "treeseed",
-) -> DataFrame:
-    """(vec_id, cell, subcell) under the 2-level hierarchical
-    quantizer — the single-assignment view of
-    :func:`hierarchical_index` (see there for the scale notes)."""
-    return hierarchical_index(spark, b1, b2, seed1, seed2)[0]
 
 
 @register(
@@ -5714,7 +5528,7 @@ def semdedup_prune_tree(
     Scale: identical join/shuffle shape to
     :func:`semdedup_prune_sharded` — the pair join is bucketed on
     the composite key and the prune is a cell-local DISTINCT
-    semi-join; see :func:`hierarchical_cells` for why the per-cell
+    semi-join; see :func:`hierarchical_index` for why the per-cell
     training costs no extra shuffle work. Deeper trees generalize
     assignment toward O(N log N); two levels is what the fixture
     resolves."""
@@ -5722,7 +5536,7 @@ def semdedup_prune_tree(
         d1, d2 = sharded_shard_counts(spark.table("embeddings").count())
         b1 = b1 or d1
         b2 = b2 or d2
-    tree = hierarchical_cells(spark, b1, b2)
+    tree, _ = hierarchical_index(spark, b1, b2)
     base = (
         _vectors_with_norm(spark)
         .join(tree, "vec_id")
@@ -5836,7 +5650,7 @@ def semdedup_prune_tree_mp(
     probed shards).
 
     Scale: the probe expansion is map-side against the per-cell
-    broadcast sub-centroid arrays (one :func:`_probe_cells` pass per
+    broadcast sub-centroid arrays (one :func:`_probe_keyed` pass per
     level-1 cell — metadata-sized driver loop, no extra shuffle);
     the pair join stays bucketed on (cell, subcell); the DISTINCT
     absorbs a pair matching via multiple probes. Recall and cost
@@ -5910,36 +5724,50 @@ _TREE_D3_B = (4, 3, 3)  # pinned depth-3 branching for the gate row (36 leaves)
 
 def _level_seed(lvl: int) -> str:
     """Deterministic per-level seed tag. Level 2 keeps the 2-level
-    tree's historical tag so depth-2 runs are bit-identical to
-    :func:`hierarchical_cells` (property-pinned)."""
+    tree's historical tag (the per-cell oracle's ``treeseed``)."""
     return "treeseed" if lvl == 2 else f"treeseed{lvl}"
 
 
-def tree_index_deep(
-    spark: SparkSession,
+def _descend(vecs: DataFrame, cents: DataFrame, pack: int) -> DataFrame:
+    """One tree level: (cell, vec_id, eq) with each vector's nearest
+    centroid of its prefix packed into the child key ``cell * pack +
+    cid`` — the one per-level step that training, frozen assignment
+    and the leaf probe share."""
+    return _assign_keyed(vecs, cents).select(
+        (
+            F.col("cell") * F.lit(pack).cast("long")
+            + F.col("cid").cast("long")
+        ).alias("cell"),
+        "vec_id",
+        "eq",
+    )
+
+
+def tree_train_deep(
+    q_train: DataFrame,
     branching: tuple[int, ...] | list[int],
     seed1: str = "ivfseed",
     pack: int | None = None,
-    nprobe: int | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """``(assignment, probes)`` under a depth-``len(branching)``
-    b-ary tree quantizer: assignment is (vec_id, cell) where ``cell``
-    is the packed root-to-leaf path (base ``pack`` per level, so
-    ``cell div pack**(L-1)`` recovers the level-1 cell); when
-    ``nprobe`` is set, probes carries each member's ``nprobe``
-    nearest LEAF subcells within its depth-(L-1) prefix as packed
-    keys (the tree_mp recall knob generalized to depth — upper
-    levels stay single-assigned, so probing multiplies pair work by
-    nprobe, never by fan-out).
+) -> tuple[DataFrame, list[DataFrame], DataFrame]:
+    """Train a depth-``len(branching)`` b-ary tree quantizer on
+    ``q_train`` (vec_id, eq) and return ``(level1_centroids,
+    [keyed_centroids per deeper level], training_assignment)`` — the
+    package's one tree training chain. The training assignment is
+    (vec_id, cell, eq): the packed leaf path, with the quantized
+    vector riding along from the checkpoint for a leaf probe.
 
-    Scale: level 1 is the flat broadcast-centroid Lloyd's; every
-    deeper level is ONE keyed chain over the packed prefix —
-    per-prefix window seeding, map-side assignment against the
-    per-prefix broadcast centroid arrays, one (prefix, cid,
-    pos)-keyed integer-mean update whose shuffle carries
-    (#prefixes * b_l * dim) partial sums. Job count per level is
-    CONSTANT (the r12 keyed-chain property), so depth costs
-    O(depth) jobs, never O(#prefixes).
+    Scale: level 1 is the keyed trainer at one prefix; every deeper
+    level is ONE keyed Lloyd's chain over the PACKED prefix key
+    (base ``pack`` per level, so ``cell div pack**(L-1)`` recovers
+    the level-1 cell) — per-prefix window seeding, map-side
+    assignment, one (prefix, cid, pos)-keyed integer-mean update
+    whose shuffle carries (#prefixes * b_l * dim) partial sums, never
+    vectors. Job count per level is CONSTANT, so depth costs
+    O(depth) jobs, never O(#prefixes). The training assignment
+    (vec_id, cell) comes for free from the chain and EQUALS frozen
+    assignment of the same rows (every level assigns against its
+    FINAL centroids), so maintenance never recomputes paths it just
+    produced.
 
     ``pack=None`` uses ``_TREE_PACK`` (the pinned gate/oracle base);
     deep self-scaling trees pass a TIGHT base (fanout+1) so the
@@ -5956,66 +5784,74 @@ def tree_index_deep(
             f"packed key overflows BIGINT: base {pack} at depth "
             f"{len(branching)} — pass a tighter pack (fanout+1)"
         )
-    q = _quantize(spark)
-    # cents1 feeds exactly one consumer (the level-1 assignment), so
-    # no checkpoint: its chain executes once inside the assignment's
-    # broadcast — one fewer blocking materialization (guide §5:
-    # checkpoint only what is reused).
-    cents1 = _lloyds(q, branching[0], _IVF_ITERS, seed1)
-    vecs = (
-        _assign_cells(q, cents1)
-        .select(F.col("cid").cast("long").alias("cell"), "vec_id", "eq")
-        .localCheckpoint()
+    vecs, prefixes, levels = _one_prefix(q_train), 1, []
+    for lvl, b in enumerate(branching, start=1):
+        seed = seed1 if lvl == 1 else _level_seed(lvl)
+        cents = _ckpt_unless_local(_train_keyed(vecs, b, seed, prefixes))
+        levels.append(cents)
+        vecs = _descend(vecs, cents, pack).localCheckpoint()
+        prefixes *= b
+    return levels[0], levels[1:], vecs.select("vec_id", "cell", "eq")
+
+
+def tree_assign_frozen(
+    q: DataFrame,
+    cents1: DataFrame,
+    keyed_cents: list[DataFrame],
+    pack: int | None = None,
+) -> DataFrame:
+    """(vec_id, cell, eq): assign ARBITRARY quantized vectors down a
+    FROZEN tree — nearest level-1 centroid, then nearest
+    sub-centroid within the inherited prefix per level, packed
+    root-to-leaf (the same rows :func:`tree_train_deep` returns for
+    its training set). Entirely map-side (broadcast centroid arrays
+    per level). A vector whose prefix produced no training centroids
+    at some level drops out (inner join) — deterministic, mirrored
+    exactly by the SQL oracle's keyed join."""
+    pack = pack or _TREE_PACK
+    vecs = _one_prefix(q)
+    for cents in [cents1, *keyed_cents]:
+        vecs = _descend(vecs, cents, pack)
+    return vecs.select("vec_id", "cell", "eq")
+
+
+def tree_index_deep(
+    spark: SparkSession,
+    branching: tuple[int, ...] | list[int],
+    seed1: str = "ivfseed",
+    pack: int | None = None,
+    nprobe: int | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """``(assignment, probes)`` under a depth-``len(branching)``
+    b-ary tree quantizer trained over the whole corpus by
+    :func:`tree_train_deep` (see there for scale and ``pack``):
+    assignment is (vec_id, cell) where ``cell`` is the packed
+    root-to-leaf path; when ``nprobe`` is set, probes carries each
+    member's ``nprobe`` nearest LEAF subcells within its
+    depth-(L-1) prefix as packed keys (the tree_mp recall knob
+    generalized to depth — upper levels stay single-assigned, so
+    probing multiplies pair work by nprobe, never by fan-out). The
+    probe ranks the leaf centroids of each vector's prefix (``cell
+    div pack``) map-side over the training checkpoint; it is left
+    lazy, so it runs inside its one consumer's plan (a filtered
+    consumer probes only the rows it keeps) instead of as a build
+    job."""
+    pack = pack or _TREE_PACK
+    _, keyed, asg = tree_train_deep(_quantize(spark), branching, seed1, pack)
+    if nprobe is None or not keyed:
+        return asg.select("vec_id", "cell"), None
+    prefix = asg.select(F.expr(f"cell div {pack}").alias("cell"), "vec_id", "eq")
+    probes = (
+        _probe_keyed(prefix, keyed[-1], nprobe)
+        .select(
+            "vec_id",
+            (
+                F.col("cell") * F.lit(pack).cast("long")
+                + F.col("subcell").cast("long")
+            ).alias("cell"),
+        )
     )
-    probes: DataFrame | None = None
-    for lvl, b in enumerate(branching[1:], start=2):
-        prefixes = 1
-        for bb in branching[: lvl - 1]:
-            prefixes *= bb
-        cents = _train_keyed(vecs, b, _level_seed(lvl), prefixes)
-        if nprobe is not None and lvl == len(branching):
-            # two consumers (probe expansion + final assignment):
-            # freeze the trained centroids once, then run the two
-            # independent checkpoints in parallel (guide §2.6)
-            cents = _ckpt_unless_local(cents)
-            prev = vecs
-            probes, vecs = _overlap(
-                lambda: _probe_keyed(prev, cents, nprobe)
-                .select(
-                    "vec_id",
-                    (
-                        F.col("cell") * F.lit(pack).cast("long")
-                        + F.col("subcell").cast("long")
-                    ).alias("cell"),
-                )
-                .localCheckpoint(),
-                lambda: _assign_keyed(prev, cents)
-                .select(
-                    (
-                        F.col("cell") * F.lit(pack).cast("long")
-                        + F.col("cid").cast("long")
-                    ).alias("cell"),
-                    "vec_id",
-                    "eq",
-                )
-                .localCheckpoint(),
-            )
-        else:
-            # single consumer: the trained centroids execute once
-            # inside the assignment's broadcast — skip the checkpoint
-            vecs = (
-                _assign_keyed(vecs, cents)
-                .select(
-                    (
-                        F.col("cell") * F.lit(pack).cast("long")
-                        + F.col("cid").cast("long")
-                    ).alias("cell"),
-                    "vec_id",
-                    "eq",
-                )
-                .localCheckpoint()
-            )
-    return vecs.select("vec_id", "cell"), probes
+    return asg.select("vec_id", "cell"), probes
 
 
 def tree_cells_deep(
@@ -6166,9 +6002,8 @@ def _sql_tree_deep_cells(
     "never per-prefix scheduling. The oracle re-runs level 1 plus "
     "one PARTITIONED keyed chain per level in SQL (an independent "
     "formulation — per-prefix windows, not per-prefix chains) and "
-    "the leaf pruning rule. Depth-2 bit-identity to "
-    "hierarchical_cells is property-pinned in "
-    "tests/test_round13_props.py.",
+    "the leaf pruning rule. Depth-2 bit-identity to the 2-level "
+    "tree is property-pinned in tests/test_round13_props.py.",
     tags=("llm", "dedup", "similarity", "bench"),
 )
 def llm_semdedup_tree_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6681,21 +6516,9 @@ def tree_probe_beam(
     and the only shuffle is the metadata-sized (vec_id, dist, key)
     rank — never vectors, never corpus-sized."""
     pack = pack or _TREE_PACK
-    ranked1 = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cs"),
-                lambda c: F.struct(
-                    _l2q(F.col("eq"), c.getField("cemb")).alias("dist"),
-                    c.getField("cid").alias("cid"),
-                ),
-            )
-        ),
-        1,
-        beam,
-    )
+    ranked1 = F.slice(F.array_sort(_cent_dists()), 1, beam)
     vecs = (
-        _with_cents_cs(q, cents1)
+        _with_cents_cs_keyed(_one_prefix(q), cents1)
         .select("vec_id", "eq", F.explode(ranked1).alias("p"))
         .select("vec_id", "eq", F.col("p.cid").cast("long").alias("cell"))
     )
@@ -6703,22 +6526,7 @@ def tree_probe_beam(
         keep = nprobe if i == len(keyed_cents) - 1 else beam
         expanded = (
             _with_cents_cs_keyed(vecs, cents)
-            .select(
-                "vec_id",
-                "eq",
-                "cell",
-                F.explode(
-                    F.transform(
-                        F.col("cs"),
-                        lambda c: F.struct(
-                            _l2q(F.col("eq"), c.getField("cemb")).alias(
-                                "dist"
-                            ),
-                            c.getField("cid").alias("cid"),
-                        ),
-                    )
-                ).alias("p"),
-            )
+            .select("vec_id", "eq", "cell", F.explode(_cent_dists()).alias("p"))
             .select(
                 "vec_id",
                 "eq",
@@ -7046,86 +6854,6 @@ def llm_ann_recall_tree_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: is already driver-proven by llm_semdedup_tree_deep; depth composes
 #: — the self-scaling entry derives real log-depth).
 _TREE_MNT_B = (4, 3)
-
-
-def tree_train_deep(
-    q_train: DataFrame,
-    branching: tuple[int, ...] | list[int],
-    seed1: str = "ivfseed",
-    pack: int | None = None,
-) -> tuple[DataFrame, list[DataFrame], DataFrame]:
-    """Train a depth-``len(branching)`` tree on ``q_train``
-    (vec_id, eq) and return ``(level1_centroids, [keyed_centroids
-    per deeper level], training_assignment)`` — the frozen-index
-    export of :func:`tree_index_deep`'s training chain (same
-    seeding, same keyed chains, same integer means). The training
-    assignment (vec_id, cell) comes for free from the chain and
-    EQUALS frozen assignment of the same rows (every level assigns
-    against its FINAL centroids), so maintenance never recomputes
-    paths it just produced. O(depth) keyed-chain jobs; the shuffle
-    per level carries (#prefixes * b_l * dim) partial sums, never
-    vectors."""
-    pack = pack or _TREE_PACK
-    for b in branching:
-        if b >= pack:
-            raise ValueError(f"fan-out {b} >= packing base {pack}")
-    cents1 = _ckpt_unless_local(_lloyds(q_train, branching[0], _IVF_ITERS, seed1))
-    vecs = (
-        _assign_cells(q_train, cents1)
-        .select(F.col("cid").cast("long").alias("cell"), "vec_id", "eq")
-        .localCheckpoint()
-    )
-    keyed: list[DataFrame] = []
-    for lvl, b in enumerate(branching[1:], start=2):
-        prefixes = 1
-        for bb in branching[: lvl - 1]:
-            prefixes *= bb
-        cents = _ckpt_unless_local(
-            _train_keyed(vecs, b, _level_seed(lvl), prefixes)
-        )
-        keyed.append(cents)
-        vecs = (
-            _assign_keyed(vecs, cents)
-            .select(
-                (
-                    F.col("cell") * F.lit(pack).cast("long")
-                    + F.col("cid").cast("long")
-                ).alias("cell"),
-                "vec_id",
-                "eq",
-            )
-            .localCheckpoint()
-        )
-    return cents1, keyed, vecs.select("vec_id", "cell")
-
-
-def tree_assign_frozen(
-    q: DataFrame,
-    cents1: DataFrame,
-    keyed_cents: list[DataFrame],
-    pack: int | None = None,
-) -> DataFrame:
-    """(vec_id, cell): assign ARBITRARY quantized vectors down a
-    FROZEN tree — nearest level-1 centroid, then nearest
-    sub-centroid within the inherited prefix per level, packed
-    root-to-leaf. Entirely map-side (broadcast centroid arrays per
-    level). A vector whose prefix produced no training centroids at
-    some level drops out (inner join) — deterministic, mirrored
-    exactly by the SQL oracle's keyed join."""
-    pack = pack or _TREE_PACK
-    vecs = _assign_cells(q, cents1).select(
-        F.col("cid").cast("long").alias("cell"), "vec_id", "eq"
-    )
-    for cents in keyed_cents:
-        vecs = _assign_keyed(vecs, cents).select(
-            (
-                F.col("cell") * F.lit(pack).cast("long")
-                + F.col("cid").cast("long")
-            ).alias("cell"),
-            "vec_id",
-            "eq",
-        )
-    return vecs.select("vec_id", "cell")
 
 
 def _sql_tree_frozen_assign(

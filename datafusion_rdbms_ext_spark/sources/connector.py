@@ -71,7 +71,10 @@ class Connector:
 
     db_type: str = "?"
     supports_order_by_all: bool = False
-    supports_quantile_partitioning: bool = False
+    #: ``quantile_sql(base_sql, key, partitions)`` -> the dialect's
+    #: one-row split-point query; None where the dialect has no
+    #: quantile aggregate (min/max equi-width planning instead)
+    quantile_sql: Callable[[str, str, int], str] | None = None
 
     @classmethod
     def from_options(cls, options) -> "Connector":
@@ -108,9 +111,24 @@ class Connector:
         )
 
     def partition_predicates(self, base_sql: str, key: str, partitions: int) -> list[str]:
-        """Equi-width min/max ranges (Spark-JDBC lowerBound/upperBound
-        arithmetic) — balance degrades on skew, the price of a missing
-        quantile aggregate. Dialects that have one override this."""
+        """The one split-point planner. Where the dialect has a
+        quantile aggregate (``quantile_sql``), remote-quantile split
+        points: balanced slices even on skewed keys, one metadata
+        query. Its one row is read by flattening its values — a list
+        (DuckDB, Postgres) or ``q1..q{n-1}`` columns (T-SQL). Otherwise
+        equi-width min/max ranges (Spark-JDBC lowerBound/upperBound
+        arithmetic) — balance degrades on skew, the price of a
+        missing quantile aggregate."""
+        if self.quantile_sql is not None:
+            pdf = self.fetch_pdf(self.quantile_sql(base_sql, key, partitions))
+            values = [] if pdf.empty else pdf.iloc[0].tolist()
+            points = {
+                int(p)
+                for v in values
+                for p in (v if pd.api.types.is_list_like(v) else [v])
+                if p is not None and not pd.isna(p)
+            }
+            return _bounds_to_preds(key, sorted(points))
         row = self.fetch_pdf(self.minmax_sql(base_sql, key))
         lo, hi = row["lo"][0], row["hi"][0]
         if lo is None or hi is None or pd.isna(lo) or pd.isna(hi) or lo == hi:
@@ -300,7 +318,6 @@ class DuckDBConnector(Connector):
 
     db_type = "duckdb"
     supports_order_by_all = True
-    supports_quantile_partitioning = True
 
     def __init__(self, sf_dir: str):
         self.sf_dir = sf_dir
@@ -346,20 +363,14 @@ class DuckDBConnector(Connector):
         except Exception:
             return None
 
-    def partition_predicates(self, base_sql: str, key: str, partitions: int) -> list[str]:
-        """Remote-quantile split points: balanced slices even on
-        skewed keys (one metadata query)."""
+    def quantile_sql(self, base_sql: str, key: str, partitions: int) -> str:
+        """DuckDB spelling of the split-point query: one list of
+        ``quantile_disc`` points."""
         qs = [i / partitions for i in range(1, partitions)]
-        con = self._connect()
-        try:
-            row = con.execute(
-                f"SELECT quantile_disc({key}, {qs!r}) FROM ({base_sql}) _t "
-                f"WHERE {key} IS NOT NULL"
-            ).fetchone()
-        finally:
-            con.close()
-        points = row[0] if row and row[0] is not None else []
-        return _bounds_to_preds(key, sorted(set(points)))
+        return (
+            f"SELECT quantile_disc({key}, {qs!r}) FROM ({base_sql}) _t "
+            f"WHERE {key} IS NOT NULL"
+        )
 
     def _stage_path(self, name: str) -> str:
         import tempfile
@@ -533,7 +544,6 @@ class PostgresConnector(_InfoSchemaConnector):
     bare-LIMIT pushdown refused — same negotiation as SQLite)."""
 
     db_type = "postgres"
-    supports_quantile_partitioning = True
     _DEFAULT_SCHEMA = "public"
     _DEFAULTS = {"port": 5432, "user": "postgres", "database": "postgres"}
     # the libpq conninfo spellings; password/TLS flow straight into
@@ -677,11 +687,6 @@ class PostgresConnector(_InfoSchemaConnector):
             f"FROM ({base_sql}) _t WHERE {key} IS NOT NULL"
         )
 
-    def partition_predicates(self, base_sql: str, key: str, partitions: int) -> list[str]:
-        pdf = self.fetch_pdf(self.quantile_sql(base_sql, key, partitions))
-        points = [] if pdf.empty or pdf["qs"][0] is None else list(pdf["qs"][0])
-        return _bounds_to_preds(key, sorted({int(p) for p in points}))
-
     def _stage(self, name: str, keys: DataFrame, cols: list[str]) -> str:
         """The networked staging protocol: the key set bulk-loads over
         COPY FROM STDIN into a table of the live server."""
@@ -819,7 +824,6 @@ class MsSqlConnector(_InfoSchemaConnector):
     here."""
 
     db_type = "mssql"
-    supports_quantile_partitioning = True
     _DEFAULT_SCHEMA = "dbo"
     _DEFAULTS = {"port": 1433, "user": "sa", "database": "master"}
 
@@ -895,16 +899,6 @@ class MsSqlConnector(_InfoSchemaConnector):
             f"SELECT DISTINCT {exprs} FROM ({base_sql}) _t "
             f"WHERE {key} IS NOT NULL"
         )
-
-    def partition_predicates(self, base_sql: str, key: str, partitions: int) -> list[str]:
-        pdf = self.fetch_pdf(self.quantile_sql(base_sql, key, partitions))
-        points = (
-            []
-            if pdf.empty
-            else [pdf[f"q{i}"][0] for i in range(1, partitions)]
-        )
-        points = [int(p) for p in points if p is not None and not pd.isna(p)]
-        return _bounds_to_preds(key, sorted(set(points)))
 
 
 #: Python-DataSource format name -> the connector that serves it —

@@ -1999,13 +1999,13 @@ def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..queries.llm import (
         _SEM_INC_MOD,
         _SEMDEDUP_TAU,
-        _IVF_ITERS,
         _IVF_K,
-        _assign_cells,
+        _assign_keyed,
         _ckpt_unless_local,
         _dot,
-        _lloyds,
+        _one_prefix,
         _quantize,
+        _train_keyed,
         _vectors_with_norm,
     )
     from ..queries.base import ensure_tables
@@ -2015,14 +2015,14 @@ def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("vec_id") % _SEM_INC_MOD == 0
 
     # frozen index: trained on the corpus ONCE, before the stream
-    q = _quantize(spark)
+    q = _one_prefix(_quantize(spark))
     cents = _ckpt_unless_local(
-        _lloyds(q.filter(~is_new), _IVF_K, _IVF_ITERS, "ivfseed")
+        _train_keyed(q.filter(~is_new), _IVF_K, "ivfseed", 1)
     )
     corpus = (
         _vectors_with_norm(spark)
         .join(
-            _assign_cells(q, cents).select(
+            _assign_keyed(q, cents).select(
                 "vec_id", F.col("cid").alias("cell")
             ),
             "vec_id",
@@ -2074,7 +2074,7 @@ def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .join(
-                _assign_cells(bq, cents).select(
+                _assign_keyed(_one_prefix(bq), cents).select(
                     "vec_id", F.col("cid").alias("cell")
                 ),
                 "vec_id",

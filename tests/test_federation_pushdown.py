@@ -19,6 +19,7 @@ from datafusion_rdbms_ext_spark.queries import REGISTRY
 from datafusion_rdbms_ext_spark.sources.connector import (
     DuckDBConnector,
     SQLiteConnector,
+    _bounds_to_preds,
     connector_for,
     fetch_partitioned,
 )
@@ -82,6 +83,18 @@ def test_range_predicates_are_sort_free_and_partition_the_domain():
     # unbounded-above, interior ranges half-open.
     assert "IS NULL" in preds[0] and preds[0].count("<") == 1
     assert preds[-1].count(">=") == 1 and "<" not in preds[-1]
+    # the shared planner reads DuckDB's one list-valued row exactly as
+    # the points quantile_disc returns; no rows to split -> one slice
+    conn = DuckDBConnector(SF_DIR)
+    base = "SELECT c_custkey, c_acctbal FROM customer"
+    con = conn._connect()
+    try:
+        (points,) = con.execute(conn.quantile_sql(base, "c_custkey", 4)).fetchone()
+    finally:
+        con.close()
+    assert preds == _bounds_to_preds("c_custkey", sorted(set(points)))
+    empty = f"{base} WHERE c_custkey < 0"
+    assert conn.partition_predicates(empty, "c_custkey", 4) == ["TRUE"]
 
 
 def _fed_options(spark, fmt: str) -> dict:

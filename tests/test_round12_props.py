@@ -63,22 +63,22 @@ def test_maintained_index_equals_fresh_index(spark):
     from datafusion_rdbms_ext_spark.queries.llm import (
         _SEM_MNT_K,
         _SEM_MNT_MOD,
-        _IVF_ITERS,
-        _assign_cells,
-        _lloyds,
+        _assign_keyed,
+        _one_prefix,
         _quantize,
+        _train_keyed,
     )
 
-    q = _quantize(spark)
+    q = _one_prefix(_quantize(spark))
     grown = q.filter(F.col("vec_id") % _SEM_MNT_MOD != 0)
-    maintained = _lloyds(grown, _SEM_MNT_K, _IVF_ITERS, "ivfseed")
-    fresh = _lloyds(grown, _SEM_MNT_K, _IVF_ITERS, "ivfseed")
-    m_asg = sorted(
-        map(tuple, _assign_cells(grown, maintained).drop("eq").collect())
-    )
-    f_asg = sorted(
-        map(tuple, _assign_cells(grown, fresh).drop("eq").collect())
-    )
+    maintained = _train_keyed(grown, _SEM_MNT_K, "ivfseed", 1)
+    fresh = _train_keyed(grown, _SEM_MNT_K, "ivfseed", 1)
+    def asg(cents):
+        rows = _assign_keyed(grown, cents).select("vec_id", "cid").collect()
+        return sorted(map(tuple, rows))
+
+    m_asg = asg(maintained)
+    f_asg = asg(fresh)
     assert m_asg == f_asg and len(m_asg) > 0
 
 
@@ -114,12 +114,12 @@ def test_stream_admission_chain_is_exercised(spark):
     from datafusion_rdbms_ext_spark.queries.llm import (
         _SEM_INC_MOD,
         _SEMDEDUP_TAU,
-        _IVF_ITERS,
         _IVF_K,
-        _assign_cells,
+        _assign_keyed,
         _dot,
-        _lloyds,
+        _one_prefix,
         _quantize,
+        _train_keyed,
         _vectors_with_norm,
     )
     from datafusion_rdbms_ext_spark.streaming import (
@@ -134,9 +134,9 @@ def test_stream_admission_chain_is_exercised(spark):
     assert sorted(rows) == list(range(_STREAM_SEM_SPLITS))
     # corpus-only rejection per batch (no chaining)
     is_new = F.col("vec_id") % _SEM_INC_MOD == 0
-    q = _quantize(spark)
-    cents = _lloyds(q.filter(~is_new), _IVF_K, _IVF_ITERS, "ivfseed")
-    cells = _assign_cells(q, cents).select(
+    q = _one_prefix(_quantize(spark))
+    cents = _train_keyed(q.filter(~is_new), _IVF_K, "ivfseed", 1)
+    cells = _assign_keyed(q, cents).select(
         "vec_id", F.col("cid").alias("cell")
     )
     base = (

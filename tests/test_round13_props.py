@@ -10,14 +10,17 @@ from datafusion_rdbms_ext_spark.queries import REGISTRY
 from datafusion_rdbms_ext_spark.queries.llm import (
     _IVF_K,
     _SEM_K2,
+    _SEM_NPROBE,
     _TREE_PACK,
-    hierarchical_cells,
+    hierarchical_index,
     mmr_select,
     semdedup_prune_tree,
     semdedup_prune_tree_deep,
     tree_cells_deep,
+    tree_index_deep,
 )
 
+from . import kmeans_ref as ref
 from .conftest import SF_DIR
 
 
@@ -31,7 +34,8 @@ def test_tree_deep_depth2_bit_identical_to_hierarchical(spark):
     """The depth-parameterized chain at depth 2 must reproduce the
     round-12 2-level tree EXACTLY (same seeds, ties, integer means) —
     the guarantee that lets the deep form share the 2-level form's
-    oracle-backed trust."""
+    oracle-backed trust. The 2-level side is the verbatim pre-collapse
+    ``hierarchical_index`` (tests/kmeans_ref.py)."""
     _tables(spark)
     deep = {
         r["vec_id"]: r["cell"]
@@ -39,9 +43,41 @@ def test_tree_deep_depth2_bit_identical_to_hierarchical(spark):
     }
     two = {
         r["vec_id"]: r["cell"] * _TREE_PACK + r["subcell"]
-        for r in hierarchical_cells(spark, _IVF_K, _SEM_K2).collect()
+        for r in ref.hierarchical_index(spark, _IVF_K, _SEM_K2)[0].collect()
     }
     assert deep == two
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_tree_deep_depth2_probes_bit_identical_to_hierarchical(spark):
+    """With ``nprobe`` the depth-2 tree's leaf probes (packed) equal
+    the pre-collapse 2-level tree's per-cell probes, and
+    ``hierarchical_index`` — now ``tree_index_deep`` at depth 2,
+    unpacked — returns exactly the old (vec_id, cell, subcell) rows
+    and column types, for both its assignment and its probes."""
+    _tables(spark)
+    old_asg, old_probes = ref.hierarchical_index(
+        spark, _IVF_K, _SEM_K2, nprobe=_SEM_NPROBE
+    )
+    _, deep_probes = tree_index_deep(
+        spark, (_IVF_K, _SEM_K2), nprobe=_SEM_NPROBE
+    )
+    packed = sorted(
+        (r["vec_id"], r["cell"] * _TREE_PACK + r["subcell"])
+        for r in old_probes.collect()
+    )
+    assert _rows(deep_probes) == packed
+    assert len(packed) == _SEM_NPROBE * old_asg.count()
+    new_asg, new_probes = hierarchical_index(
+        spark, _IVF_K, _SEM_K2, nprobe=_SEM_NPROBE
+    )
+    assert new_asg.schema == old_asg.schema
+    assert new_probes.schema == old_probes.schema
+    assert _rows(new_asg) == _rows(old_asg)
+    assert _rows(new_probes) == _rows(old_probes)
 
 
 def test_tree_deep_depth2_prune_matches_tree_prune(spark):

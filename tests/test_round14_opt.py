@@ -6,8 +6,8 @@ equivalences directly (the 348-query differential gate pins the
 end-to-end values):
 
 1. The Lloyd's update equals the posexplode + (group, pos)-keyed
-   reference semantics — flat and keyed variants, including the
-   PQ subspace dim. (A one-exchange wide-aggregate rewrite was
+   reference semantics — at one prefix (flat) and keyed, including
+   the PQ subspace dim. (A one-exchange wide-aggregate rewrite was
    tried mid-round and REVERTED after isolated measurement showed
    it ~1.5x slower at sf0.1 — dim-wide CASE/DIV expression trees
    nested per Lloyd's iteration cost more than the saved exchange;
@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from datafusion_rdbms_ext_spark.queries.llm import (
     _INT_MEAN_SPARK,
     _IVF_DIM,
+    _one_prefix,
     _overlap,
-    _update_centroids,
     _update_keyed,
 )
 
@@ -79,7 +79,10 @@ def _synthetic_assigned(spark, keyed: bool):
 
 def test_update_centroids_matches_posexplode_form(spark):
     assigned = _synthetic_assigned(spark, keyed=False)
-    new = {r["cid"]: r["cemb"] for r in _update_centroids(assigned).collect()}
+    new = {
+        r["cid"]: r["cemb"]
+        for r in _update_keyed(_one_prefix(assigned)).collect()
+    }
     old = {
         r["cid"]: r["cemb"]
         for r in _posexplode_update_flat(assigned).collect()
@@ -88,16 +91,16 @@ def test_update_centroids_matches_posexplode_form(spark):
 
 
 def test_update_centroids_subspace_dim(spark):
-    """PQ codebooks train on _PQ_SUBDIM-long slices — the wide
-    aggregate must honor the caller's dim, not assume _IVF_DIM (the
-    round-14 PQ regression this test pins)."""
+    """PQ codebooks train on _PQ_SUBDIM-long slices — the update
+    must follow the data's length, not assume _IVF_DIM (the round-14
+    PQ regression this test pins)."""
     sub = 16
     assigned = _synthetic_assigned(spark, keyed=False).select(
         "cid", F.slice("eq", 1, sub).alias("eq")
     )
     new = {
         r["cid"]: r["cemb"]
-        for r in _update_centroids(assigned, dim=sub).collect()
+        for r in _update_keyed(_one_prefix(assigned)).collect()
     }
     old = {
         r["cid"]: r["cemb"]

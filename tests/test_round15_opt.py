@@ -5,9 +5,13 @@ contract requires bit-identical values. These tests pin the internal
 equivalences directly (the 348-query differential gate pins the
 end-to-end values):
 
-1. The driver-local-iteration Lloyd's (`_lloyds_local`, folded-literal
-   centroids + per-iteration collect) equals the distributed
-   broadcast-chain form — flat and keyed — on the fixture embeddings.
+1. The driver-local-iteration Lloyd's (folded-literal centroids +
+   per-iteration collect) equals the distributed broadcast-chain
+   form — at one prefix (flat) and keyed — on the fixture
+   embeddings; flat k-means, now the keyed trainer at one prefix,
+   equals the flat trainer it replaced (verbatim copy in
+   tests/kmeans_ref.py), and its driver-local assignment and probe
+   plans fold to a literal with no job, join or map lookup.
 2. The lazy-greedy k-center (pooled TakeOrdered + driver-side picks
    under the exact bound) equals the per-pick TakeOrdered(1) reference
    greedy, including the d2 trace, across pool sizes that force both
@@ -26,18 +30,17 @@ from pyspark.sql import functions as F
 from datafusion_rdbms_ext_spark.catalog import register_tables
 from datafusion_rdbms_ext_spark.queries.llm import (
     _IVF_ITERS,
-    _assign_cells,
-    _lloyds,
-    _lloyds_local,
+    _assign_keyed,
+    _one_prefix,
     _phash,
+    _probe_keyed,
     _quantize,
-    _seed_keyed,
     _train_keyed,
-    _update_centroids,
     _update_keyed,
     kcenter_select,
 )
 
+from . import kmeans_ref as ref
 from .conftest import SMOKE_SF_DIR
 
 
@@ -55,14 +58,14 @@ def _lloyds_distributed(vecs, k, iters, seed_tag):
         "cid", F.row_number().over(w).cast("int")
     ).select("cid", F.col("eq").alias("cemb"))
     for _ in range(iters):
-        cents = _update_centroids(_assign_cells(vecs, cents))
+        cents = ref._update_centroids(ref._assign_cells(vecs, cents))
     return cents
 
 
 def test_lloyds_local_equals_distributed_flat(spark):
     register_tables(spark, SMOKE_SF_DIR)
     q = _quantize(spark)
-    local = _lloyds_local(q, 7, _IVF_ITERS, "ivfseed")
+    local = _train_keyed(_one_prefix(q), 7, "ivfseed", 1)
     dist = _lloyds_distributed(q, 7, _IVF_ITERS, "ivfseed")
     lrows = sorted((r["cid"], tuple(r["cemb"])) for r in local.collect())
     drows = sorted((r["cid"], tuple(r["cemb"])) for r in dist.collect())
@@ -71,16 +74,16 @@ def test_lloyds_local_equals_distributed_flat(spark):
 
 def test_lloyds_dispatch_uses_local_under_cap(spark):
     register_tables(spark, SMOKE_SF_DIR)
-    cents = _lloyds(_quantize(spark), 5, 1, "ivfseed")
-    assert getattr(cents, "_local_cents", None)
+    cents = _train_keyed(_one_prefix(_quantize(spark)), 5, "ivfseed", 1, iters=1)
+    assert getattr(cents, "_local_keyed_cents", None)
 
 
 def test_train_keyed_local_equals_distributed(spark):
     register_tables(spark, SMOKE_SF_DIR)
     q = _quantize(spark)
-    cents1 = _lloyds(q, 4, _IVF_ITERS, "ivfseed")
+    cents1 = _train_keyed(_one_prefix(q), 4, "ivfseed", 1)
     vecs = (
-        _assign_cells(q, cents1)
+        _assign_keyed(_one_prefix(q), cents1)
         .select(F.col("cid").cast("long").alias("cell"), "vec_id", "eq")
         .localCheckpoint()
     )
@@ -102,15 +105,15 @@ def test_train_keyed_local_equals_distributed(spark):
 def test_train_keyed_distributed_matches_legacy_loop(spark):
     register_tables(spark, SMOKE_SF_DIR)
     q = _quantize(spark)
-    cents1 = _lloyds(q, 4, _IVF_ITERS, "ivfseed")
+    cents1 = _train_keyed(_one_prefix(q), 4, "ivfseed", 1)
     vecs = (
-        _assign_cells(q, cents1)
+        _assign_keyed(_one_prefix(q), cents1)
         .select(F.col("cid").cast("long").alias("cell"), "vec_id", "eq")
         .localCheckpoint()
     )
-    legacy = _seed_keyed(vecs, 3, "treeseed")
+    legacy = ref._seed_keyed(vecs, 3, "treeseed")
     for _ in range(_IVF_ITERS):
-        legacy = _update_keyed(_assign_cells_keyed_ref(vecs, legacy))
+        legacy = _update_keyed(_assign_keyed(vecs, legacy))
     new = _train_keyed(vecs, 3, "treeseed", prefixes=4)
     lrows = sorted(
         (r["cell"], r["cid"], tuple(r["cemb"])) for r in legacy.collect()
@@ -121,10 +124,91 @@ def test_train_keyed_distributed_matches_legacy_loop(spark):
     assert lrows == nrows and lrows
 
 
-def _assign_cells_keyed_ref(vecs, cents):
-    from datafusion_rdbms_ext_spark.queries.llm import _assign_keyed
+def _cents(df):
+    return sorted((r["cid"], tuple(r["cemb"])) for r in df.collect())
 
-    return _assign_keyed(vecs, cents)
+
+def _pairs(df, col):
+    return sorted((r["vec_id"], r[col]) for r in df.collect())
+
+
+def test_one_prefix_trainer_equals_parent_lloyds(spark):
+    """Flat k-means is the keyed trainer at one prefix: centroids,
+    assignment and probes equal the flat trainer it replaced, both
+    driver-local (under the cap) and distributed (a ``dim`` hint far
+    above it forces both sides onto their broadcast chains)."""
+    register_tables(spark, SMOKE_SF_DIR)
+    q = _quantize(spark)
+    flat = _one_prefix(q)
+    for dim in (64, 1 << 20):
+        new = _train_keyed(flat, 7, "ivfseed", 1, dim=dim)
+        old = ref._lloyds(q, 7, _IVF_ITERS, "ivfseed", dim=dim)
+        local = getattr(new, "_local_keyed_cents", None) is not None
+        assert local == (dim == 64)
+        assert local == (getattr(old, "_local_cents", None) is not None)
+        assert _cents(new) == _cents(old) and len(_cents(new)) == 7
+        assert _pairs(_assign_keyed(flat, new), "cid") == _pairs(
+            ref._assign_cells(q, old), "cid"
+        )
+        assert _pairs(_probe_keyed(flat, new, 2), "subcell") == _pairs(
+            ref._probe_cells(q, old, 2), "cell"
+        )
+
+
+def test_pq_subspace_trainer_equals_parent_lloyds(spark):
+    """The PQ codebooks' 16-long subspace slices train identically
+    through the one-prefix trainer (``dim`` sizes the cap check)."""
+    from datafusion_rdbms_ext_spark.queries.llm import _PQ_SUBDIM, _pq_sub
+
+    register_tables(spark, SMOKE_SF_DIR)
+    sub = _pq_sub(_quantize(spark), 1)
+    new = _train_keyed(sub, 8, "pqseed1", 1, dim=_PQ_SUBDIM)
+    old = ref._lloyds(
+        sub.drop("cell"), 8, _IVF_ITERS, "pqseed1", dim=_PQ_SUBDIM
+    )
+    assert getattr(new, "_local_keyed_cents", None)
+    assert _cents(new) == _cents(old)
+    assert all(len(c) == _PQ_SUBDIM for _, c in _cents(new))
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_local_centroid_plans_fold_and_start_no_job(spark):
+    """Against driver-local centroids, assignment and probing are
+    plan-only: building and optimizing them starts no Spark job and
+    plans no join. At one prefix the map-literal lookup on the
+    constant key folds to the centroid array itself — no element_at,
+    no Filter — so flat assignment costs what the flat literal did.
+    At four prefixes the lookup stays (a vector whose prefix trained
+    nothing must drop out), still with no join."""
+    register_tables(spark, SMOKE_SF_DIR)
+    q = _quantize(spark)
+    flat = _one_prefix(q)
+    keyed = q.withColumn("cell", (F.col("vec_id") % 4).cast("long"))
+    cases = [
+        (flat, _train_keyed(flat, 5, "ivfseed", 1), True),
+        (keyed, _train_keyed(keyed, 3, "treeseed", 4), False),
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for vecs, cents, one_prefix in cases:
+        assert getattr(cents, "_local_keyed_cents", None)
+        sc.setJobGroup("fold-probe", "fold-probe")
+        try:
+            plans = [
+                _optimized(_assign_keyed(vecs, cents)),
+                _optimized(_probe_keyed(vecs, cents, 2)),
+            ]
+        finally:
+            sc.setJobGroup("", "")
+        assert list(tracker.getJobIdsForGroup("fold-probe")) == []
+        for plan in plans:
+            assert "Join" not in plan, plan
+            if one_prefix:
+                assert "element_at" not in plan, plan
+                assert "Filter" not in plan, plan
 
 
 def _kcenter_reference(spark, k):
