@@ -729,18 +729,18 @@ def _unique_suffix() -> str:
     return f"{os.getpid()}.{threading.get_ident()}.{uuid.uuid4().hex[:8]}"
 
 
-def _write_manifest(root: str, version: int, payload: dict) -> None:
-    """Atomic EXCLUSIVE manifest commit: write a temp file, fsync,
-    then link it into place. The link is the commit point — a reader
-    either sees the whole manifest or no manifest, never a torn one —
-    and it FAILS if v{version}.json already exists, so two concurrent
-    writers racing for the same version number produce exactly one
-    winner and one CommitConflict (optimistic concurrency control;
-    os.link is atomic-exclusive on POSIX where os.replace would let
+def _link_json(final: str, payload: dict, conflict: str) -> None:
+    """Atomic EXCLUSIVE commit of one JSON file — every manifest,
+    branch ref and tag of this layer: write a temp file, fsync, then
+    link it into place. The link is the commit point — a reader
+    either sees the whole file or no file, never a torn one — and it
+    FAILS if ``final`` already exists, so two concurrent writers
+    racing for the same name produce exactly one winner and one
+    CommitConflict(``conflict``) (optimistic concurrency control; a
+    hard link is atomic-exclusive on POSIX where a rename would let
     the second writer silently clobber the first)."""
     import json
 
-    final = os.path.join(root, f"v{version}.json")
     tmp = final + ".tmp." + _unique_suffix()
     try:
         with open(tmp, "w") as fh:
@@ -750,17 +750,15 @@ def _write_manifest(root: str, version: int, payload: dict) -> None:
         try:
             os.link(tmp, final)
         except FileExistsError as exc:
-            raise CommitConflict(
-                f"version {version} was committed by another writer"
-            ) from exc
+            raise CommitConflict(conflict) from exc
         except OSError as exc:
             # Filesystems without hard links (some network/FUSE
             # mounts) surface EPERM/EOPNOTSUPP here. Surface the
             # contract violation explicitly instead of a bare OSError:
             # this layer cannot provide atomic-exclusive commits there.
             raise RuntimeError(
-                "atomic-exclusive manifest commit requires hard-link "
-                f"support on {root!r} (os.link failed: {exc})"
+                "atomic-exclusive commit requires hard-link support on "
+                f"{os.path.dirname(final)!r} ({exc})"
             ) from exc
     finally:
         # The temp file must never outlive the commit attempt — on
@@ -769,6 +767,112 @@ def _write_manifest(root: str, version: int, payload: dict) -> None:
             os.remove(tmp)
         except FileNotFoundError:
             pass
+
+
+def _write_manifest(root: str, version: int, payload: dict) -> None:
+    """Commit manifest ``v{version}.json`` exclusively (:func:`_link_json`)."""
+    _link_json(
+        os.path.join(root, f"v{version}.json"),
+        payload,
+        f"version {version} was committed by another writer",
+    )
+
+
+def latest_version(root: str) -> int:
+    """The highest committed manifest version under ``root``, 0 if none."""
+    import glob as _glob
+
+    return max(
+        (
+            int(os.path.basename(p)[1:-5])
+            for p in _glob.glob(os.path.join(root, "v*.json"))
+        ),
+        default=0,
+    )
+
+
+def _write_stage(df: DataFrame, path: str) -> bool:
+    """Write ``df`` once as the IMMUTABLE file group ``path`` (a
+    published manifest points at these exact file paths — an
+    overwrite would orphan it): into a per-writer temp dir, then
+    renamed into place. Returns whether this call's files are the
+    ones at ``path``: False when a finished group is already there or
+    another writer won the rename, in which case the temp is
+    dropped."""
+    import shutil
+
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return False
+    # _unique_suffix, not PID-only: two driver threads (e.g.
+    # foreachBatch) racing the same group share a PID and would
+    # rmtree each other's in-flight write.
+    tmp = f"{path}.tmp.{_unique_suffix()}"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    try:
+        os.rename(tmp, path)
+        return True
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        return False
+
+
+def _audit(staged: DataFrame, snapshot: DataFrame, *by: str) -> DataFrame:
+    """The WAP audit as ONE aggregation, grouped by ``by`` (none: one
+    row): ``(by…, n_staged, v_null, v_dup)``. The left join against
+    the DISTINCT snapshot keys marks collisions without multiplying
+    staged rows, so COUNT(*) is the staged count, COUNT(hit) the
+    semi-join (key-collision) count, and the NULL-text sum the
+    completeness violation count."""
+    return (
+        staged.join(
+            snapshot.select("doc_id").distinct().withColumn("__hit", F.lit(1)),
+            "doc_id",
+            "left",
+        )
+        .groupBy(*by)
+        .agg(
+            F.count(F.lit(1)).alias("n_staged"),
+            F.coalesce(
+                F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)),
+                F.lit(0),
+            ).alias("v_null"),
+            F.count("__hit").alias("v_dup"),
+        )
+    )
+
+
+def _append_commit(
+    root: str, base: int, version_to: int, appended: list[str], **marks
+) -> bool:
+    """Commit v{version_to} = v{base}'s files + ``appended`` —
+    metadata only, no data movement. The manifest carries the
+    base's schema and BOTH delete sidecar flavors (``_CARRIED``:
+    dropping one would resurrect deleted rows) plus the caller's
+    ``marks``. A version another commit already holds is left alone.
+    Returns whether v{version_to} is THIS append (same ``appended``):
+    a replay of it, or the winner of the link race, is; a crashed
+    prior run, a different stage or a second candidate is not."""
+    import json
+
+    final = os.path.join(root, f"v{version_to}.json")
+    if not os.path.exists(final):
+        with open(os.path.join(root, f"v{base}.json")) as fh:
+            prev = json.load(fh)
+        payload = {
+            "version": version_to,
+            "files": sorted(prev["files"]) + appended,
+            "appended": appended,
+            **marks,
+        }
+        for key in _CARRIED:
+            if prev.get(key):
+                payload[key] = prev[key]
+        try:
+            _write_manifest(root, version_to, payload)
+        except CommitConflict:
+            pass  # lost the link race: the check below tells whose
+    with open(final) as fh:
+        return json.load(fh).get("appended") == appended
 
 
 def _bucket_files(root: str, gen: str) -> dict[int, list[str]]:
@@ -1425,86 +1529,37 @@ def source_mor_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stage_files(root: str, stage_name: str) -> list[str]:
+    import glob as _glob
+
+    return sorted(
+        _glob.glob(os.path.join(root, f"stage_{stage_name}", "*.parquet"))
+    )
+
+
 def _wap_stage(
     spark: SparkSession, root: str, staged: DataFrame, stage_name: str
 ) -> DataFrame:
-    """Stage a candidate batch as its own immutable file group and
-    return the staged files, read with the batch's schema. Stages are
-    IMMUTABLE once written (a published manifest points at these
-    exact file paths — an overwrite would orphan it): write to a temp
-    dir and atomically rename into place, the same discipline as the
-    result cache."""
+    """Stage a candidate batch as its own immutable file group
+    (:func:`_write_stage`) and return the staged files, read with the
+    batch's schema."""
     stage_dir = os.path.join(root, f"stage_{stage_name}")
-    if not os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
-        # _unique_suffix, not PID-only: two driver threads (e.g.
-        # foreachBatch) racing the same stage_name share a PID and
-        # would rmtree each other's in-flight staging write.
-        tmp = f"{stage_dir}.tmp.{_unique_suffix()}"
-        staged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, stage_dir)
-        except OSError:  # another writer staged the identical batch
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    _write_stage(staged, stage_dir)
     return read_written(spark, staged.schema, stage_dir)
 
 
 def _wap_publish(
     root: str, version_from: int, version_to: int, stage_name: str
-) -> None:
-    """Commit the manifest that makes a clean-audited stage visible:
-    the old snapshot's files plus the staged ones — metadata only,
-    no data movement."""
-    import glob as _glob
-    import json
-
-    if os.path.exists(os.path.join(root, f"v{version_to}.json")):
-        return  # an identical deterministic publish already won
-    with open(os.path.join(root, f"v{version_from}.json")) as fh:
-        prev = json.load(fh)
-    stage_files = sorted(
-        _glob.glob(os.path.join(root, f"stage_{stage_name}", "*.parquet"))
-    )
-    payload = {
-        "version": version_to,
-        "files": sorted(prev["files"]) + stage_files,
-        "appended": stage_files,
-        "published_from_stage": stage_name,
-    }
-    # carry the schema and BOTH delete sidecar flavors forward, as
-    # every publish site does: dropping equality_deletes here would
-    # resurrect equality-deleted rows if published over such a base
-    # (v6 has none today, but the helper is shared)
-    for key in _CARRIED:
-        if prev.get(key):
-            payload[key] = prev[key]
-    try:
-        _write_manifest(root, version_to, payload)
-    except CommitConflict:
-        pass  # concurrent identical publish won the link race
-
-
-def _published_stage(root: str, version: int, stage_name: str) -> bool:
-    """Whether manifest v{version} is stage ``stage_name`` appended —
-    the post-publish check. :func:`_wap_publish` returns quietly when
-    another commit already holds the version (a crashed prior run, a
-    non-identical stage, a second clean candidate), so only the
-    manifest tells a won publish from a lost one."""
-    import glob as _glob
-    import json
-
-    path = os.path.join(root, f"v{version}.json")
-    if not os.path.exists(path):
-        return False
-    with open(path) as fh:
-        m = json.load(fh)
-    stage_files = sorted(
-        _glob.glob(os.path.join(root, f"stage_{stage_name}", "*.parquet"))
-    )
-    return (
-        m.get("published_from_stage") == stage_name
-        and m.get("appended") == stage_files
+) -> bool:
+    """Commit the manifest that makes a clean-audited stage visible
+    (:func:`_append_commit`); returns whether v{version_to} is this
+    stage appended."""
+    return _append_commit(
+        root,
+        version_from,
+        version_to,
+        _stage_files(root, stage_name),
+        published_from_stage=stage_name,
     )
 
 
@@ -1531,42 +1586,15 @@ def wap_attempt(
     Returns the audit report either way; ``published`` is true only
     when v{version_to} is this stage appended."""
     sdf = _wap_stage(spark, root, staged, stage_name)
-    table = read_version(spark, root, version_from)
-    # ONE aggregation job for all three audit counts (was three
-    # sequential actions): the left join against the DISTINCT
-    # snapshot keys marks collisions without multiplying staged rows,
-    # so COUNT(*) is the staged count, COUNT(hit) the semi-join
-    # count, and the NULL-text sum the completeness violation count.
-    audit = (
-        sdf.join(
-            table.select("doc_id").distinct().withColumn(
-                "__hit", F.lit(1)
-            ),
-            "doc_id",
-            "left",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_staged"),
-            F.coalesce(
-                F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("v_null"),
-            F.count("__hit").alias("v_dup"),
-        )
-        .first()
+    n_staged, v_null, v_dup = map(
+        int, _audit(sdf, read_version(spark, root, version_from)).first()
     )
-    n_staged = int(audit["n_staged"])
-    v_null = int(audit["v_null"])
-    v_dup = int(audit["v_dup"])
-    clean = (v_null + v_dup) == 0
-    if clean:
-        _wap_publish(root, version_from, version_to, stage_name)
-    published = clean and _published_stage(root, version_to, stage_name)
     return {
         "staged_rows": n_staged,
         "null_violations": v_null,
         "key_collisions": v_dup,
-        "published": published,
+        "published": v_null + v_dup == 0
+        and _wap_publish(root, version_from, version_to, stage_name),
     }
 
 
@@ -1672,23 +1700,8 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, cand in (("bad", bad), ("good", good))
     }
     table = read_version(spark, root, 6)
-    audit_df = (
-        staged["bad"]
-        .unionByName(staged["good"])
-        .join(
-            table.select("doc_id").distinct().withColumn("__hit", F.lit(1)),
-            "doc_id",
-            "left",
-        )
-        .groupBy("candidate")
-        .agg(
-            F.count(F.lit(1)).alias("n_staged"),
-            F.coalesce(
-                F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("v_null"),
-            F.count("__hit").alias("v_dup"),
-        )
+    audit_df = _audit(
+        staged["bad"].unionByName(staged["good"]), table, "candidate"
     )
     audit_rows, v6_count = _overlap(
         lambda: {r["candidate"]: r for r in audit_df.collect()},
@@ -1700,20 +1713,17 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         # degrade to the sequential form's n_staged=0 clean report
         # instead of a KeyError (ADVICE r14 #4)
         rep = audit_rows.get(name)
-        n_staged = int(rep["n_staged"]) if rep is not None else 0
-        v_null = int(rep["v_null"]) if rep is not None else 0
-        v_dup = int(rep["v_dup"]) if rep is not None else 0
-        clean = (v_null + v_dup) == 0
-        if clean:
-            _wap_publish(root, 6, 7, name)
+        n_staged, v_null, v_dup = (
+            map(int, rep[1:]) if rep is not None else (0, 0, 0)
+        )
         # A candidate is published only if v7 really is THIS stage
-        # appended to v6: if another commit holds v7 (crashed prior
-        # run, non-identical stage, the other candidate),
-        # _wap_publish returned quietly. A published batch reports
-        # v6 + its own staged rows (the append arithmetic), a
-        # rejected one the snapshot it audited against, and a clean
-        # one that lost v7 the real v7 count.
-        published = clean and _published_stage(root, 7, name)
+        # appended to v6: another commit may hold v7 (crashed prior
+        # run, non-identical stage, the other candidate). A published
+        # batch reports v6 + its own staged rows (the append
+        # arithmetic), a rejected one the snapshot it audited
+        # against, and a clean one that lost v7 the real v7 count.
+        clean = v_null + v_dup == 0
+        published = clean and _wap_publish(root, 6, 7, name)
         visible = v6_count
         if published:
             visible = v6_count + n_staged
@@ -1757,15 +1767,7 @@ def equality_delete_root(spark: SparkSession, sf_dir: str) -> str:
     keys = spark.range(0, 20000).select(
         F.col("id").alias("doc_id")
     ).filter(F.col("doc_id") % 100 == 11)
-    if not os.path.exists(os.path.join(root, "eq8", "_SUCCESS")):
-        tmp = os.path.join(root, f"eq8.tmp.{_unique_suffix()}")
-        keys.coalesce(1).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, os.path.join(root, "eq8"))
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    _write_stage(keys, os.path.join(root, "eq8"))
     try:
         _write_manifest(
             root,
@@ -1873,17 +1875,9 @@ def compact_equality_deletes(spark: SparkSession, sf_dir: str) -> str:
     dv_old = read_written(
         spark, _DV_SCHEMA, os.path.join(root, m8["delete_vectors"])
     )
-    if not os.path.exists(os.path.join(root, "dv9", "_SUCCESS")):
-        tmp = os.path.join(root, f"dv9.tmp.{_unique_suffix()}")
-        dv_old.unionByName(eq_pos).distinct().coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        try:
-            os.rename(tmp, os.path.join(root, "dv9"))
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
+    _write_stage(
+        dv_old.unionByName(eq_pos).distinct(), os.path.join(root, "dv9")
+    )
     try:
         _write_manifest(
             root,
@@ -1970,31 +1964,16 @@ def tag_version(root: str, name: str, version: int) -> None:
     refs = os.path.join(root, "refs")
     os.makedirs(refs, exist_ok=True)
     final = os.path.join(refs, f"{name}.json")
-    if os.path.exists(final):
-        with open(final) as fh:
-            if json.load(fh)["version"] == version:
-                return
-        raise CommitConflict(f"tag {name!r} already points elsewhere")
-    tmp = final + ".tmp." + _unique_suffix()
     try:
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "version": version}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, final)
-        except FileExistsError as exc:
-            with open(final) as fh:
-                if json.load(fh)["version"] == version:
-                    return  # identical concurrent tag
-            raise CommitConflict(
-                f"tag {name!r} already points elsewhere"
-            ) from exc
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+        _link_json(
+            final,
+            {"name": name, "version": version},
+            f"tag {name!r} already points elsewhere",
+        )
+    except CommitConflict:
+        with open(final) as fh:
+            if json.load(fh)["version"] != version:
+                raise
 
 
 def read_tag(spark: SparkSession, root: str, name: str) -> DataFrame:
@@ -2128,27 +2107,11 @@ def branch_init(root: str, name: str, version: int) -> None:
 
 
 def _write_ref_seq(root: str, name: str, seq: int, version: int) -> None:
-    import json
-
-    final = os.path.join(_branch_dir(root, name), f"{seq}.json")
-    tmp = final + ".tmp." + _unique_suffix()
-    try:
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "seq": seq, "version": version}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, final)
-        except FileExistsError as exc:
-            raise CommitConflict(
-                f"branch {name!r} ref seq {seq} was advanced by "
-                "another writer"
-            ) from exc
-    finally:
-        try:
-            os.remove(tmp)
-        except FileNotFoundError:
-            pass
+    _link_json(
+        os.path.join(_branch_dir(root, name), f"{seq}.json"),
+        {"name": name, "seq": seq, "version": version},
+        f"branch {name!r} ref seq {seq} was advanced by another writer",
+    )
 
 
 def branch_advance(
@@ -2215,103 +2178,67 @@ def branch_commit(
     then commit the global manifest v{version_to} (parent = branch
     head) and CAS the branch ref. Main never sees the rows: its ref
     is untouched. Returns the new branch head version. Idempotent:
-    a re-run whose manifest exists just re-asserts the ref."""
-    import glob as _glob
-    import json
-
+    a re-run whose manifest exists just re-asserts the ref. A
+    v{version_to} that is not this stage appended (another branch's
+    commit won the version) raises CommitConflict, ref unmoved."""
     head = branch_head(root, branch)
     if head is None:
         raise CommitConflict(f"branch {branch!r} does not exist")
     parent = head[0]
-    if os.path.exists(os.path.join(root, f"v{version_to}.json")):
-        branch_advance(root, branch, parent, version_to)
-        return version_to
     stage_dir = os.path.join(root, f"stage_{stage_name}")
-    table = read_version(spark, root, parent)
+    if not os.path.exists(os.path.join(root, f"v{version_to}.json")):
+        table = read_version(spark, root, parent)
 
-    def _audit(sdf) -> int:
-        # one aggregation job for both audit counts (was two actions);
-        # the DISTINCT probe side keeps COUNT(hit) == semi-join count
-        return int(
-            sdf.join(
-                table.select("doc_id").distinct().withColumn(
-                    "__hit", F.lit(1)
-                ),
-                "doc_id",
-                "left",
+        def violations(sdf) -> int:
+            _, v_null, v_dup = _audit(sdf, table).first()
+            return v_null + v_dup
+
+        def audit_stage() -> int:
+            return violations(read_written(spark, staged.schema, stage_dir))
+
+        if os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
+            # replayed batch: audit the durable files
+            bad = audit_stage()
+        else:
+            # Round 15 (guide §2.6, VERDICT r14 next #5): the stage
+            # write and the audit aggregation are independent jobs
+            # over the SAME deterministic batch (the files the write
+            # produces ARE the rows the audit lineage reads), so run
+            # them in parallel driver threads instead of
+            # write-then-read-back. The audit verdict and the staged
+            # bytes are unchanged; a failing audit leaves the staged
+            # files exactly like the sequential form.
+            from ..queries.llm import _overlap
+
+            renamed, bad = _overlap(
+                lambda: _write_stage(staged, stage_dir),
+                lambda: violations(staged),
             )
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)),
-                    F.lit(0),
-                )
-                + F.count("__hit")
+            if not renamed:
+                # Lost the rename: stage_dir holds another writer's
+                # files, which the overlapped audit never saw. They
+                # are what the manifest commits, so audit them.
+                if not os.path.isdir(stage_dir):
+                    raise RuntimeError(
+                        f"branch WAP stage {stage_name!r} was not written"
+                    )
+                bad = audit_stage()
+        if bad:
+            raise RuntimeError(
+                f"branch WAP audit failed for {stage_name!r}: "
+                f"{bad} violations"
             )
-            .first()[0]
+    if not _append_commit(
+        root,
+        parent,
+        version_to,
+        _stage_files(root, stage_name),
+        parent=parent,
+        branch=branch,
+    ):
+        raise CommitConflict(
+            f"v{version_to} is not stage {stage_name!r} on {branch!r}"
         )
-
-    def _audit_stage() -> int:
-        return _audit(read_written(spark, staged.schema, stage_dir))
-
-    if os.path.exists(os.path.join(stage_dir, "_SUCCESS")):
-        # replayed batch: audit the durable files, exactly as before
-        bad = _audit_stage()
-    else:
-        # Round 15 (guide §2.6, VERDICT r14 next #5): the stage write
-        # and the audit aggregation are independent jobs over the SAME
-        # deterministic batch (the files the write produces ARE the
-        # rows the audit lineage reads), so run them in parallel
-        # driver threads instead of write-then-read-back. The audit
-        # verdict and the staged bytes are unchanged; a failing audit
-        # leaves the staged files exactly like the sequential form.
-        from ..queries.llm import _overlap
-
-        def _write() -> bool:
-            # _unique_suffix, not PID-only: two driver threads (e.g.
-            # foreachBatch) racing the same stage_name share a PID and
-            # would rmtree each other's in-flight staging write.
-            tmp = f"{stage_dir}.tmp.{_unique_suffix()}"
-            staged.coalesce(1).write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, stage_dir)
-                return True
-            except OSError:
-                import shutil
-
-                shutil.rmtree(tmp, ignore_errors=True)
-                return False
-
-        renamed, bad = _overlap(_write, lambda: _audit(staged))
-        if not renamed:
-            # Lost the rename: stage_dir holds another writer's files,
-            # which the overlapped audit never saw. They are what the
-            # manifest commits, so audit them.
-            if not os.path.isdir(stage_dir):
-                raise RuntimeError(
-                    f"branch WAP stage {stage_name!r} was not written"
-                )
-            bad = _audit_stage()
-    if bad:
-        raise RuntimeError(
-            f"branch WAP audit failed for {stage_name!r}: {bad} violations"
-        )
-    with open(os.path.join(root, f"v{parent}.json")) as fh:
-        prev = json.load(fh)
-    stage_files = sorted(_glob.glob(os.path.join(stage_dir, "*.parquet")))
-    payload = {
-        "version": version_to,
-        "files": sorted(prev["files"]) + stage_files,
-        "appended": stage_files,
-        "parent": parent,
-        "branch": branch,
-    }
-    for carry in _CARRIED:
-        if prev.get(carry):
-            payload[carry] = prev[carry]
-    try:
-        _write_manifest(root, version_to, payload)
-    except CommitConflict:
-        pass  # concurrent identical publish won the link race
     branch_advance(root, branch, parent, version_to)
     return version_to
 
@@ -2367,48 +2294,33 @@ def cherry_pick(
     staged files are reused BY REFERENCE: zero data movement, one
     audit, one manifest, one ref CAS. Audits key collisions against
     the target head (the appended keys may already exist there).
-    Idempotent: if ``version_to`` exists, the ref is just
-    re-asserted."""
+    Idempotent: if ``version_to`` is this pick, the ref is just
+    re-asserted; if it is another commit, CommitConflict."""
     import json
 
     head = branch_head(root, into)
     if head is None:
         raise CommitConflict(f"branch {into!r} does not exist")
     cur = head[0]
-    if os.path.exists(os.path.join(root, f"v{version_to}.json")):
-        branch_advance(root, into, cur, version_to)
-        return version_to
     with open(os.path.join(root, f"v{version}.json")) as fh:
         src = json.load(fh)
-    appended = src.get("appended")
+    appended = sorted(src.get("appended") or [])
     if not appended:
         raise CommitConflict(
             f"v{version} is not an append commit: cannot cherry-pick"
         )
-    target = read_version(spark, root, cur)
-    picked = read_written(spark, src["schema"], *appended)
-    dup = picked.join(target.select("doc_id"), "doc_id", "left_semi").count()
-    if dup:
-        raise RuntimeError(
-            f"cherry-pick audit failed: {dup} keys of v{version} already "
-            f"exist on {into!r}"
-        )
-    with open(os.path.join(root, f"v{cur}.json")) as fh:
-        prev = json.load(fh)
-    payload = {
-        "version": version_to,
-        "files": sorted(prev["files"]) + sorted(appended),
-        "appended": sorted(appended),
-        "parent": cur,
-        "cherry_picked_from": version,
-    }
-    for carry in _CARRIED:
-        if prev.get(carry):
-            payload[carry] = prev[carry]
-    try:
-        _write_manifest(root, version_to, payload)
-    except CommitConflict:
-        pass  # concurrent identical pick won the link race
+    if not os.path.exists(os.path.join(root, f"v{version_to}.json")):
+        picked = read_written(spark, src["schema"], *appended)
+        _, _, dup = _audit(picked, read_version(spark, root, cur)).first()
+        if dup:
+            raise RuntimeError(
+                f"cherry-pick audit failed: {dup} keys of v{version} "
+                f"already exist on {into!r}"
+            )
+    if not _append_commit(
+        root, cur, version_to, appended, parent=cur, cherry_picked_from=version
+    ):
+        raise CommitConflict(f"v{version_to} is not the pick of v{version}")
     branch_advance(root, into, cur, version_to)
     return version_to
 
@@ -2989,47 +2901,8 @@ def source_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # thousands of files) is the difference between a metadata lookup
 # and a listing+footer storm.
 # ---------------------------------------------------------------------------
-_ZONEMAP_DIR_CONF = "spark.datafusion_rdbms_ext.zonemap_dir"
 _ZONEMAP_FILES = 16
 _ZONEMAP_LO, _ZONEMAP_HI = 200, 700  # probe range (valid at every sf)
-
-
-def zonemap_lineitem_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
-    """Write lineitem range-clustered on l_orderkey + its manifest of
-    per-file (min, max) zonemaps, once per (session, sf_dir)."""
-    import glob as _glob
-    import json as _json
-
-    key = f"{_ZONEMAP_DIR_CONF}.{abs(hash(sf_dir))}"
-    existing = spark.conf.get(key, None)
-    if existing and os.path.isdir(existing):
-        with open(os.path.join(existing, "manifest.json")) as fh:
-            return existing, _json.load(fh)
-    root = tempfile.mkdtemp(prefix="sink_zonemap_")
-    data = os.path.join(root, "data")
-    (
-        spark.table("lineitem")
-        .repartitionByRange(_ZONEMAP_FILES, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.mode("overwrite")
-        .parquet(data)
-    )
-    stats = (
-        spark.read.parquet(data)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(
-            F.min("l_orderkey").alias("mn"), F.max("l_orderkey").alias("mx")
-        )
-        .collect()  # <= #files rows: manifest-sized, never data-sized
-    )
-    manifest = {
-        r["f"].replace("file://", ""): [int(r["mn"]), int(r["mx"])]
-        for r in stats
-    }
-    with open(os.path.join(root, "manifest.json"), "w") as fh:
-        _json.dump(manifest, fh)
-    spark.conf.set(key, root)
-    return root, manifest
 
 
 def zonemap_prune(manifest: dict, lo: int, hi: int) -> list[str]:
@@ -3064,23 +2937,10 @@ def sink_zonemap_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     planner runs. The residual in-file filter still pushes into the
     parquet scan (row-group pruning composes under the file-level
     skip)."""
-    root, manifest = zonemap_lineitem_root(spark, sf_dir)
+    root, manifest, _ = composed_skip_root(spark, sf_dir)
     files = zonemap_prune(manifest, _ZONEMAP_LO, _ZONEMAP_HI)
-    if not files:
-        # Every file pruned: the aggregate over zero rows (the scan
-        # list may legitimately be empty for an out-of-range probe).
-        files = sorted(manifest)[:1]
-        return (
-            spark.read.parquet(*files)
-            .filter(F.lit(False))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("l_orderkey").alias("n_orders"),
-                dsum(F.col("l_quantity")).alias("sum_qty"),
-            )
-        )
     return (
-        spark.read.parquet(*files)
+        read_written(spark, composed_schema(root, "data"), *files)
         .filter(F.col("l_orderkey").between(_ZONEMAP_LO, _ZONEMAP_HI))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -3114,8 +2974,8 @@ def composed_skip_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict, int
     the schemas of the data and Bloom tables, which every read of
     them uses (:func:`composed_schema`).
 
-    Scale: the layout + zonemap half is exactly zonemap_lineitem_root;
-    the Bloom half is a distributed parquet index table (file, bit) —
+    Scale: the layout + zonemap half is what sink_zonemap_manifest
+    prunes alone; the Bloom half is a distributed parquet index table (file, bit) —
     ndv x k rows of two small columns per file, never collected. The
     JSON manifest stays KB-sized (ranges only); the bitmap side scales
     with data but reads pruned (bit IN probes) at lookup."""

@@ -542,18 +542,11 @@ class DurableSketchState:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def _latest_version(self) -> int:
-        import glob as _glob
-
-        vs = [
-            int(os.path.basename(p)[1:-5])
-            for p in _glob.glob(os.path.join(self.root, "v*.json"))
-        ]
-        return max(vs, default=0)
-
     def latest(self) -> dict[str, int]:
         """The merged counters as of the last committed batch."""
-        v = self._latest_version()
+        from ..sources.sinks import latest_version
+
+        v = latest_version(self.root)
         if v == 0:
             return {}
         with open(os.path.join(self.root, f"v{v}.json")) as fh:
@@ -909,10 +902,9 @@ def stream_versioned_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows with file count, which compaction (source_compaction)
     bounds. State is zero: idempotence lives in the version-numbered
     commit, which also serializes concurrent writers."""
-    import glob as _glob
     import tempfile
 
-    from ..sources.sinks import read_written
+    from ..sources.sinks import latest_version, read_written
 
     root = tempfile.mkdtemp(prefix="stream_versioned_")
 
@@ -928,11 +920,7 @@ def stream_versioned_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    latest = max(
-        int(os.path.basename(p)[1:-5])
-        for p in _glob.glob(os.path.join(root, "v*.json"))
-    )
-    with open(os.path.join(root, f"v{latest}.json")) as fh:
+    with open(os.path.join(root, f"v{latest_version(root)}.json")) as fh:
         manifest = json.load(fh)
     snap = read_written(spark, manifest["schema"], *manifest["files"])
     return (
@@ -1578,15 +1566,12 @@ class CdfFrontier:
         os.makedirs(root, exist_ok=True)
 
     def latest(self) -> dict | None:
-        import glob as _glob
+        from ..sources.sinks import latest_version
 
-        vs = sorted(
-            int(os.path.basename(p)[1:-5])
-            for p in _glob.glob(os.path.join(self.root, "v*.json"))
-        )
-        if not vs:
+        v = latest_version(self.root)
+        if v == 0:
             return None
-        with open(os.path.join(self.root, f"v{vs[-1]}.json")) as fh:
+        with open(os.path.join(self.root, f"v{v}.json")) as fh:
             return json.load(fh)
 
     def commit(self, step: int, payload: dict) -> None:

@@ -330,3 +330,77 @@ def test_wap_attempt_reports_a_lost_publish(spark, tiny_root):
     # the same stage published to a free version does report it
     assert wap_attempt(spark, root, 1, 3, batch, "t_late")["published"]
     assert read_version(spark, root, 3).count() == 5
+
+
+def _doc_ids(df) -> list[int]:
+    return sorted(r[0] for r in df.select("doc_id").collect())
+
+
+def test_branch_ref_moves_only_onto_its_own_commit(spark, tiny_root):
+    """When another branch already holds v{version_to}, a branch
+    commit (or a cherry-pick) to it raises CommitConflict and leaves
+    the ref alone: moving the ref there would serve the other
+    branch's rows and drop the batch. A true replay still re-asserts."""
+    from datafusion_rdbms_ext_spark.sources.sinks import cherry_pick
+
+    root = tiny_root
+    branch_init(root, "main", 1)
+    branch_init(root, "dev", 1)
+    main_batch = spark.createDataFrame(
+        [(100, "main row")], "doc_id long, text string"
+    )
+    dev_batch = spark.createDataFrame(
+        [(200, "dev row")], "doc_id long, text string"
+    )
+    branch_commit(spark, root, "main", main_batch, "main_batch", 2)
+    with pytest.raises(CommitConflict):
+        branch_commit(spark, root, "dev", dev_batch, "dev_batch", 2)
+    assert branch_head(root, "dev") == (1, 1)
+    assert _doc_ids(read_branch(spark, root, "dev")) == [0, 1, 2, 3]
+    # the batch lands on a free version, and its replay re-asserts
+    assert branch_commit(spark, root, "dev", dev_batch, "dev_batch", 3) == 3
+    assert branch_commit(spark, root, "dev", dev_batch, "dev_batch", 3) == 3
+    assert branch_head(root, "dev") == (3, 2)
+    assert _doc_ids(read_branch(spark, root, "dev")) == [0, 1, 2, 3, 200]
+    # a pick whose version_to holds another commit is refused too
+    with pytest.raises(CommitConflict):
+        cherry_pick(spark, root, "main", 3, 2)
+    assert branch_head(root, "main") == (2, 2)
+    assert _doc_ids(read_branch(spark, root, "main")) == [0, 1, 2, 3, 100]
+
+
+def test_branch_commits_racing_for_one_version(spark, tiny_root):
+    """Two threads commit different batches to different branches as
+    the same version: exactly one wins, the loser raises
+    CommitConflict and keeps its head."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    root = tiny_root
+    batches = {}
+    for name, key in (("a", 300), ("b", 400)):
+        branch_init(root, name, 1)
+        batches[name] = spark.createDataFrame(
+            [(key, name)], "doc_id long, text string"
+        )
+    start = threading.Barrier(2)
+
+    def commit(name):
+        start.wait(timeout=60)
+        try:
+            return branch_commit(
+                spark, root, name, batches[name], f"race_{name}", 2
+            )
+        except CommitConflict:
+            return None
+
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        results = dict(zip("ab", ex.map(commit, "ab")))
+    winners = [n for n, v in results.items() if v == 2]
+    assert len(winners) == 1, results
+    (loser,) = set("ab") - set(winners)
+    assert results[loser] is None
+    assert branch_head(root, winners[0]) == (2, 2)
+    assert branch_head(root, loser) == (1, 1)
+    with open(os.path.join(root, "v2.json")) as fh:
+        assert json.load(fh)["branch"] == winners[0]

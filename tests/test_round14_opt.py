@@ -194,25 +194,10 @@ def test_wap_audit_fusion_counts(spark):
         snapshot.select("doc_id"), "doc_id", "left_semi"
     ).count()
     n_ref = staged.count()
-    # the fused single aggregation (sinks.wap_attempt shape)
-    row = (
-        staged.join(
-            snapshot.select("doc_id").distinct().withColumn(
-                "__hit", F.lit(1)
-            ),
-            "doc_id",
-            "left",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_staged"),
-            F.coalesce(
-                F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("v_null"),
-            F.count("__hit").alias("v_dup"),
-        )
-        .first()
-    )
+    # the fused single aggregation every WAP audit runs
+    from datafusion_rdbms_ext_spark.sources.sinks import _audit
+
+    row = _audit(staged, snapshot).first()
     assert (
         int(row["n_staged"]),
         int(row["v_null"]),

@@ -376,12 +376,12 @@ def test_zonemap_manifest_prunes_files(spark):
     from datafusion_rdbms_ext_spark.sources.sinks import (
         _ZONEMAP_HI,
         _ZONEMAP_LO,
-        zonemap_lineitem_root,
+        composed_skip_root,
         zonemap_prune,
     )
 
     ensure_tables(spark, SMOKE_SF_DIR)
-    root, manifest = zonemap_lineitem_root(spark, SMOKE_SF_DIR)
+    _, manifest, _ = composed_skip_root(spark, SMOKE_SF_DIR)
     files = zonemap_prune(manifest, _ZONEMAP_LO, _ZONEMAP_HI)
     assert len(manifest) > 1
     # sf0.001's key domain is ~1500 orderkeys, so the 500-key probe
