@@ -934,8 +934,13 @@ _SQL_PAIR_DOT = (
 )
 
 
-def _vectors_with_norm(spark: SparkSession) -> DataFrame:
-    return spark.table("embeddings").select(
+def _vectors_with_norm(
+    spark: SparkSession, vecs: DataFrame | None = None
+) -> DataFrame:
+    """``vecs`` (default: the ``embeddings`` table) with each vector's
+    L2 norm ``nrm``."""
+    vecs = spark.table("embeddings") if vecs is None else vecs
+    return vecs.select(
         "vec_id", "label", "embedding", F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nrm")
     )
 
@@ -1141,13 +1146,15 @@ def default_srp_band_bits(n: int) -> int:
     return max(4, max(int(n), 2).bit_length() - 7)
 
 
-def _quantize(spark: SparkSession) -> DataFrame:
-    """Embeddings scalar-quantized to integer components (the Faiss
-    IVF-SQ shape). Quantization is what makes the k-means EXACT across
-    engines: every distance and every centroid update below is
-    integer arithmetic, so the oracle's assignments cannot drift by a
+def _quantize(spark: SparkSession, vecs: DataFrame | None = None) -> DataFrame:
+    """Embeddings of ``vecs`` (default: the ``embeddings`` table)
+    scalar-quantized to integer components (the Faiss IVF-SQ shape).
+    Quantization is what makes the k-means EXACT across engines:
+    every distance and every centroid update below is integer
+    arithmetic, so the oracle's assignments cannot drift by a
     floating-point ulp."""
-    return spark.table("embeddings").select(
+    vecs = spark.table("embeddings") if vecs is None else vecs
+    return vecs.select(
         "vec_id",
         F.transform(
             "embedding",
@@ -4183,9 +4190,7 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_prune(spark, k=_IVF_K)
 
 
-def semdedup_prune(
-    spark: SparkSession, k: int | None = None, tau: float = _SEMDEDUP_TAU
-) -> DataFrame:
+def semdedup_prune(spark: SparkSession, k: int | None = None) -> DataFrame:
     """Per-cluster corpus reduction under semantic near-dup pruning.
 
     ``k=None`` derives the self-scaling cluster count from a cheap
@@ -4214,24 +4219,63 @@ def semdedup_prune(
         .join(cells, "vec_id")
         .select("vec_id", "cell", "embedding", "nrm")
     )
-    a = base.select(
+    return _sem_rollup(base, _sem_pruned(base, base, ["cell"]), "cell")
+
+
+def _sem_pruned(
+    query: DataFrame,
+    base: DataFrame,
+    keys: list[str],
+    lower_id_wins: bool = True,
+) -> DataFrame:
+    """The SemDeDup pair rule — the package's one copy: DISTINCT
+    ``vec_id`` of the ``base`` rows that share every shard key in
+    ``keys`` with a ``query`` row at cosine >= ``_SEMDEDUP_TAU``. With
+    ``lower_id_wins`` (pruning, and admission within a batch) only a
+    query row of LOWER id counts; without it (admission against the
+    prior corpus) any row does. Both sides carry (vec_id, keys...,
+    embedding, nrm); a probe-expanded query side (:func:`_probed`)
+    holds one row per probed shard, and the DISTINCT absorbs a pair
+    that matches via several probes.
+
+    Scale: the pair join is bucketed on the shard keys, so pair work
+    is shard-local (query rows x occupancy per shard), never
+    all-pairs; the output is id-sized."""
+    a = query.select(
         F.col("vec_id").alias("a_id"),
-        "cell",
+        *keys,
         F.col("embedding").alias("a_emb"),
         F.col("nrm").alias("a_nrm"),
     )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (F.col("a_nrm") * F.col("nrm"))
-    pruned = (
-        a.join(base, "cell")
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(1))
+    pairs = a.join(base, keys)
+    if lower_id_wins:
+        pairs = pairs.filter(F.col("a_id") < F.col("vec_id"))
+    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
+        F.col("a_nrm") * F.col("nrm")
     )
+    return pairs.filter(cos >= _SEMDEDUP_TAU).select("vec_id").distinct()
+
+
+def _probed(base: DataFrame, *probes: DataFrame) -> DataFrame:
+    """The multi-probe query side: ``base`` with each shard-key column
+    that a ``probes`` frame (vec_id, key) carries replaced by that
+    frame's rows — one row per probed shard. Probe 1 is the assigned
+    shard, so the probed pairs are a superset of the probe=1 pairs by
+    construction; the base side stays single-assigned."""
+    probed = {p.columns[1] for p in probes}
+    side = base.select(*(c for c in base.columns if c not in probed))
+    for p in probes:
+        side = side.join(p, "vec_id")
+    return side
+
+
+def _sem_rollup(base: DataFrame, pruned: DataFrame, by: str | Column) -> DataFrame:
+    """(cell, n_vecs, n_pruned, n_kept) of ``base`` with its
+    ``pruned`` ids marked, grouped by the rollup key ``by`` (a column
+    named ``cell``: the shard's level-1 cell)."""
     return (
-        base.join(pruned, "vec_id", "left")
-        .groupBy("cell")
+        base.join(pruned.withColumn("is_pruned", F.lit(1)), "vec_id", "left")
+        .groupBy(by)
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.count("is_pruned").alias("n_pruned"),
@@ -4461,30 +4505,8 @@ def llm_semdedup_shard_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-level's) are property-proven in
     tests/test_round11_props.py and test_round12_props.py; this
     query puts the MAGNITUDES under the differential gate."""
-    q2 = _one_prefix(_quantize(spark))
-
-    # level-1 index trained once and kept as centroids (not just the
-    # assignment) so the round-13 level-1 probe expansion shares the
-    # exact frozen index with the assignment below; the two levels
-    # are independent trainings — overlap them (guide §2.6)
-    def _level(k: int, seed: str, col: str):
-        cents = _ckpt_unless_local(_learned_centroids(spark, k, seed))
-        cells = (
-            _assign_keyed(q2, cents)
-            .select("vec_id", F.col("cid").alias(col))
-            .localCheckpoint()
-        )
-        return cents, cells
-
-    (cents1, cells1), (cents2, cells2) = _overlap(
-        lambda: _level(_IVF_K, "ivfseed", "cell"),
-        lambda: _level(_SEM_K2, "ivfseed2", "cell2"),
-    )
-    probes1 = _probe_keyed(q2, cents1, _SEM_NPROBE).select(
-        "vec_id", F.col("subcell").alias("cell")
-    )
-    probes2 = _probe_keyed(q2, cents2, _SEM_NPROBE).select(
-        "vec_id", F.col("subcell").alias("cell2")
+    (cells1, probes1), (cells2, probes2) = _sharded_levels(
+        spark, _IVF_K, _SEM_K2, _SEM_NPROBE, _SEM_NPROBE
     )
     base = (
         _vectors_with_norm(spark)
@@ -4493,102 +4515,29 @@ def llm_semdedup_shard_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cell", "cell2", "embedding", "nrm")
         .localCheckpoint()
     )
-    a = base.select(
-        F.col("vec_id").alias("a_id"),
-        "cell",
-        "cell2",
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    # multi-probe query side: assigned cell2 replaced by the nprobe
-    # nearest level-2 cells (probe 1 IS the assignment, so probe=1
-    # pairs are a subset by construction)
-    amp = (
-        base.select("vec_id", "cell", "embedding", "nrm")
-        .join(probes2, "vec_id")
-        .select(
-            F.col("vec_id").alias("a_id"),
-            "cell",
-            "cell2",
-            F.col("embedding").alias("a_emb"),
-            F.col("nrm").alias("a_nrm"),
-        )
-    )
-    # BOTH levels probed (round 13, VERDICT r12 next #6): the query
-    # side expands into its nprobe nearest level-1 cells AND nprobe
-    # nearest level-2 cells (nprobe^2 probe pairs, pair work x4 over
-    # probe=1 — still linear); the base side stays single-assigned
-    ampb = (
-        base.select("vec_id", "embedding", "nrm")
-        .join(probes1, "vec_id")
-        .join(probes2, "vec_id")
-        .select(
-            F.col("vec_id").alias("a_id"),
-            "cell",
-            "cell2",
-            F.col("embedding").alias("a_emb"),
-            F.col("nrm").alias("a_nrm"),
-        )
-    )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
-        F.col("a_nrm") * F.col("nrm")
-    )
-
-    def pruned(side: DataFrame, join_keys: list) -> DataFrame:
-        return (
-            side.join(base, join_keys)
-            .filter(F.col("a_id") < F.col("vec_id"))
-            .filter(cos >= _SEMDEDUP_TAU)
-            .select("vec_id")
-            .distinct()
-        )
-
-    # hierarchical (tree) second level at the same shard count —
-    # the equal-cost second-level-design comparison (19f), trained
-    # ONCE for both the probe=1 and probe=2 (19g) query sides
-    asg_t, probes_t = hierarchical_index(
-        spark, _IVF_K, _SEM_K2, nprobe=_SEM_NPROBE
+    # hierarchical (tree) second level at the same shard count — the
+    # equal-cost second-level-design comparison (19f), trained ONCE for
+    # both the probe=1 and probe=2 (19g) query sides; its shards are
+    # the packed depth-2 leaves
+    asg_t, probes_t = tree_index_deep(
+        spark, (_IVF_K, _SEM_K2), nprobe=_SEM_NPROBE
     )
     baset = (
         _vectors_with_norm(spark)
         .join(asg_t, "vec_id")
-        .select("vec_id", "cell", "subcell", "embedding", "nrm")
+        .select("vec_id", "cell", "embedding", "nrm")
         .localCheckpoint()
     )
-    at = baset.select(
-        F.col("vec_id").alias("a_id"),
-        "cell",
-        "subcell",
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    atmp = (
-        baset.select("vec_id", "embedding", "nrm")
-        .join(probes_t, "vec_id")
-        .select(
-            F.col("vec_id").alias("a_id"),
-            "cell",
-            "subcell",
-            F.col("embedding").alias("a_emb"),
-            F.col("nrm").alias("a_nrm"),
-        )
-    )
-
-    def pruned_t(side: DataFrame) -> DataFrame:
-        return (
-            side.join(baset, ["cell", "subcell"])
-            .filter(F.col("a_id") < F.col("vec_id"))
-            .filter(cos >= _SEMDEDUP_TAU)
-            .select("vec_id")
-            .distinct()
-        )
-
-    p_def = pruned(a, ["cell"]).localCheckpoint()
-    p_sh = pruned(a, ["cell", "cell2"])
-    p_mp = pruned(amp, ["cell", "cell2"])
-    p_mpb = pruned(ampb, ["cell", "cell2"])
-    p_tree = pruned_t(at)
-    p_tree_mp = pruned_t(atmp)
+    both = ["cell", "cell2"]
+    p_def = _sem_pruned(base, base, ["cell"]).localCheckpoint()
+    p_sh = _sem_pruned(base, base, both)
+    # multi-probe query sides: level 2 only, then BOTH levels (round
+    # 13, VERDICT r12 next #6: nprobe^2 probe pairs per query vector,
+    # pair work x4 over probe=1 — still linear)
+    p_mp = _sem_pruned(_probed(base, probes2), base, both)
+    p_mpb = _sem_pruned(_probed(base, probes1, probes2), base, both)
+    p_tree = _sem_pruned(baset, baset, ["cell"])
+    p_tree_mp = _sem_pruned(_probed(baset, probes_t), baset, ["cell"])
     agree = p_sh.join(p_def, "vec_id", "left_semi")
     agree_mp = p_mp.join(p_def, "vec_id", "left_semi")
     agree_mpb = p_mpb.join(p_def, "vec_id", "left_semi")
@@ -4757,12 +4706,7 @@ def llm_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_admit_batch(spark, k=_IVF_K)
 
 
-def semdedup_admit_batch(
-    spark: SparkSession,
-    k: int | None = None,
-    tau: float = _SEMDEDUP_TAU,
-    mod: int = _SEM_INC_MOD,
-) -> DataFrame:
+def semdedup_admit_batch(spark: SparkSession, k: int | None = None) -> DataFrame:
     """Per-cell batch admission report against a frozen corpus index.
 
     ``k=None`` derives the self-scaling cell count from the CORPUS
@@ -4780,14 +4724,10 @@ def semdedup_admit_batch(
     sequential variant, deliberately not modeled HERE — it is the
     streaming operator's contract (stream_semdedup_admission, round
     12), where batch sequence is physical."""
-    is_new = F.col("vec_id") % mod == 0
+    is_new = F.col("vec_id") % _SEM_INC_MOD == 0
     q = _one_prefix(_quantize(spark))
     if k is None:
-        k = default_ivf_k(
-            spark.table("embeddings")
-            .filter(F.col("vec_id") % mod != 0)
-            .count()
-        )
+        k = default_ivf_k(spark.table("embeddings").filter(~is_new).count())
     # the trained centroids have one consumer (the full assignment) —
     # no checkpoint; the chain runs once inside that broadcast
     cents = _train_keyed(q.filter(~is_new), k, "ivfseed", 1)
@@ -4799,77 +4739,96 @@ def semdedup_admit_batch(
         .join(cells_all, "vec_id")
         .select("vec_id", "cell", "embedding", "nrm")
     )
-    newb = base.filter(is_new)
-    side = lambda df: df.select(  # noqa: E731
-        F.col("vec_id").alias("q_id"),
-        "cell",
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("nrm")
-    )
-    drop_c = (
-        side(base.filter(~is_new))
-        .join(newb, "cell")
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("dup_corpus", F.lit(1))
-    )
-    drop_b = (
-        side(newb)
-        .join(newb, "cell")
-        .filter(F.col("q_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("dup_batch", F.lit(1))
-    )
-    return (
-        newb.join(drop_c, "vec_id", "left")
-        .join(drop_b, "vec_id", "left")
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_new"),
-            F.count("dup_corpus").alias("n_dup_corpus"),
-            F.sum(
-                F.when(
-                    F.col("dup_batch").isNotNull()
-                    & F.col("dup_corpus").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_dup_batch_only"),
-            F.sum(
-                F.when(
-                    F.col("dup_corpus").isNull()
-                    & F.col("dup_batch").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_admitted"),
-        )
-        .orderBy("cell")
+    marked = _sem_marked(base.filter(~is_new), base.filter(is_new), ["cell"])
+    return _admission_counts(marked, "cell").orderBy("cell")
+
+
+def _sem_marked(prior: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
+    """The SemDeDup admission rule — the package's one copy: ``batch``
+    rows with ``dup_corpus`` = 1 when a ``prior`` vector sharing their
+    shard keys is a near duplicate and ``dup_batch`` = 1 when a
+    LOWER-id vector of the batch itself is (null otherwise). A row
+    with neither mark is admitted."""
+    dup_corpus = _sem_pruned(prior, batch, keys, lower_id_wins=False)
+    dup_batch = _sem_pruned(batch, batch, keys)
+    return batch.join(
+        dup_corpus.withColumn("dup_corpus", F.lit(1)), "vec_id", "left"
+    ).join(dup_batch.withColumn("dup_batch", F.lit(1)), "vec_id", "left")
+
+
+def _admission_counts(marked: DataFrame, *by: str | Column) -> DataFrame:
+    """(by..., n_new, n_dup_corpus, n_dup_batch_only, n_admitted) over
+    :func:`_sem_marked` rows (one row when ``by`` is empty)."""
+    corpus_ok = F.col("dup_corpus").isNull()
+    return marked.groupBy(*by).agg(
+        F.count(F.lit(1)).alias("n_new"),
+        F.count("dup_corpus").alias("n_dup_corpus"),
+        F.sum(
+            F.when(F.col("dup_batch").isNotNull() & corpus_ok, 1).otherwise(0)
+        ).alias("n_dup_batch_only"),
+        F.sum(
+            F.when(corpus_ok & F.col("dup_batch").isNull(), 1).otherwise(0)
+        ).alias("n_admitted"),
     )
 
 
-def sharded_shard_counts(n: int, target: int = 64) -> tuple[int, int]:
+#: Expected vectors per shard (per leaf) that the self-scaling shapes
+#: hold: the cross-product's k1 = k2 and the log-depth tree's depth
+#: both derive from it.
+_SHARD_TARGET = 64
+
+
+def sharded_shard_counts(n: int) -> tuple[int, int]:
     """Self-scaling shard counts for the cross-product SemDeDup key:
     k1 = k2 = ceil(sqrt(n/target)), so k1*k2 >= n/target and expected
-    shard occupancy holds at <= ~target vectors. ADVICE r11 #1: k2
-    previously carried an extra **0.5 ((n/target)^0.25), silently
-    growing occupancy as ~target^0.75 * n^0.25 — the O(n*target)
-    pair bound only holds with BOTH sides at sqrt(n/target)."""
+    shard occupancy holds at <= ~target vectors (``_SHARD_TARGET``).
+    ADVICE r11 #1: k2 previously carried an extra **0.5
+    ((n/target)^0.25), silently growing occupancy as ~target^0.75 *
+    n^0.25 — the O(n*target) pair bound only holds with BOTH sides at
+    sqrt(n/target)."""
     import math
 
-    side = max(2, int(math.ceil(math.sqrt(n / float(target)))))
+    side = max(2, int(math.ceil(math.sqrt(n / float(_SHARD_TARGET)))))
     return side, side
+
+
+def _sharded_levels(
+    spark: SparkSession, k1: int, k2: int, nprobe1: int, nprobe: int
+):
+    """The cross-product key's two INDEPENDENT flat indexes, trained
+    in parallel: ``((cells1, probes1), (cells2, probes2))``. Cells are
+    the checkpointed (vec_id, cell) / (vec_id, cell2) assignments;
+    probes are the lazy ``nprobe1`` / ``nprobe`` nearest-cell
+    expansions under the same frozen centroids, None at probe 1."""
+    q = _one_prefix(_quantize(spark))
+
+    def level(k: int, seed: str, col: str, probe: int):
+        cents, probes = _learned_centroids(spark, k, seed), None
+        if probe > 1:
+            # two consumers (assignment, probes) share one frozen index
+            cents = _ckpt_unless_local(cents)
+            probes = _probe_keyed(q, cents, probe).select(
+                "vec_id", F.col("subcell").alias(col)
+            )
+        cells = (
+            _assign_keyed(q, cents)
+            .select("vec_id", F.col("cid").alias(col))
+            .localCheckpoint()
+        )
+        return cells, probes
+
+    return _overlap(
+        lambda: level(k1, "ivfseed", "cell", nprobe1),
+        lambda: level(k2, "ivfseed2", "cell2", nprobe),
+    )
 
 
 def semdedup_prune_sharded(
     spark: SparkSession,
     k1: int | None = None,
     k2: int | None = None,
-    tau: float = _SEMDEDUP_TAU,
+    nprobe: int = 1,
+    nprobe1: int = 1,
 ) -> DataFrame:
     """SemDeDup pruning within (cell1, cell2) cross-product shards.
 
@@ -4882,23 +4841,30 @@ def semdedup_prune_sharded(
     grew shard occupancy as ~64^0.75 * N^0.25 instead of holding it
     at ~64).
 
+    ``nprobe`` (round 12, 19d) lets each QUERY vector probe its
+    ``nprobe`` nearest level-2 cells, so a pair split by a level-2
+    Voronoi boundary is still compared; ``nprobe1`` (round 13,
+    VERDICT r12 next #6) does the same at level 1 — nprobe1*nprobe
+    probe pairs per query vector, measured as shard_eval's
+    ``recall_mpb_ppm``. The base side stays single-assigned, so pair
+    work is O(N * nprobe1 * nprobe * target) — linear — and pruning
+    stays deterministic (lower-id-wins over the union of probed
+    shards). At probe 1 the query side is the base itself.
+
     Scale: both clusterings are the broadcast-centroid map-side
-    Lloyd's (no N*K shuffle); the pair join is bucketed by the
-    composite key, so one hot semantic region splits across k2
-    sub-shards instead of forming one quadratic cell; the prune is a
-    cell-local DISTINCT semi-join. At 100 TB raise the shard target,
-    not the plan."""
+    Lloyd's (no N*K shuffle); the probe expansion is map-side against
+    the same broadcast centroid arrays (``_probe_keyed``); the pair
+    join is bucketed by the composite key, so one hot semantic region
+    splits across k2 sub-shards instead of forming one quadratic
+    cell. At 100 TB raise the shard target or either nprobe
+    independently — recall and cost are separate knobs, measured
+    per-configuration by llm_semdedup_shard_eval."""
     if k1 is None or k2 is None:
         d1, d2 = sharded_shard_counts(spark.table("embeddings").count())
         k1 = k1 or d1
         k2 = k2 or d2
-    cells1, cells2 = _overlap(
-        lambda: learned_ivf_cells(spark, k1).localCheckpoint(),
-        lambda: (
-            learned_ivf_cells(spark, k2, seed="ivfseed2")
-            .withColumnRenamed("cell", "cell2")
-            .localCheckpoint()
-        ),
+    (cells1, probes1), (cells2, probes2) = _sharded_levels(
+        spark, k1, k2, nprobe1, nprobe
     )
     base = (
         _vectors_with_norm(spark)
@@ -4906,36 +4872,13 @@ def semdedup_prune_sharded(
         .join(cells2, "vec_id")
         .select("vec_id", "cell", "cell2", "embedding", "nrm")
     )
-    a = base.select(
-        F.col("vec_id").alias("a_id"),
-        "cell",
-        "cell2",
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
-        F.col("a_nrm") * F.col("nrm")
-    )
-    pruned = (
-        a.join(base, ["cell", "cell2"])
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(1))
-    )
-    return (
-        base.join(pruned, "vec_id", "left")
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.count("is_pruned").alias("n_pruned"),
-            (F.count(F.lit(1)) - F.count("is_pruned"))
-            .cast("long")
-            .alias("n_kept"),
-        )
-        .orderBy("cell")
-    )
+    query = base
+    probes = [p for p in (probes1, probes2) if p is not None]
+    if probes:
+        # the base feeds both the probed query side and the pair join
+        base = base.localCheckpoint()
+        query = _probed(base, *probes)
+    return _sem_rollup(base, _sem_pruned(query, base, ["cell", "cell2"]), "cell")
 
 
 # ---------------------------------------------------------------------------
@@ -4993,116 +4936,8 @@ def semdedup_prune_sharded(
 )
 def llm_semdedup_sharded_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned k1/k2/nprobe gate configuration;
-    `semdedup_prune_sharded_mp` is the self-scaling entry."""
-    return semdedup_prune_sharded_mp(spark, k1=_IVF_K, k2=_SEM_K2)
-
-
-def semdedup_prune_sharded_mp(
-    spark: SparkSession,
-    k1: int | None = None,
-    k2: int | None = None,
-    nprobe: int = _SEM_NPROBE,
-    nprobe1: int = 1,
-    tau: float = _SEMDEDUP_TAU,
-) -> DataFrame:
-    """Cross-product-sharded SemDeDup with level-2 multi-probe.
-
-    Same shard structure as :func:`semdedup_prune_sharded` (k1 = k2 ~
-    sqrt(N/64) self-scaling), but each QUERY vector additionally
-    probes its ``nprobe`` nearest level-2 cells, so a pair split by a
-    level-2 Voronoi boundary is still compared. The base side stays
-    single-assigned: pair work is O(N * nprobe * target) — linear
-    with a small constant — and pruning remains deterministic
-    (lower-id-wins over the union of probed shards).
-
-    ``nprobe1`` (round 13, VERDICT r12 next #6) additionally probes
-    the query side's ``nprobe1`` nearest LEVEL-1 cells — the 2x2
-    design matrix proved level-2 probing is the recall lever, and
-    level-1 boundaries are the remaining loss; probing both levels
-    costs nprobe1*nprobe probe pairs per query vector (x4 at 2/2 —
-    still linear pair work), measured as shard_eval's
-    ``recall_mpb_ppm`` column.
-
-    Scale: the probe expansion happens MAP-SIDE against the broadcast
-    level-1/level-2 centroid arrays (``_probe_keyed``) — no extra
-    shuffle; the pair join stays bucketed on (cell, cell2); the
-    DISTINCT absorbs a pair matching via multiple probes. At 100 TB
-    raise the shard target or either nprobe independently — recall
-    and cost are separate knobs, measured per-configuration by
-    llm_semdedup_shard_eval."""
-    if k1 is None or k2 is None:
-        d1, d2 = sharded_shard_counts(spark.table("embeddings").count())
-        k1 = k1 or d1
-        k2 = k2 or d2
-    q2 = _one_prefix(_quantize(spark))
-    # each level's index: train ONCE, then both the single assignment
-    # (base side) and the probe expansion (query side) reuse the
-    # same frozen centroids — without the checkpoint the Lloyd's
-    # subtree would plan and execute twice.
-    def _level(k: int, seed: str, col: str):
-        cents = _ckpt_unless_local(_learned_centroids(spark, k, seed))
-        cells = (
-            _assign_keyed(q2, cents)
-            .select("vec_id", F.col("cid").alias(col))
-            .localCheckpoint()
-        )
-        return cents, cells
-
-    # the two levels are independent trainings — overlap them
-    (cents1, cells1), (cents2, cells2) = _overlap(
-        lambda: _level(k1, "ivfseed", "cell"),
-        lambda: _level(k2, "ivfseed2", "cell2"),
-    )
-    probes2 = _probe_keyed(q2, cents2, nprobe).select(
-        "vec_id", F.col("subcell").alias("cell2")
-    )
-    base = (
-        _vectors_with_norm(spark)
-        .join(cells1, "vec_id")
-        .join(cells2, "vec_id")
-        .select("vec_id", "cell", "cell2", "embedding", "nrm")
-        .localCheckpoint()
-    )
-    if nprobe1 > 1:
-        probes1 = _probe_keyed(q2, cents1, nprobe1).select(
-            "vec_id", F.col("subcell").alias("cell")
-        )
-        aq = (
-            base.select("vec_id", "embedding", "nrm")
-            .join(probes1, "vec_id")
-        )
-    else:
-        aq = base.select("vec_id", "cell", "embedding", "nrm")
-    a = aq.join(probes2, "vec_id").select(
-        F.col("vec_id").alias("a_id"),
-        "cell",
-        "cell2",
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
-        F.col("a_nrm") * F.col("nrm")
-    )
-    pruned = (
-        a.join(base, ["cell", "cell2"])
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(1))
-    )
-    return (
-        base.join(pruned, "vec_id", "left")
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.count("is_pruned").alias("n_pruned"),
-            (F.count(F.lit(1)) - F.count("is_pruned"))
-            .cast("long")
-            .alias("n_kept"),
-        )
-        .orderBy("cell")
-    )
+    `semdedup_prune_sharded` is the self-scaling entry."""
+    return semdedup_prune_sharded(spark, k1=_IVF_K, k2=_SEM_K2, nprobe=_SEM_NPROBE)
 
 
 # ---------------------------------------------------------------------------
@@ -5227,21 +5062,17 @@ def semdedup_maintain_report(
     spark: SparkSession,
     k_old: int | None = None,
     k_new: int | None = None,
-    tau: float = _SEMDEDUP_TAU,
-    stale_mod: int = _SEM_INC_MOD,
-    batch_mod: int = _SEM_MNT_MOD,
 ) -> DataFrame:
     """Maintenance pass + post-maintenance batch admission report.
 
     Timeline: the frozen index trained when the corpus was
-    ``vec_id % stale_mod != 0`` of today's grown corpus
-    (``vec_id % batch_mod != 0``); maintenance re-derives K from the
-    GROWN corpus count (``k_new=None`` → default_ivf_k — the re-derive
-    step SCALE.md's pinned-K 9.5x/10x row shows the cost of
+    ``vec_id % 5 != 0`` (``_SEM_INC_MOD``) of today's grown corpus
+    (``vec_id % 11 != 0``, ``_SEM_MNT_MOD``); maintenance re-derives K
+    from the GROWN corpus count (``k_new=None`` → default_ivf_k — the
+    re-derive step SCALE.md's pinned-K 9.5x/10x row shows the cost of
     skipping), retrains on the grown corpus, reassigns, and the next
-    batch (``vec_id % batch_mod == 0``) is admitted against the
-    maintained index with the same lower-id-wins rejection rule as
-    :func:`semdedup_admit_batch`.
+    batch (``vec_id % 11 == 0``) is admitted against the maintained
+    index with the same rejection rule as :func:`semdedup_admit_batch`.
 
     Scale: maintenance cost is one Lloyd's train over the corpus
     (broadcast centroids, K*dim update shuffles — the same cost
@@ -5252,19 +5083,19 @@ def semdedup_maintain_report(
     fresh index over the same corpus — which is exactly what the
     differential oracle verifies."""
     q = _one_prefix(_quantize(spark))
-    is_batch = F.col("vec_id") % batch_mod == 0
+    is_batch = F.col("vec_id") % _SEM_MNT_MOD == 0
     grown_q = q.filter(~is_batch)
     if k_new is None:
         k_new = default_ivf_k(grown_q.count())
     if k_old is None:
         k_old = _IVF_K
-    # the aged index (trained before the stale_mod ingests landed)
-    # and the maintenance retrain (grown corpus, deterministic →
-    # equal to a fresh index) are independent chains — overlap them
+    # the aged index (trained before the stale ingests landed) and
+    # the maintenance retrain (grown corpus, deterministic → equal to
+    # a fresh index) are independent chains — overlap them
     cents_old, cents_new = _overlap(
         lambda: _ckpt_unless_local(
             _train_keyed(
-                grown_q.filter(F.col("vec_id") % stale_mod != 0),
+                grown_q.filter(F.col("vec_id") % _SEM_INC_MOD != 0),
                 k_old,
                 "ivfseed",
                 1,
@@ -5285,76 +5116,47 @@ def semdedup_maintain_report(
         .select("vec_id", "cell", "old_cell", "embedding", "nrm")
         .localCheckpoint()
     )
-    grown = base.filter(~is_batch)
-    newb = base.filter(is_batch)
-    side = lambda df: df.select(  # noqa: E731
-        F.col("vec_id").alias("q_id"),
-        "cell",
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("nrm")
-    )
-    drop_c = (
-        side(grown)
-        .join(newb, "cell")
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("dup_corpus", F.lit(1))
-    )
-    drop_b = (
-        side(newb)
-        .join(newb, "cell")
-        .filter(F.col("q_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("dup_batch", F.lit(1))
-    )
-    grown_stats = grown.groupBy("cell").agg(
+    spine = cents_new.select(F.col("cid").alias("cell"))
+    return _maintain_readout(base, is_batch, spine, "cell")
+
+
+def _maintain_readout(
+    base: DataFrame, is_batch: Column, spine: DataFrame, by: str | Column
+) -> DataFrame:
+    """The maintenance readout both index shapes share. ``base`` holds
+    (vec_id, cell, old_cell, embedding, nrm) under the maintained
+    (``cell``) and the aged (``old_cell``) index; the grown corpus is
+    ``~is_batch``. Per rollup key ``by`` — named like ``spine``'s one
+    column, which lists every key of the maintained index — it
+    reports the grown corpus's size and drift (``n_moved``) and the
+    batch's admission counts against the grown corpus within
+    maintained cells, zero-filled; the key comes out as ``cell``."""
+    grown, newb = base.filter(~is_batch), base.filter(is_batch)
+    grown_stats = grown.groupBy(by).agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.sum(
             F.when(F.col("old_cell") != F.col("cell"), 1).otherwise(0)
         ).alias("n_moved"),
     )
-    adm = (
-        newb.join(drop_c, "vec_id", "left")
-        .join(drop_b, "vec_id", "left")
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_new"),
-            F.count("dup_corpus").alias("n_dup_corpus"),
-            F.sum(
-                F.when(
-                    F.col("dup_batch").isNotNull()
-                    & F.col("dup_corpus").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_dup_batch_only"),
-            F.sum(
-                F.when(
-                    F.col("dup_corpus").isNull()
-                    & F.col("dup_batch").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_admitted"),
-        )
-    )
-    spine = cents_new.select(F.col("cid").alias("cell"))
+    adm = _admission_counts(_sem_marked(grown, newb, ["cell"]), by)
+    key = spine.columns[0]
     zero = F.lit(0).cast("long")
     return (
-        spine.join(grown_stats, "cell", "left")
-        .join(adm, "cell", "left")
+        spine.join(grown_stats, key, "left")
+        .join(adm, key, "left")
         .select(
-            "cell",
-            F.coalesce("n_vecs", zero).alias("n_vecs"),
-            F.coalesce("n_moved", zero).alias("n_moved"),
-            F.coalesce("n_new", zero).alias("n_new"),
-            F.coalesce("n_dup_corpus", zero).alias("n_dup_corpus"),
-            F.coalesce("n_dup_batch_only", zero).alias("n_dup_batch_only"),
-            F.coalesce("n_admitted", zero).alias("n_admitted"),
+            F.col(key).alias("cell"),
+            *(
+                F.coalesce(c, zero).alias(c)
+                for c in (
+                    "n_vecs",
+                    "n_moved",
+                    "n_new",
+                    "n_dup_corpus",
+                    "n_dup_batch_only",
+                    "n_admitted",
+                )
+            ),
         )
         .orderBy("cell")
     )
@@ -5377,7 +5179,8 @@ def semdedup_maintain_report(
 #      second-level-DESIGN comparison at equal cost. Training cost
 #      differs only driver-side: b1 small Lloyd's runs instead of
 #      one (each over 1/b1 of the data — the total work is the
-#      same N*b2 per iteration).
+#      same N*b2 per iteration). Both gate rows run as the depth-2
+#      case of semdedup_prune_tree_deep (19h).
 # ---------------------------------------------------------------------------
 def _sql_tree_cells(
     b1: int = _IVF_K, b2: int = _SEM_K2, seed2: str = "treeseed"
@@ -5386,7 +5189,8 @@ def _sql_tree_cells(
     :func:`_sql_lloyds_cells` sub-chain PER level-1 cell (training
     set = that cell's members, via the ``cells`` CTE the caller must
     have defined), unioned into ``tree_cells (vec_id, cell,
-    subcell)``. Mirrors :func:`hierarchical_index` exactly."""
+    subcell)``. Mirrors :func:`tree_index_deep` at depth 2 exactly
+    (leaf key = ``cell * _TREE_PACK + subcell``)."""
     chains = ",".join(
         _sql_lloyds_cells(
             k=b2,
@@ -5412,7 +5216,7 @@ def _sql_tree_probes(
     nprobe: int = _SEM_NPROBE,
 ) -> str:
     """DuckDB CTE block for the hierarchical quantizer's level-2
-    multi-probe (mirror of :func:`hierarchical_index` with
+    multi-probe (mirror of :func:`tree_index_deep` at depth 2 with
     ``nprobe``): within each level-1 cell, every member's ``nprobe``
     nearest SUB-centroids of that cell's OWN index — same integer
     distance and (dist, cid) tie-break as :func:`_probe_keyed`.
@@ -5434,42 +5238,6 @@ def _sql_tree_probes(
         for i in range(1, b1 + 1)
     )
     return chains + f", tree_probes AS ({union})"
-
-
-def hierarchical_index(
-    spark: SparkSession,
-    b1: int,
-    b2: int,
-    seed1: str = "ivfseed",
-    nprobe: int | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """The 2-level hierarchical quantizer, trained ONCE: returns
-    ``(assignment, probes)`` where assignment is (vec_id, cell,
-    subcell) — level 1 the family's learned clustering, level 2
-    trained PER level-1 cell on that cell's members — and, when
-    ``nprobe`` is set, probes carries each member's ``nprobe``
-    nearest SUB-centroids within its own level-1 cell (the tree's
-    search-time recall knob; level 1 stays single-assigned, so
-    probing multiplies pair work by nprobe, never by b1).
-
-    This is :func:`tree_index_deep` at depth 2 with the packed key
-    unpacked (``cell div pack``, ``cell mod pack``): the b1
-    sub-trainings run as ONE keyed Lloyd's chain, so the hierarchy
-    costs the job count of one flat k-means at b2 regardless of b1.
-    Values are BIT-IDENTICAL to the per-cell formulation — same
-    seeds, ties and integer means — which is what the per-cell
-    DuckDB oracle (_sql_tree_cells) verifies."""
-    asg, probes = tree_index_deep(spark, (b1, b2), seed1, nprobe=nprobe)
-
-    def unpack(df: DataFrame) -> DataFrame:
-        return df.select(
-            "vec_id",
-            F.expr(f"CAST(cell div {_TREE_PACK} AS INT)").alias("cell"),
-            (F.col("cell") % _TREE_PACK).cast("int").alias("subcell"),
-        )
-
-    return unpack(asg), None if probes is None else unpack(probes)
-
 
 
 @register(
@@ -5507,70 +5275,11 @@ def hierarchical_index(
     tags=("llm", "dedup", "similarity", "bench"),
 )
 def llm_semdedup_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pinned b1/b2 gate configuration; `semdedup_prune_tree` is the
-    self-scaling entry."""
-    return semdedup_prune_tree(spark, b1=_IVF_K, b2=_SEM_K2)
-
-
-def semdedup_prune_tree(
-    spark: SparkSession,
-    b1: int | None = None,
-    b2: int | None = None,
-    tau: float = _SEMDEDUP_TAU,
-) -> DataFrame:
-    """SemDeDup within hierarchical (cell, subcell) shards.
-
-    ``b1=b2=None`` derives both as ~sqrt(N/64) (the
-    :func:`sharded_shard_counts` knob — same shard-count/occupancy
-    math as the cross-product; the difference is WHERE the level-2
-    boundaries fall, not how many there are).
-
-    Scale: identical join/shuffle shape to
-    :func:`semdedup_prune_sharded` — the pair join is bucketed on
-    the composite key and the prune is a cell-local DISTINCT
-    semi-join; see :func:`hierarchical_index` for why the per-cell
-    training costs no extra shuffle work. Deeper trees generalize
-    assignment toward O(N log N); two levels is what the fixture
-    resolves."""
-    if b1 is None or b2 is None:
-        d1, d2 = sharded_shard_counts(spark.table("embeddings").count())
-        b1 = b1 or d1
-        b2 = b2 or d2
-    tree, _ = hierarchical_index(spark, b1, b2)
-    base = (
-        _vectors_with_norm(spark)
-        .join(tree, "vec_id")
-        .select("vec_id", "cell", "subcell", "embedding", "nrm")
-    )
-    a = base.select(
-        F.col("vec_id").alias("a_id"),
-        "cell",
-        "subcell",
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
-        F.col("a_nrm") * F.col("nrm")
-    )
-    pruned = (
-        a.join(base, ["cell", "subcell"])
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(1))
-    )
-    return (
-        base.join(pruned, "vec_id", "left")
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.count("is_pruned").alias("n_pruned"),
-            (F.count(F.lit(1)) - F.count("is_pruned"))
-            .cast("long")
-            .alias("n_kept"),
-        )
-        .orderBy("cell")
+    """Pinned b1/b2 gate configuration: the depth-2 tree of
+    `semdedup_prune_tree_deep` (the self-scaling entry), its level-1
+    cell kept as INT like the per-cell oracle's."""
+    return semdedup_prune_tree_deep(spark, (_IVF_K, _SEM_K2)).withColumn(
+        "cell", F.col("cell").cast("int")
     )
 
 
@@ -5626,81 +5335,11 @@ def semdedup_prune_tree(
     tags=("llm", "dedup", "similarity", "bench"),
 )
 def llm_semdedup_tree_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pinned b1/b2/nprobe gate configuration;
-    `semdedup_prune_tree_mp` is the self-scaling entry."""
-    return semdedup_prune_tree_mp(spark, b1=_IVF_K, b2=_SEM_K2)
-
-
-def semdedup_prune_tree_mp(
-    spark: SparkSession,
-    b1: int | None = None,
-    b2: int | None = None,
-    nprobe: int = _SEM_NPROBE,
-    tau: float = _SEMDEDUP_TAU,
-) -> DataFrame:
-    """Tree-sharded SemDeDup with level-2 (subcell) multi-probe.
-
-    Same hierarchical shard structure as :func:`semdedup_prune_tree`
-    (``b1=b2=None`` derives both as ~sqrt(N/64)), but each QUERY
-    vector additionally probes its ``nprobe`` nearest subcells of
-    its own level-1 cell, so a pair split by a subcell boundary is
-    still compared. The base side stays single-assigned: pair work
-    is O(N * nprobe * target) — linear with a small constant — and
-    pruning remains deterministic (lower-id-wins over the union of
-    probed shards).
-
-    Scale: the probe expansion is map-side against the per-cell
-    broadcast sub-centroid arrays (one :func:`_probe_keyed` pass per
-    level-1 cell — metadata-sized driver loop, no extra shuffle);
-    the pair join stays bucketed on (cell, subcell); the DISTINCT
-    absorbs a pair matching via multiple probes. Recall and cost
-    stay independent knobs, measured per-design by
-    llm_semdedup_shard_eval."""
-    if b1 is None or b2 is None:
-        d1, d2 = sharded_shard_counts(spark.table("embeddings").count())
-        b1 = b1 or d1
-        b2 = b2 or d2
-    asg, probes = hierarchical_index(spark, b1, b2, nprobe=nprobe)
-    base = (
-        _vectors_with_norm(spark)
-        .join(asg, "vec_id")
-        .select("vec_id", "cell", "subcell", "embedding", "nrm")
-        .localCheckpoint()
-    )
-    a = (
-        base.select("vec_id", "embedding", "nrm")
-        .join(probes, "vec_id")
-        .select(
-            F.col("vec_id").alias("a_id"),
-            "cell",
-            "subcell",
-            F.col("embedding").alias("a_emb"),
-            F.col("nrm").alias("a_nrm"),
-        )
-    )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
-        F.col("a_nrm") * F.col("nrm")
-    )
-    pruned = (
-        a.join(base, ["cell", "subcell"])
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(1))
-    )
-    return (
-        base.join(pruned, "vec_id", "left")
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.count("is_pruned").alias("n_pruned"),
-            (F.count(F.lit(1)) - F.count("is_pruned"))
-            .cast("long")
-            .alias("n_kept"),
-        )
-        .orderBy("cell")
-    )
+    """Pinned b1/b2/nprobe gate configuration: the depth-2 tree of
+    `semdedup_prune_tree_deep` at ``nprobe=2``, level-1 cell as INT."""
+    return semdedup_prune_tree_deep(
+        spark, (_IVF_K, _SEM_K2), nprobe=_SEM_NPROBE
+    ).withColumn("cell", F.col("cell").cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -5720,6 +5359,28 @@ def semdedup_prune_tree_mp(
 # ---------------------------------------------------------------------------
 _TREE_PACK = 1000  # prefix packing base; every per-level fan-out must stay below it
 _TREE_D3_B = (4, 3, 3)  # pinned depth-3 branching for the gate row (36 leaves)
+_TREE_FANOUT = 8  # per-level fan-out of the derived log-depth shape
+
+
+def _tree_shape(
+    branching: tuple[int, ...] | list[int] | None, rows: DataFrame
+) -> tuple[tuple[int, ...] | list[int], int]:
+    """``(branching, pack)`` of a tree entry: a pinned ``branching``
+    packs at the gate base ``_TREE_PACK``; ``None`` derives the
+    log-depth shape from ``rows.count()`` — ``max(2,
+    ceil(log_fanout(N/target)))`` levels of constant fan-out
+    ``_TREE_FANOUT`` (leaf occupancy ~``_SHARD_TARGET``), packed TIGHT
+    at fanout+1: base 1000 would overflow BIGINT past depth ~6 (and
+    32-bit int at depth 4 — the round-13 100x probe's finding)."""
+    if branching is not None:
+        return branching, _TREE_PACK
+    import math
+
+    n = rows.count()
+    depth = max(
+        2, math.ceil(math.log(max(n / _SHARD_TARGET, 2), _TREE_FANOUT))
+    )
+    return (_TREE_FANOUT,) * depth, _TREE_FANOUT + 1
 
 
 def _level_seed(lvl: int) -> str:
@@ -5854,17 +5515,6 @@ def tree_index_deep(
     return asg.select("vec_id", "cell"), probes
 
 
-def tree_cells_deep(
-    spark: SparkSession,
-    branching: tuple[int, ...] | list[int],
-    seed1: str = "ivfseed",
-    pack: int | None = None,
-) -> DataFrame:
-    """(vec_id, cell): the single-assignment view of
-    :func:`tree_index_deep` (see there for the scale notes)."""
-    return tree_index_deep(spark, branching, seed1, pack)[0]
-
-
 def _sql_keyed_level(
     lvl: int,
     b: int,
@@ -5946,8 +5596,8 @@ def _sql_tree_deep_cells(
     prefix: str = "",
     export_cents: bool = False,
 ) -> str:
-    """DuckDB CTE composition for :func:`tree_cells_deep`: level 1 is
-    the caller's ``{prefix}cells`` CTE (from
+    """DuckDB CTE composition for :func:`tree_index_deep`'s
+    assignment: level 1 is the caller's ``{prefix}cells`` CTE (from
     ``_sql_lloyds_cells(k=b_1, prefix=...)``); each deeper level is
     one :func:`_sql_keyed_level` block. Final CTE:
     ``{prefix}deep_cells (vec_id, key)`` — the packed leaf path.
@@ -6016,69 +5666,45 @@ def llm_semdedup_tree_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semdedup_prune_tree_deep(
     spark: SparkSession,
     branching: tuple[int, ...] | list[int] | None = None,
-    target: int = 64,
-    fanout: int = 8,
-    tau: float = _SEMDEDUP_TAU,
+    nprobe: int = 1,
 ) -> DataFrame:
     """SemDeDup within depth-b tree leaf shards, rolled up to the
     level-1 cell.
 
-    ``branching=None`` derives a log-depth tree: ``depth =
-    ceil(log_fanout(N/target))`` levels of constant ``fanout`` — the
-    shape whose leaf occupancy stays ~target as N grows (the 2-level
-    sqrt-split instead grows per-shard occupancy at fixed fan-out;
-    SCALE.md round-13 measures the difference at 100x).
+    ``branching=None`` derives a log-depth tree (:func:`_tree_shape`:
+    ``depth = ceil(log_fanout(N/target))`` levels of constant fan-out)
+    — the shape whose leaf occupancy stays ~target as N grows (the
+    2-level sqrt-split instead grows per-shard occupancy at fixed
+    fan-out; SCALE.md round-13 measures the difference at 100x).
+
+    ``nprobe`` (the recall knob, round 13) lets each QUERY vector
+    probe its ``nprobe`` nearest LEAF subcells within its
+    depth-(L-1) prefix; upper levels stay single-assigned, so pair
+    work multiplies by nprobe, never by fan-out. At probe 1 the query
+    side is the base itself.
 
     Scale: pair join bucketed on the packed leaf key (linear in
-    N*target); training O(depth) keyed-chain jobs; assignment
-    O(N * fanout * depth) map-side flops."""
-    pack_base = _TREE_PACK
-    if branching is None:
-        import math
-
-        n = spark.table("embeddings").count()
-        depth = max(2, math.ceil(math.log(max(n / target, 2), fanout)))
-        branching = (fanout,) * depth
-        # tight packing on the derived path: base 1000 would overflow
-        # BIGINT past depth ~6 (and 32-bit int at depth 4 — the
-        # round-13 100x probe's finding); fanout+1 holds any
-        # realistic log-depth
-        pack_base = fanout + 1
-    leaf = tree_cells_deep(spark, branching, pack=pack_base)
-    pack = pack_base ** (len(branching) - 1)
+    N*nprobe*target); training O(depth) keyed-chain jobs; assignment
+    O(N * fanout * depth) map-side flops; the probe expansion is
+    map-side against the per-prefix broadcast leaf-centroid arrays,
+    and DISTINCT absorbs multi-probe duplication."""
+    branching, pack = _tree_shape(branching, spark.table("embeddings"))
+    asg, probes = tree_index_deep(
+        spark, branching, pack=pack, nprobe=nprobe if nprobe > 1 else None
+    )
     base = (
         _vectors_with_norm(spark)
-        .join(leaf, "vec_id")
+        .join(asg, "vec_id")
         .select("vec_id", "cell", "embedding", "nrm")
     )
-    a = base.select(
-        F.col("vec_id").alias("a_id"),
-        "cell",
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
-        F.col("a_nrm") * F.col("nrm")
-    )
-    pruned = (
-        a.join(base, ["cell"])
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(1))
-    )
-    return (
-        base.join(pruned, "vec_id", "left")
-        .groupBy(F.expr(f"cell div {pack}").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.count("is_pruned").alias("n_pruned"),
-            (F.count(F.lit(1)) - F.count("is_pruned"))
-            .cast("long")
-            .alias("n_kept"),
-        )
-        .orderBy("cell")
+    query = base
+    if probes is not None:
+        # the base feeds both the probed query side and the pair join
+        base = base.localCheckpoint()
+        query = _probed(base, probes)
+    leaf_to_cell = F.expr(f"cell div {pack ** (len(branching) - 1)}")
+    return _sem_rollup(
+        base, _sem_pruned(query, base, ["cell"]), leaf_to_cell.alias("cell")
     )
 
 
@@ -6138,79 +5764,8 @@ def _sql_tree_deep_probes(branching: tuple[int, ...], nprobe: int) -> str:
 )
 def llm_semdedup_tree_deep_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned depth-3/nprobe gate configuration;
-    `semdedup_prune_tree_deep_mp` is the self-scaling entry."""
-    return semdedup_prune_tree_deep_mp(spark, branching=_TREE_D3_B)
-
-
-def semdedup_prune_tree_deep_mp(
-    spark: SparkSession,
-    branching: tuple[int, ...] | list[int] | None = None,
-    target: int = 64,
-    fanout: int = 8,
-    nprobe: int = _SEM_NPROBE,
-    tau: float = _SEMDEDUP_TAU,
-) -> DataFrame:
-    """Depth-b tree SemDeDup with leaf-level multi-probe — the
-    recall knob on the occupancy-capped log-depth shape
-    (``branching=None`` derives depth as in
-    :func:`semdedup_prune_tree_deep`, packing at fanout+1).
-
-    Scale: probing the LAST level only keeps pair work at
-    O(N * nprobe * target) — the expansion is map-side against the
-    per-prefix broadcast leaf-centroid arrays; the pair join stays
-    bucketed on the packed leaf key; DISTINCT absorbs multi-probe
-    duplication."""
-    pack_base = _TREE_PACK
-    if branching is None:
-        import math
-
-        n = spark.table("embeddings").count()
-        depth = max(2, math.ceil(math.log(max(n / target, 2), fanout)))
-        branching = (fanout,) * depth
-        pack_base = fanout + 1
-    asg, probes = tree_index_deep(
-        spark, branching, pack=pack_base, nprobe=nprobe
-    )
-    pack = pack_base ** (len(branching) - 1)
-    base = (
-        _vectors_with_norm(spark)
-        .join(asg, "vec_id")
-        .select("vec_id", "cell", "embedding", "nrm")
-        .localCheckpoint()
-    )
-    a = (
-        base.select("vec_id", "embedding", "nrm")
-        .join(probes, "vec_id")
-        .select(
-            F.col("vec_id").alias("a_id"),
-            "cell",
-            F.col("embedding").alias("a_emb"),
-            F.col("nrm").alias("a_nrm"),
-        )
-    )
-    cos = _dot(F.col("a_emb"), F.col("embedding")) / (
-        F.col("a_nrm") * F.col("nrm")
-    )
-    pruned = (
-        a.join(base, ["cell"])
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("is_pruned", F.lit(1))
-    )
-    return (
-        base.join(pruned, "vec_id", "left")
-        .groupBy(F.expr(f"cell div {pack}").alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.count("is_pruned").alias("n_pruned"),
-            (F.count(F.lit(1)) - F.count("is_pruned"))
-            .cast("long")
-            .alias("n_kept"),
-        )
-        .orderBy("cell")
-    )
+    `semdedup_prune_tree_deep` is the self-scaling entry."""
+    return semdedup_prune_tree_deep(spark, _TREE_D3_B, nprobe=_SEM_NPROBE)
 
 
 # ---------------------------------------------------------------------------
@@ -6277,8 +5832,6 @@ def llm_sim_topk_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_topk_tree(
     spark: SparkSession,
     branching: tuple[int, ...] | list[int] | None = None,
-    target: int = 64,
-    fanout: int = 8,
     nprobe: int = _SEM_NPROBE,
     k: int = 3,
 ) -> DataFrame:
@@ -6290,14 +5843,7 @@ def sim_topk_tree(
     candidate join shuffles on the packed leaf key only — work per
     query is nprobe * leaf occupancy, which the log-depth shape
     holds ~constant; the re-rank window partitions by query."""
-    pack_base = _TREE_PACK
-    if branching is None:
-        import math
-
-        n = spark.table("embeddings").count()
-        depth = max(2, math.ceil(math.log(max(n / target, 2), fanout)))
-        branching = (fanout,) * depth
-        pack_base = fanout + 1
+    branching, pack_base = _tree_shape(branching, spark.table("embeddings"))
     asg, probes = tree_index_deep(
         spark, branching, pack=pack_base, nprobe=nprobe
     )
@@ -6633,8 +6179,6 @@ def llm_sim_topk_tree_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_topk_tree_beam(
     spark: SparkSession,
     branching: tuple[int, ...] | list[int] | None = None,
-    target: int = 64,
-    fanout: int = 8,
     beam: int = _TREE_BEAM,
     nprobe: int = _SEM_NPROBE,
     k: int = 3,
@@ -6649,14 +6193,7 @@ def sim_topk_tree_beam(
     candidate join shuffles on the packed leaf key only — work per
     query stays nprobe * leaf occupancy, which the log-depth shape
     holds ~constant."""
-    pack_base = _TREE_PACK
-    if branching is None:
-        import math
-
-        n = spark.table("embeddings").count()
-        depth = max(2, math.ceil(math.log(max(n / target, 2), fanout)))
-        branching = (fanout,) * depth
-        pack_base = fanout + 1
+    branching, pack_base = _tree_shape(branching, spark.table("embeddings"))
     cents1, keyed, asg = tree_train_deep(
         _quantize(spark), branching, pack=pack_base
     )
@@ -7005,22 +6542,17 @@ _REGISTRY["llm_semdedup_tree_maintain"].oracle = _materialize_ctes(
 def semdedup_tree_maintain_report(
     spark: SparkSession,
     branching: tuple[int, ...] | list[int] | None = None,
-    target: int = 64,
-    fanout: int = 8,
-    tau: float = _SEMDEDUP_TAU,
-    stale_mod: int = _SEM_INC_MOD,
-    batch_mod: int = _SEM_MNT_MOD,
 ) -> DataFrame:
     """Maintenance pass + batch admission on the depth-b tree index.
 
     Timeline mirrors :func:`semdedup_maintain_report`: the aged tree
-    trained when the corpus was ``vec_id % stale_mod != 0`` of
-    today's grown corpus; maintenance retrains the tree on the GROWN
-    corpus (``branching=None`` re-derives depth from the grown count
-    at fixed fan-out — the tree's own self-scaling knob, exactly the
-    K re-derivation of the flat form), frozen-assigns everything,
-    and admits the next batch (``vec_id % batch_mod == 0``) within
-    maintained leaves, lower-id-wins.
+    trained when the corpus was ``vec_id % 5 != 0`` of today's grown
+    corpus; maintenance retrains the tree on the GROWN corpus
+    (``branching=None`` re-derives depth from the grown count at
+    fixed fan-out — the tree's own self-scaling knob, exactly the K
+    re-derivation of the flat form), frozen-assigns everything, and
+    admits the next batch (``vec_id % 11 == 0``) within maintained
+    leaves, lower-id-wins.
 
     Scale: maintenance is O(depth) keyed-chain training jobs over
     the corpus plus one map-side frozen reassignment (broadcast
@@ -7031,19 +6563,12 @@ def semdedup_tree_maintain_report(
     readout; re-deriving a DEEPER maintained tree as the corpus
     grows composes (frozen assignment never needs the shapes to
     agree), at the price of a level-1-only drift column."""
-    pack = _TREE_PACK
     q = _quantize(spark)
-    is_batch = F.col("vec_id") % batch_mod == 0
+    is_batch = F.col("vec_id") % _SEM_MNT_MOD == 0
     grown_q = q.filter(~is_batch).localCheckpoint()
-    if branching is None:
-        import math
-
-        n = grown_q.count()
-        depth = max(2, math.ceil(math.log(max(n / target, 2), fanout)))
-        branching = (fanout,) * depth
-        pack = fanout + 1
+    branching, pack = _tree_shape(branching, grown_q)
     roll = pack ** (len(branching) - 1)
-    is_stale = F.col("vec_id") % stale_mod == 0
+    is_stale = F.col("vec_id") % _SEM_INC_MOD == 0
     # aged tree and maintained tree are independent trainings (each a
     # sequential O(depth) chain of blocking checkpoints) — overlap them
     (ag_c1, ag_k, ag_asg), (mt_c1, mt_k, mt_asg) = _overlap(
@@ -7072,81 +6597,9 @@ def semdedup_tree_maintain_report(
         .select("vec_id", "cell", "old_cell", "embedding", "nrm")
         .localCheckpoint()
     )
-    grown = base.filter(~is_batch)
-    newb = base.filter(is_batch)
-    side = lambda df: df.select(  # noqa: E731
-        F.col("vec_id").alias("q_id"),
-        "cell",
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("nrm")
-    )
-    drop_c = (
-        side(grown)
-        .join(newb, "cell")
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("dup_corpus", F.lit(1))
-    )
-    drop_b = (
-        side(newb)
-        .join(newb, "cell")
-        .filter(F.col("q_id") < F.col("vec_id"))
-        .filter(cos >= tau)
-        .select("vec_id")
-        .distinct()
-        .withColumn("dup_batch", F.lit(1))
-    )
-    grown_stats = grown.groupBy(
-        F.expr(f"cell div {roll}").alias("cell1")
-    ).agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.sum(
-            F.when(F.col("old_cell") != F.col("cell"), 1).otherwise(0)
-        ).alias("n_moved"),
-    )
-    adm = (
-        newb.join(drop_c, "vec_id", "left")
-        .join(drop_b, "vec_id", "left")
-        .groupBy(F.expr(f"cell div {roll}").alias("cell1"))
-        .agg(
-            F.count(F.lit(1)).alias("n_new"),
-            F.count("dup_corpus").alias("n_dup_corpus"),
-            F.sum(
-                F.when(
-                    F.col("dup_batch").isNotNull()
-                    & F.col("dup_corpus").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_dup_batch_only"),
-            F.sum(
-                F.when(
-                    F.col("dup_corpus").isNull()
-                    & F.col("dup_batch").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_admitted"),
-        )
-    )
     spine = mt_c1.select(F.col("cid").cast("long").alias("cell1"))
-    zero = F.lit(0).cast("long")
-    return (
-        spine.join(grown_stats, "cell1", "left")
-        .join(adm, "cell1", "left")
-        .select(
-            F.col("cell1").alias("cell"),
-            F.coalesce("n_vecs", zero).alias("n_vecs"),
-            F.coalesce("n_moved", zero).alias("n_moved"),
-            F.coalesce("n_new", zero).alias("n_new"),
-            F.coalesce("n_dup_corpus", zero).alias("n_dup_corpus"),
-            F.coalesce("n_dup_batch_only", zero).alias("n_dup_batch_only"),
-            F.coalesce("n_admitted", zero).alias("n_admitted"),
-        )
-        .orderBy("cell")
-    )
+    by = F.expr(f"cell div {roll}").alias("cell1")
+    return _maintain_readout(base, is_batch, spine, by)
 
 
 # ---------------------------------------------------------------------------
@@ -7797,7 +7250,6 @@ def srp_near_dup_pairs(
     spark: SparkSession,
     n_bits: int | None = None,
     bands: int = _SRP_BANDS,
-    tau: float = _SRP_TAU,
 ) -> DataFrame:
     """SRP-banded near-dup pairs, cosine-verified.
 
@@ -7837,7 +7289,7 @@ def srp_near_dup_pairs(
         cand.join(va, "va")
         .join(vb, "vb")
         .select("va", "vb", cos.alias("cos"))
-        .filter(F.col("cos") >= tau)
+        .filter(F.col("cos") >= _SRP_TAU)
         .select(
             F.col("va").alias("vec_a"),
             F.col("vb").alias("vec_b"),
@@ -12049,13 +11501,7 @@ def kcenter_select(
     one distributed pass picks k cover points per bucket, then the
     exact greedy runs driver-side over the pooled candidates in
     milliseconds per pick."""
-    eq = spark.table("embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * _IVF_SCALE).cast("long"),
-        ).alias("eq"),
-    ).localCheckpoint()
+    eq = _quantize(spark).localCheckpoint()
     seed_rows = eq.orderBy("vec_id").limit(1).collect()
     if not seed_rows:
         return local_frame(spark, [], "rk bigint, vec_id bigint, d2 bigint")
@@ -12274,14 +11720,7 @@ def kcenter_select_prepick(
     (property-pinned in tests/test_round14_props.py)."""
     import pandas as pd
 
-    eq = spark.table("embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * _IVF_SCALE).cast("long"),
-        ).alias("eq"),
-        (F.col("vec_id") % nbuckets).alias("bucket"),
-    )
+    eq = _quantize(spark).withColumn("bucket", F.col("vec_id") % nbuckets)
 
     def fps_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = [

@@ -2178,15 +2178,19 @@ def branch_commit(
     then commit the global manifest v{version_to} (parent = branch
     head) and CAS the branch ref. Main never sees the rows: its ref
     is untouched. Returns the new branch head version. Idempotent:
-    a re-run whose manifest exists just re-asserts the ref. A
-    v{version_to} that is not this stage appended (another branch's
-    commit won the version) raises CommitConflict, ref unmoved."""
+    a re-run whose manifest exists just re-asserts the ref, and a
+    replay of a commit the branch already holds (v{version_to} is
+    the head or one of its ancestors) leaves the ref alone and
+    returns the head. A v{version_to} that is not this stage
+    appended (another branch's commit won the version) raises
+    CommitConflict, ref unmoved."""
     head = branch_head(root, branch)
     if head is None:
         raise CommitConflict(f"branch {branch!r} does not exist")
     parent = head[0]
     stage_dir = os.path.join(root, f"stage_{stage_name}")
-    if not os.path.exists(os.path.join(root, f"v{version_to}.json")):
+    replay = os.path.exists(os.path.join(root, f"v{version_to}.json"))
+    if not replay:
         table = read_version(spark, root, parent)
 
         def violations(sdf) -> int:
@@ -2239,8 +2243,26 @@ def branch_commit(
         raise CommitConflict(
             f"v{version_to} is not stage {stage_name!r} on {branch!r}"
         )
+    if replay and _is_ancestor(root, version_to, parent):
+        return parent
     branch_advance(root, branch, parent, version_to)
     return version_to
+
+
+def _is_ancestor(root: str, v: int, head: int) -> bool:
+    """Whether v{v} is ``head`` or on its ``parent`` chain — the
+    manifests' ancestry walk, O(chain length) metadata reads."""
+    import json
+
+    while head != v:
+        path = os.path.join(root, f"v{head}.json")
+        if not os.path.exists(path):
+            raise CommitConflict(f"missing manifest v{head} in ancestry walk")
+        with open(path) as fh:
+            head = json.load(fh).get("parent")
+        if head is None:
+            return False
+    return True
 
 
 def fast_forward(root: str, into: str, frm: str) -> int:
@@ -2251,8 +2273,6 @@ def fast_forward(root: str, into: str, frm: str) -> int:
     history, exactly Iceberg's fast_forward procedure. Pure
     metadata: one ancestry walk + one ref CAS, no data movement.
     Returns the merged head version."""
-    import json
-
     src = branch_head(root, frm)
     dst = branch_head(root, into)
     if src is None or dst is None:
@@ -2260,19 +2280,11 @@ def fast_forward(root: str, into: str, frm: str) -> int:
     target, cur = src[0], dst[0]
     if target == cur:
         return cur
-    v = target
-    while v != cur:
-        path = os.path.join(root, f"v{v}.json")
-        if not os.path.exists(path):
-            raise CommitConflict(f"missing manifest v{v} in ancestry walk")
-        with open(path) as fh:
-            parent = json.load(fh).get("parent")
-        if parent is None:
-            raise CommitConflict(
-                f"{into!r} (v{cur}) is not an ancestor of {frm!r} "
-                f"(v{target}): not a fast-forward"
-            )
-        v = parent
+    if not _is_ancestor(root, cur, target):
+        raise CommitConflict(
+            f"{into!r} (v{cur}) is not an ancestor of {frm!r} "
+            f"(v{target}): not a fast-forward"
+        )
     branch_advance(root, into, cur, target)
     return target
 
@@ -2295,7 +2307,8 @@ def cherry_pick(
     audit, one manifest, one ref CAS. Audits key collisions against
     the target head (the appended keys may already exist there).
     Idempotent: if ``version_to`` is this pick, the ref is just
-    re-asserted; if it is another commit, CommitConflict."""
+    re-asserted (left alone when the branch already holds it as its
+    head or an ancestor); if it is another commit, CommitConflict."""
     import json
 
     head = branch_head(root, into)
@@ -2309,7 +2322,8 @@ def cherry_pick(
         raise CommitConflict(
             f"v{version} is not an append commit: cannot cherry-pick"
         )
-    if not os.path.exists(os.path.join(root, f"v{version_to}.json")):
+    replay = os.path.exists(os.path.join(root, f"v{version_to}.json"))
+    if not replay:
         picked = read_written(spark, src["schema"], *appended)
         _, _, dup = _audit(picked, read_version(spark, root, cur)).first()
         if dup:
@@ -2321,6 +2335,8 @@ def cherry_pick(
         root, cur, version_to, appended, parent=cur, cherry_picked_from=version
     ):
         raise CommitConflict(f"v{version_to} is not the pick of v{version}")
+    if replay and _is_ancestor(root, version_to, cur):
+        return cur
     branch_advance(root, into, cur, version_to)
     return version_to
 

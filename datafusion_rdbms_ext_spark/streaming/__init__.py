@@ -1875,33 +1875,17 @@ def stream_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_SEM_SPLITS = 3
 
 
-def _stream_sem_oracle() -> str:
-    from ..queries.llm import (
-        _SEM_INC_MOD,
-        _SEMDEDUP_TAU,
-        _SQL_ASSIGN_DIST,
-        _SQL_NORM,
-        _SQL_PAIR_DOT,
-        _IVF_SCALE,
-        _sql_lloyds_cells,
-    )
+def _stream_sem_chain_sql(head: str) -> str:
+    """DuckDB text of the streamed admission's three CHAINED passes:
+    ``head`` is a WITH clause that ends with ``base (vec_id, cell,
+    embedding, nrm)`` under the frozen index; batch k is admitted
+    against ``prior{k}`` (the corpus plus every earlier batch's
+    admitted rows), and the per-batch report follows."""
+    from ..queries.llm import _SEM_INC_MOD, _SEMDEDUP_TAU, _SQL_PAIR_DOT
 
     parts = [
-        f"""
-    WITH {_sql_lloyds_cells(prefix="fz_", where=f"WHERE vec_id % {_SEM_INC_MOD} <> 0")},
-    eqv_all AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_IVF_SCALE}) AS BIGINT)) AS eq
-      FROM embeddings
-    ),
-    asg_all AS (
-      SELECT vec_id, cid AS cell FROM (
-        SELECT e.vec_id, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY {_SQL_ASSIGN_DIST}, c.cid) AS rk
-        FROM eqv_all e CROSS JOIN fz_centroids c) WHERE rk = 1
-    ),
-    base AS (SELECT b.vec_id, a.cell, b.embedding, {_SQL_NORM} AS nrm
-             FROM embeddings b JOIN asg_all a USING (vec_id)),
+        head
+        + f""",
     prior0 AS (SELECT vec_id AS q_id, cell, embedding AS q_emb, nrm AS q_nrm
                FROM base WHERE vec_id % {_SEM_INC_MOD} <> 0)"""
     ]
@@ -1950,77 +1934,78 @@ def _stream_sem_oracle() -> str:
     return ",".join(parts) + f" SELECT * FROM ({reports}) ORDER BY batch_seq"
 
 
-@register(
-    "stream_semdedup_admission",
-    oracle=None,  # installed below (needs queries.llm fragments)
-    doc="Streaming SemDeDup admission: the ingest slice drains as "
-    "three ordered micro-batches through foreachBatch; each batch "
-    "assigns map-side to the FROZEN corpus-trained index and a "
-    "vector is rejected on a cosine>=tau neighbor in the corpus, in "
-    "any EARLIER batch's admitted set, or earlier in its own batch "
-    "— sequential chaining, which the batch operator deliberately "
-    "does not model; a rejected vector never poisons later "
-    "admissions. Durable admitted-state accrues per batch under an "
-    "idempotent per-batch path (replays are no-ops). The oracle "
-    "re-runs the corpus k-means, the frozen assignment, and all "
-    "three CHAINED admission passes in SQL.",
-    tags=("llm", "dedup", "similarity", "streaming"),
-)
-def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-batch admission report after draining the ingest stream.
-
-    Scale: the frozen index is trained ONCE before the stream and
-    broadcast into every batch's map-side assignment; per-batch cost
-    is |batch| x cell occupancy against (corpus + admitted-so-far) —
-    the admitted store grows only by ADMITTED rows (duplicates never
-    re-enter the comparison set, unlike naive re-clustering); both
-    rejection joins are cell-bucketed with the batch on one side. At
-    100 TB the store is a cell-partitioned table and a batch touches
-    only its cells' partitions; centroid staleness is the separately
-    registered maintenance job (llm_semdedup_maintain)."""
-    import glob as _glob
-    import tempfile
-
+def _stream_sem_oracle() -> str:
     from ..queries.llm import (
         _SEM_INC_MOD,
-        _SEMDEDUP_TAU,
-        _IVF_K,
-        _assign_keyed,
-        _ckpt_unless_local,
-        _dot,
-        _one_prefix,
+        _SQL_ASSIGN_DIST,
+        _SQL_NORM,
+        _IVF_SCALE,
+        _sql_lloyds_cells,
+    )
+
+    return _stream_sem_chain_sql(f"""
+    WITH {_sql_lloyds_cells(prefix="fz_", where=f"WHERE vec_id % {_SEM_INC_MOD} <> 0")},
+    eqv_all AS (
+      SELECT vec_id,
+             list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * {_IVF_SCALE}) AS BIGINT)) AS eq
+      FROM embeddings
+    ),
+    asg_all AS (
+      SELECT vec_id, cid AS cell FROM (
+        SELECT e.vec_id, c.cid,
+               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY {_SQL_ASSIGN_DIST}, c.cid) AS rk
+        FROM eqv_all e CROSS JOIN fz_centroids c) WHERE rk = 1
+    ),
+    base AS (SELECT b.vec_id, a.cell, b.embedding, {_SQL_NORM} AS nrm
+             FROM embeddings b JOIN asg_all a USING (vec_id))""")
+
+
+def _stream_sem_admission(spark: SparkSession, sf_dir: str, train, walk) -> DataFrame:
+    """The one streamed SemDeDup admission: the ingest slice
+    (vec_id % 5 == 0) drains as three ordered single-file micro-batches
+    through foreachBatch against a frozen index, and each batch is
+    admitted (``queries.llm._sem_marked``) against the corpus plus
+    every earlier batch's ADMITTED rows. ``train(q)`` freezes the
+    index over the quantized corpus ``q`` and returns ``(index,
+    corpus_cells)``; ``walk(q, index)`` assigns a quantized batch.
+    Both return (vec_id, cell, ...) rows whose ``cell`` is the shard
+    key.
+
+    Scale: the index is trained ONCE before the stream and broadcast
+    into every batch's map-side walk; per-batch cost is |batch| x
+    shard occupancy against the admitted store, which grows only by
+    ADMITTED rows (duplicates never re-enter the comparison set);
+    both rejection joins are shard-bucketed with the batch on one
+    side. Durable admitted-state accrues per batch under an
+    idempotent per-batch path (replays are no-ops)."""
+    import glob as _glob
+    import tempfile
+    import time as _time
+
+    from ..queries.base import ensure_tables
+    from ..queries.llm import (
+        _SEM_INC_MOD,
+        _admission_counts,
         _quantize,
-        _train_keyed,
+        _sem_marked,
         _vectors_with_norm,
     )
-    from ..queries.base import ensure_tables
 
     ensure_tables(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="stream_semdedup_")
     is_new = F.col("vec_id") % _SEM_INC_MOD == 0
 
     # frozen index: trained on the corpus ONCE, before the stream
-    q = _one_prefix(_quantize(spark))
-    cents = _ckpt_unless_local(
-        _train_keyed(q.filter(~is_new), _IVF_K, "ivfseed", 1)
-    )
+    index, corpus_cells = train(_quantize(spark).filter(~is_new))
     corpus = (
         _vectors_with_norm(spark)
-        .join(
-            _assign_keyed(q, cents).select(
-                "vec_id", F.col("cid").alias("cell")
-            ),
-            "vec_id",
-        )
+        .join(corpus_cells, "vec_id")
         .select("vec_id", "cell", "embedding", "nrm")
-        .filter(~is_new)
     )
     store = os.path.join(root, "store")
     corpus.write.mode("overwrite").parquet(os.path.join(store, "seed=corpus"))
 
     # the ingest slice as THREE ordered single-file batches
-    import time as _time
-
     indir = os.path.join(root, "in")
     os.makedirs(indir)
     src = spark.table("embeddings").filter(is_new)
@@ -2043,27 +2028,9 @@ def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(done):
             return  # replayed batch: already durable
         sess = batch_df.sparkSession
-        bq = batch_df.select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.round(x.cast("double") * 1000).cast("long"),
-            ).alias("eq"),
-        )
         newb = (
-            batch_df.select(
-                "vec_id",
-                "embedding",
-                F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias(
-                    "nrm"
-                ),
-            )
-            .join(
-                _assign_keyed(_one_prefix(bq), cents).select(
-                    "vec_id", F.col("cid").alias("cell")
-                ),
-                "vec_id",
-            )
+            _vectors_with_norm(sess, batch_df)
+            .join(walk(_quantize(sess, batch_df), index), "vec_id")
             .select("vec_id", "cell", "embedding", "nrm")
             .localCheckpoint()
         )
@@ -2082,72 +2049,22 @@ def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert [r["s"] for r in splits] == [processed], (
             f"file source delivered split {splits} as batch #{processed}"
         )
-        prior = sess.read.parquet(store).select(
-            F.col("vec_id").alias("q_id"),
-            "cell",
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-        bqside = newb.select(
-            F.col("vec_id").alias("q_id"),
-            "cell",
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-        cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-            F.col("q_nrm") * F.col("nrm")
-        )
-        dp = (
-            prior.join(newb, "cell")
-            .filter(cos >= _SEMDEDUP_TAU)
-            .select("vec_id")
-            .distinct()
-            .withColumn("dup_prior", F.lit(1))
-        )
-        db = (
-            bqside.join(newb, "cell")
-            .filter(F.col("q_id") < F.col("vec_id"))
-            .filter(cos >= _SEMDEDUP_TAU)
-            .select("vec_id")
-            .distinct()
-            .withColumn("dup_batch", F.lit(1))
-        )
-        marked = (
-            newb.join(dp, "vec_id", "left")
-            .join(db, "vec_id", "left")
-            .localCheckpoint()
-        )
+        marked = _sem_marked(sess.read.parquet(store), newb, ["cell"]).localCheckpoint()
         admitted = marked.filter(
-            F.col("dup_prior").isNull() & F.col("dup_batch").isNull()
+            F.col("dup_corpus").isNull() & F.col("dup_batch").isNull()
         ).select("vec_id", "cell", "embedding", "nrm")
         # idempotent per-batch path: a replayed write lands on the
         # same directory (overwrite), never duplicates store rows
         admitted.write.mode("overwrite").parquet(
             os.path.join(store, f"seed=b{processed}")
         )
-        rep = marked.agg(
-            F.count(F.lit(1)).alias("n_new"),
-            F.count("dup_prior").alias("n_dup_prior"),
-            F.sum(
-                F.when(
-                    F.col("dup_batch").isNotNull()
-                    & F.col("dup_prior").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_dup_batch_only"),
-            F.sum(
-                F.when(
-                    F.col("dup_prior").isNull() & F.col("dup_batch").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_admitted"),
-        ).collect()[0]
+        rep = _admission_counts(marked).collect()[0]
         with open(os.path.join(root, f"report_{processed}.json"), "w") as fh:
             json.dump(
                 {
                     "batch_seq": processed,
                     "n_new": rep["n_new"],
-                    "n_dup_prior": rep["n_dup_prior"],
+                    "n_dup_prior": rep["n_dup_corpus"],
                     "n_dup_batch_only": rep["n_dup_batch_only"],
                     "n_admitted": rep["n_admitted"],
                 },
@@ -2180,6 +2097,51 @@ def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("batch_seq")
 
 
+@register(
+    "stream_semdedup_admission",
+    oracle=None,  # installed below (needs queries.llm fragments)
+    doc="Streaming SemDeDup admission: the ingest slice drains as "
+    "three ordered micro-batches through foreachBatch; each batch "
+    "assigns map-side to the FROZEN corpus-trained index and a "
+    "vector is rejected on a cosine>=tau neighbor in the corpus, in "
+    "any EARLIER batch's admitted set, or earlier in its own batch "
+    "— sequential chaining, which the batch operator deliberately "
+    "does not model; a rejected vector never poisons later "
+    "admissions. Durable admitted-state accrues per batch under an "
+    "idempotent per-batch path (replays are no-ops). The oracle "
+    "re-runs the corpus k-means, the frozen assignment, and all "
+    "three CHAINED admission passes in SQL.",
+    tags=("llm", "dedup", "similarity", "streaming"),
+)
+def stream_semdedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-batch admission report after draining the ingest stream
+    against the frozen flat IVF index (see
+    :func:`_stream_sem_admission` for the scale notes). At 100 TB the
+    store is a cell-partitioned table and a batch touches only its
+    cells' partitions; centroid staleness is the separately
+    registered maintenance job (llm_semdedup_maintain)."""
+    from ..queries.llm import (
+        _IVF_K,
+        _assign_keyed,
+        _ckpt_unless_local,
+        _one_prefix,
+        _train_keyed,
+    )
+
+    def walk(q: DataFrame, cents: DataFrame) -> DataFrame:
+        return _assign_keyed(_one_prefix(q), cents).select(
+            "vec_id", F.col("cid").alias("cell")
+        )
+
+    def train(q: DataFrame):
+        cents = _ckpt_unless_local(
+            _train_keyed(_one_prefix(q), _IVF_K, "ivfseed", 1)
+        )
+        return cents, walk(q, cents)
+
+    return _stream_sem_admission(spark, sf_dir, train, walk)
+
+
 # the oracle needs queries.llm's SQL fragments; installed after the
 # function body to keep the decorator readable
 from ..queries.base import REGISTRY as _REG  # noqa: E402
@@ -2191,13 +2153,11 @@ _REG["stream_semdedup_admission"].oracle = _stream_sem_oracle()
 # Streaming admission on the TREE index (round 14 — the last leg of
 # VERDICT r13 next #3: maintenance landed as llm_semdedup_tree_maintain,
 # this ports the CONTINUOUS ingest form). Identical sequential-chaining
-# semantics to stream_semdedup_admission, but the frozen index is the
-# depth-b tree: each batch walks the frozen tree map-side (broadcast
-# per-level centroid arrays) and duplicate rejection buckets on the
-# packed LEAF key — the occupancy-capped comparison set the log-depth
-# shape exists to provide. Kept as its own function rather than
-# parametrizing the driver-proven flat operator: the flat plan stays
-# byte-stable.
+# semantics to stream_semdedup_admission — the same admission driver —
+# but the frozen index is the depth-b tree: each batch walks the frozen
+# tree map-side (broadcast per-level centroid arrays) and duplicate
+# rejection buckets on the packed LEAF key — the occupancy-capped
+# comparison set the log-depth shape exists to provide.
 # ---------------------------------------------------------------------------
 _STREAM_TREE_B = (4, 3)  # pinned for the oracle (depth composes)
 
@@ -2205,9 +2165,7 @@ _STREAM_TREE_B = (4, 3)  # pinned for the oracle (depth composes)
 def _stream_sem_tree_oracle() -> str:
     from ..queries.llm import (
         _SEM_INC_MOD,
-        _SEMDEDUP_TAU,
         _SQL_NORM,
-        _SQL_PAIR_DOT,
         _IVF_SCALE,
         _materialize_ctes,
         _sql_lloyds_cells,
@@ -2216,8 +2174,7 @@ def _stream_sem_tree_oracle() -> str:
     )
 
     b = _STREAM_TREE_B
-    parts = [
-        f"""
+    return _materialize_ctes(_stream_sem_chain_sql(f"""
     WITH {_sql_lloyds_cells(k=b[0], prefix="fz_", where=f"WHERE vec_id % {_SEM_INC_MOD} <> 0")},
     {_sql_tree_deep_cells(b, prefix="fz_", export_cents=True)},
     eqv_all AS (
@@ -2227,55 +2184,7 @@ def _stream_sem_tree_oracle() -> str:
     ),
     {_sql_tree_frozen_assign(b, "fz_", "asg_all")},
     base AS (SELECT b.vec_id, a.key AS cell, b.embedding, {_SQL_NORM} AS nrm
-             FROM embeddings b JOIN asg_all a ON a.vec_id = b.vec_id),
-    prior0 AS (SELECT vec_id AS q_id, cell, embedding AS q_emb, nrm AS q_nrm
-               FROM base WHERE vec_id % {_SEM_INC_MOD} <> 0)"""
-    ]
-    for k in range(_STREAM_SEM_SPLITS):
-        parts.append(f"""
-    b{k} AS (SELECT * FROM base WHERE vec_id % {_SEM_INC_MOD} = 0
-             AND (vec_id // {_SEM_INC_MOD}) % {_STREAM_SEM_SPLITS} = {k}),
-    b{k}q AS (SELECT vec_id AS q_id, cell, embedding AS q_emb, nrm AS q_nrm
-              FROM b{k}),
-    dp{k} AS (
-      SELECT DISTINCT b.vec_id
-      FROM prior{k} q JOIN b{k} b ON b.cell = q.cell
-      WHERE {_SQL_PAIR_DOT} / (q.q_nrm * b.nrm) >= {_SEMDEDUP_TAU}
-    ),
-    db{k} AS (
-      SELECT DISTINCT b.vec_id
-      FROM b{k}q q JOIN b{k} b ON b.cell = q.cell AND q.q_id < b.vec_id
-      WHERE {_SQL_PAIR_DOT} / (q.q_nrm * b.nrm) >= {_SEMDEDUP_TAU}
-    ),
-    adm{k} AS (
-      SELECT b.* FROM b{k} b
-      LEFT JOIN dp{k} dp ON dp.vec_id = b.vec_id
-      LEFT JOIN db{k} db ON db.vec_id = b.vec_id
-      WHERE dp.vec_id IS NULL AND db.vec_id IS NULL
-    ),
-    prior{k + 1} AS (
-      SELECT * FROM prior{k}
-      UNION ALL
-      SELECT vec_id AS q_id, cell, embedding AS q_emb, nrm AS q_nrm
-      FROM adm{k}
-    )""")
-    reports = " UNION ALL ".join(
-        f"""
-    SELECT {k} AS batch_seq,
-           CAST(COUNT(*) AS BIGINT) AS n_new,
-           CAST(COUNT(dp.vec_id) AS BIGINT) AS n_dup_prior,
-           CAST(SUM(CASE WHEN db.vec_id IS NOT NULL AND dp.vec_id IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_batch_only,
-           CAST(SUM(CASE WHEN dp.vec_id IS NULL AND db.vec_id IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_admitted
-    FROM b{k}
-    LEFT JOIN dp{k} dp ON dp.vec_id = b{k}.vec_id
-    LEFT JOIN db{k} db ON db.vec_id = b{k}.vec_id"""
-        for k in range(_STREAM_SEM_SPLITS)
-    )
-    return _materialize_ctes(
-        ",".join(parts) + f" SELECT * FROM ({reports}) ORDER BY batch_seq"
-    )
+             FROM embeddings b JOIN asg_all a ON a.vec_id = b.vec_id)"""))
 
 
 @register(
@@ -2309,186 +2218,18 @@ def stream_semdedup_tree_admission(
     grows (add levels, not fan-out), so per-batch admission cost
     tracks |batch|, not corpus size. The admitted store is
     leaf-partitioned; a batch touches only its leaves' partitions."""
-    import glob as _glob
-    import tempfile
-    import time as _time
+    from ..queries.llm import tree_assign_frozen, tree_train_deep
 
-    from ..queries.base import ensure_tables
-    from ..queries.llm import (
-        _SEM_INC_MOD,
-        _SEMDEDUP_TAU,
-        _dot,
-        _quantize,
-        _vectors_with_norm,
-        tree_assign_frozen,
-        tree_train_deep,
-    )
+    def train(q: DataFrame):
+        # the training chain's own assignment IS the corpus assignment
+        # (property-pinned by test_round14_props), so no re-walk
+        c1, keyed, asg = tree_train_deep(q, _STREAM_TREE_B)
+        return (c1, keyed), asg
 
-    ensure_tables(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream_semdedup_tree_")
-    is_new = F.col("vec_id") % _SEM_INC_MOD == 0
+    def walk(q: DataFrame, index) -> DataFrame:
+        return tree_assign_frozen(q, *index)
 
-    # frozen tree: trained on the corpus ONCE, before the stream; the
-    # training chain's own assignment IS the corpus assignment
-    # (property-pinned by test_round14_props), so no re-walk
-    q = _quantize(spark)
-    c1, kd, train_asg = tree_train_deep(q.filter(~is_new), _STREAM_TREE_B)
-    corpus = (
-        _vectors_with_norm(spark)
-        .join(train_asg, "vec_id")
-        .select("vec_id", "cell", "embedding", "nrm")
-    )
-    store = os.path.join(root, "store")
-    corpus.write.mode("overwrite").parquet(os.path.join(store, "seed=corpus"))
-
-    indir = os.path.join(root, "in")
-    os.makedirs(indir)
-    src = spark.table("embeddings").filter(is_new)
-    for k in range(_STREAM_SEM_SPLITS):
-        part_dir = os.path.join(root, f"b{k}.tmp")
-        src.filter(
-            F.expr(f"(vec_id div {_SEM_INC_MOD}) % {_STREAM_SEM_SPLITS}") == k
-        ).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        (pf,) = _glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        dst = os.path.join(indir, f"batch_{k}.parquet")
-        os.rename(pf, dst)
-        shutil.rmtree(part_dir)
-        t = _time.time() - 600 + k * 120  # strictly increasing mtimes
-        os.utime(dst, (t, t))
-
-    schema = spark.read.parquet(os.path.join(indir, "batch_0.parquet")).schema
-
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        done = os.path.join(root, f"v{int(batch_id)}.done")
-        if os.path.exists(done):
-            return  # replayed batch: already durable
-        sess = batch_df.sparkSession
-        bq = batch_df.select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.round(x.cast("double") * 1000).cast("long"),
-            ).alias("eq"),
-        )
-        newb = (
-            batch_df.select(
-                "vec_id",
-                "embedding",
-                F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias(
-                    "nrm"
-                ),
-            )
-            .join(tree_assign_frozen(bq, c1, kd), "vec_id")
-            .select("vec_id", "cell", "embedding", "nrm")
-            .localCheckpoint()
-        )
-        splits = (
-            newb.select(
-                F.expr(
-                    f"(vec_id div {_SEM_INC_MOD}) % {_STREAM_SEM_SPLITS}"
-                ).alias("s")
-            )
-            .distinct()
-            .collect()
-        )
-        processed = len(_glob.glob(os.path.join(root, "v*.done")))
-        assert [r["s"] for r in splits] == [processed], (
-            f"file source delivered split {splits} as batch #{processed}"
-        )
-        prior = sess.read.parquet(store).select(
-            F.col("vec_id").alias("q_id"),
-            "cell",
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-        bqside = newb.select(
-            F.col("vec_id").alias("q_id"),
-            "cell",
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-        cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-            F.col("q_nrm") * F.col("nrm")
-        )
-        dp = (
-            prior.join(newb, "cell")
-            .filter(cos >= _SEMDEDUP_TAU)
-            .select("vec_id")
-            .distinct()
-            .withColumn("dup_prior", F.lit(1))
-        )
-        db = (
-            bqside.join(newb, "cell")
-            .filter(F.col("q_id") < F.col("vec_id"))
-            .filter(cos >= _SEMDEDUP_TAU)
-            .select("vec_id")
-            .distinct()
-            .withColumn("dup_batch", F.lit(1))
-        )
-        marked = (
-            newb.join(dp, "vec_id", "left")
-            .join(db, "vec_id", "left")
-            .localCheckpoint()
-        )
-        admitted = marked.filter(
-            F.col("dup_prior").isNull() & F.col("dup_batch").isNull()
-        ).select("vec_id", "cell", "embedding", "nrm")
-        admitted.write.mode("overwrite").parquet(
-            os.path.join(store, f"seed=b{processed}")
-        )
-        rep = marked.agg(
-            F.count(F.lit(1)).alias("n_new"),
-            F.count("dup_prior").alias("n_dup_prior"),
-            F.sum(
-                F.when(
-                    F.col("dup_batch").isNotNull()
-                    & F.col("dup_prior").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_dup_batch_only"),
-            F.sum(
-                F.when(
-                    F.col("dup_prior").isNull() & F.col("dup_batch").isNull(),
-                    1,
-                ).otherwise(0)
-            ).alias("n_admitted"),
-        ).collect()[0]
-        with open(os.path.join(root, f"report_{processed}.json"), "w") as fh:
-            json.dump(
-                {
-                    "batch_seq": processed,
-                    "n_new": rep["n_new"],
-                    "n_dup_prior": rep["n_dup_prior"],
-                    "n_dup_batch_only": rep["n_dup_batch_only"],
-                    "n_admitted": rep["n_admitted"],
-                },
-                fh,
-            )
-        open(done, "w").close()
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(os.path.join(indir, "batch_*.parquet"))
-    )
-    q2 = (
-        stream.writeStream.foreachBatch(admit_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-
-    rows = []
-    for p in sorted(_glob.glob(os.path.join(root, "report_*.json"))):
-        with open(p) as fh:
-            rows.append(json.load(fh))
-    return local_frame(
-        spark,
-        rows,
-        "batch_seq long, n_new long, n_dup_prior long, "
-        "n_dup_batch_only long, n_admitted long",
-    ).orderBy("batch_seq")
+    return _stream_sem_admission(spark, sf_dir, train, walk)
 
 
 _REG["stream_semdedup_tree_admission"].oracle = _stream_sem_tree_oracle()

@@ -227,6 +227,9 @@ QUERIES = (
 def _extra_probes():
     from datafusion_rdbms_ext_spark.queries import llm
 
+    def _sqrt_split(spark):
+        return llm.sharded_shard_counts(spark.table("embeddings").count())
+
     return {
         "semdedup_default_k": lambda spark, sf: llm.semdedup_prune(spark),
         "semdedup_sharded_default": lambda spark, sf: (
@@ -236,13 +239,16 @@ def _extra_probes():
             llm.semdedup_admit_batch(spark)
         ),
         "semdedup_sharded_mp_default": lambda spark, sf: (
-            llm.semdedup_prune_sharded_mp(spark)
+            llm.semdedup_prune_sharded(spark, nprobe=llm._SEM_NPROBE)
         ),
+        # the 2-level tree: depth 2 at the cross-product's sqrt split
         "semdedup_tree_default": lambda spark, sf: (
-            llm.semdedup_prune_tree(spark)
+            llm.semdedup_prune_tree_deep(spark, branching=_sqrt_split(spark))
         ),
         "semdedup_tree_mp_default": lambda spark, sf: (
-            llm.semdedup_prune_tree_mp(spark)
+            llm.semdedup_prune_tree_deep(
+                spark, branching=_sqrt_split(spark), nprobe=llm._SEM_NPROBE
+            )
         ),
         # round 13: log-depth tree (depth derives from N at constant
         # fan-out — the occupancy-capped deploy shape), both-levels
@@ -253,10 +259,10 @@ def _extra_probes():
             llm.semdedup_prune_tree_deep(spark)
         ),
         "semdedup_tree_deep_mp_default": lambda spark, sf: (
-            llm.semdedup_prune_tree_deep_mp(spark)
+            llm.semdedup_prune_tree_deep(spark, nprobe=llm._SEM_NPROBE)
         ),
         "semdedup_sharded_mpb_default": lambda spark, sf: (
-            llm.semdedup_prune_sharded_mp(spark, nprobe1=2)
+            llm.semdedup_prune_sharded(spark, nprobe=llm._SEM_NPROBE, nprobe1=2)
         ),
         "mmr_c1000": lambda spark, sf: llm.mmr_select(spark, c=1000),
         # maintained-index admission, K re-derived from the grown

@@ -404,3 +404,61 @@ def test_branch_commits_racing_for_one_version(spark, tiny_root):
     assert branch_head(root, loser) == (1, 1)
     with open(os.path.join(root, "v2.json")) as fh:
         assert json.load(fh)["branch"] == winners[0]
+
+
+def test_replaying_an_older_commit_keeps_the_head(tmp_path):
+    """Replaying a commit the branch already holds — its head or an
+    ancestor — returns the head and leaves the ref alone: moving the
+    ref back to the replayed version would drop every later commit.
+    Pure metadata: hand-written manifests, stage files and refs; the
+    replay path reads no data (no session, no batch)."""
+    from datafusion_rdbms_ext_spark.sources.sinks import cherry_pick
+
+    root = str(tmp_path / "corpus")
+
+    def stage(name):
+        d = os.path.join(root, f"stage_{name}")
+        os.makedirs(d)
+        path = os.path.join(d, "part-0.parquet")
+        open(path, "w").close()
+        return [path]
+
+    def commit(v, parent, files, appended, **marks):
+        _write_manifest(
+            root,
+            v,
+            {
+                "version": v,
+                "files": files,
+                "appended": appended,
+                "parent": parent,
+                "schema": DOCS,
+                **marks,
+            },
+        )
+
+    s1, s2, s3 = stage("s1"), stage("s2"), stage("s3")
+    _write_manifest(root, 1, {"version": 1, "files": [], "schema": DOCS})
+    # dev: v2 = stage s1, v3 = stage s2 on top
+    commit(2, 1, s1, s1, branch="dev")
+    commit(3, 2, s1 + s2, s2, branch="dev")
+    # main: v4 = the pick of v3, v5 = stage s3 on top
+    commit(4, 1, s2, s2, cherry_picked_from=3)
+    commit(5, 4, s2 + s3, s3, branch="main")
+    branch_init(root, "dev", 1)
+    branch_advance(root, "dev", 1, 2)
+    branch_advance(root, "dev", 2, 3)
+    branch_init(root, "main", 1)
+    branch_advance(root, "main", 1, 4)
+    branch_advance(root, "main", 4, 5)
+
+    assert branch_commit(None, root, "dev", None, "s1", 2) == 3
+    assert branch_head(root, "dev") == (3, 3)
+    assert branch_commit(None, root, "dev", None, "s2", 3) == 3
+    assert branch_head(root, "dev") == (3, 3)
+    assert cherry_pick(None, root, "main", 3, 4) == 5
+    assert branch_head(root, "main") == (5, 3)
+    # a version the branch holds that is NOT this stage still raises
+    with pytest.raises(CommitConflict):
+        branch_commit(None, root, "dev", None, "s2", 2)
+    assert branch_head(root, "dev") == (3, 3)

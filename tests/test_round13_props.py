@@ -12,11 +12,8 @@ from datafusion_rdbms_ext_spark.queries.llm import (
     _SEM_K2,
     _SEM_NPROBE,
     _TREE_PACK,
-    hierarchical_index,
     mmr_select,
-    semdedup_prune_tree,
     semdedup_prune_tree_deep,
-    tree_cells_deep,
     tree_index_deep,
 )
 
@@ -35,15 +32,15 @@ def test_tree_deep_depth2_bit_identical_to_hierarchical(spark):
     round-12 2-level tree EXACTLY (same seeds, ties, integer means) —
     the guarantee that lets the deep form share the 2-level form's
     oracle-backed trust. The 2-level side is the verbatim pre-collapse
-    ``hierarchical_index`` (tests/kmeans_ref.py)."""
+    keyed chain (``hierarchical_index_keyed``, tests/kmeans_ref.py)."""
     _tables(spark)
     deep = {
         r["vec_id"]: r["cell"]
-        for r in tree_cells_deep(spark, (_IVF_K, _SEM_K2)).collect()
+        for r in tree_index_deep(spark, (_IVF_K, _SEM_K2))[0].collect()
     }
     two = {
         r["vec_id"]: r["cell"] * _TREE_PACK + r["subcell"]
-        for r in ref.hierarchical_index(spark, _IVF_K, _SEM_K2)[0].collect()
+        for r in ref.hierarchical_index_keyed(spark, _IVF_K, _SEM_K2)[0].collect()
     }
     assert deep == two
 
@@ -55,11 +52,13 @@ def _rows(df):
 def test_tree_deep_depth2_probes_bit_identical_to_hierarchical(spark):
     """With ``nprobe`` the depth-2 tree's leaf probes (packed) equal
     the pre-collapse 2-level tree's per-cell probes, and
-    ``hierarchical_index`` — now ``tree_index_deep`` at depth 2,
-    unpacked — returns exactly the old (vec_id, cell, subcell) rows
-    and column types, for both its assignment and its probes."""
+    ``hierarchical_index`` — ``tree_index_deep`` at depth 2, unpacked
+    (the copy in tests/kmeans_ref.py of the wrapper the 2-level
+    SemDeDup entries used) — returns exactly the old (vec_id, cell,
+    subcell) rows and column types, for both its assignment and its
+    probes."""
     _tables(spark)
-    old_asg, old_probes = ref.hierarchical_index(
+    old_asg, old_probes = ref.hierarchical_index_keyed(
         spark, _IVF_K, _SEM_K2, nprobe=_SEM_NPROBE
     )
     _, deep_probes = tree_index_deep(
@@ -71,7 +70,7 @@ def test_tree_deep_depth2_probes_bit_identical_to_hierarchical(spark):
     )
     assert _rows(deep_probes) == packed
     assert len(packed) == _SEM_NPROBE * old_asg.count()
-    new_asg, new_probes = hierarchical_index(
+    new_asg, new_probes = ref.hierarchical_index(
         spark, _IVF_K, _SEM_K2, nprobe=_SEM_NPROBE
     )
     assert new_asg.schema == old_asg.schema
@@ -81,20 +80,23 @@ def test_tree_deep_depth2_probes_bit_identical_to_hierarchical(spark):
 
 
 def test_tree_deep_depth2_prune_matches_tree_prune(spark):
-    """semdedup over depth-2 deep shards == the 2-level tree prune:
+    """semdedup over depth-2 deep shards == the 2-level tree prune
+    (the verbatim ``semdedup_prune_tree`` in tests/kmeans_ref.py):
     identical rollup rows (the operators share semantics, not just
     assignments)."""
     _tables(spark)
     a = sorted(
         map(tuple, semdedup_prune_tree_deep(spark, (_IVF_K, _SEM_K2)).collect())
     )
-    b = sorted(map(tuple, semdedup_prune_tree(spark, _IVF_K, _SEM_K2).collect()))
+    b = sorted(
+        map(tuple, ref.semdedup_prune_tree(spark, _IVF_K, _SEM_K2).collect())
+    )
     assert a == b
 
 
 def test_tree_deep_rejects_fanout_at_packing_base(spark):
     with pytest.raises(ValueError, match="packing base"):
-        tree_cells_deep(spark, (4, _TREE_PACK))
+        tree_index_deep(spark, (4, _TREE_PACK))
 
 
 def test_tree_deep_self_scaling_depth():
@@ -115,7 +117,7 @@ def test_tree_deep_leaf_occupancy_within_pack_bounds(spark):
     branching — the packing never aliases two paths."""
     _tables(spark)
     branching = (4, 3, 3)
-    rows = tree_cells_deep(spark, branching).collect()
+    rows = tree_index_deep(spark, branching)[0].collect()
     assert len(rows) > 0
     for r in rows:
         key = r["cell"]
