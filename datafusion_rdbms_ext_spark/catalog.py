@@ -6,9 +6,10 @@ Rebuilds the reference's catalog-inference entry point
 the reference issues two ``information_schema`` queries against
 Postgres and hand-converts column metadata to Arrow schemas
 (src/sqldb/postgres/datatypes.rs:110-184), Parquet footers are
-already self-describing, so registration is one ``spark.read.parquet``
-per table — schema inferred once at registration, fixed thereafter
-(the same contract as the reference, SURVEY.md §1.2).
+already self-describing: registration reads each table's footer on the
+driver (:func:`footer_schema`, no Spark job, no data read) and plans
+the table with that schema, fixed thereafter (the same metadata-only
+contract as the reference, SURVEY.md §1.2).
 
 The reference exposes tables under a 3-part name
 (``bench.public.lineitem``, src/parser.rs:459-465); driver fixtures
@@ -19,6 +20,7 @@ are unambiguous, so names flatten to 1-part temp views (SURVEY.md §7
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -96,12 +98,80 @@ def register_tables(
             # Fail loudly: silently skipping would leave any previously
             # registered view for `name` pointing at stale data.
             raise FileNotFoundError(f"fixture table {name!r} not found at {path}")
-        df = spark.read.parquet(path)
-        df = normalize_ts(df, name)
+        df = normalize_ts(read_fixture(spark, path), name)
         df.createOrReplaceTempView(name)
         out[name] = df
     spark.conf.set(REGISTERED_DIR_CONF, sf_dir)
     return out
+
+
+def read_fixture(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` typed by :func:`footer_schema`:
+    the same frame, planned with no schema-inference job."""
+    return spark.read.schema(footer_schema(spark, path)).parquet(path)
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path).schema`` infers, read
+    from one footer on the driver. ``path`` is a parquet file or a
+    flat directory of part-files.
+
+    Inference starts a Spark job to read one footer; this runs the
+    same footer reader and converter (``ParquetFileFormat``'s
+    ``readParquetFootersInParallel`` + ``readSchema``) in the driver
+    JVM, under the session's confs at call time (``nanosAsLong``,
+    ``inferTimestampNTZ``, ``binaryAsString``, ``int96AsTimestamp``),
+    and starts none. A read made with the result plans with no job.
+    There is no inference fallback: a failing call is an error
+    (tests/test_footer_schema.py pins parity with inference)."""
+    jvm = spark._jvm
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().newHadoopConf()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(conf)
+    status = _footer_file(fs, fs.getFileStatus(jpath))
+    fmt = getattr(
+        getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"),
+        "MODULE$",
+    )
+    footers = fmt.readParquetFootersInParallel(
+        conf,
+        jvm.org.apache.spark.api.python.PythonUtils.toSeq(jvm.java.util.List.of(status)),
+        jspark.sessionState().conf().ignoreCorruptFiles(),
+    )
+    # A relation's data schema is nullable whatever the file declares
+    # (HadoopFsRelation reads ``dataSchema.asNullable``).
+    schema = fmt.readSchema(footers, jspark).get().asNullable()
+    return T.StructType.fromJson(json.loads(schema.json()))
+
+
+def _footer_file(fs, status):
+    """The file whose footer inference reads for ``status`` with
+    schema merging off (the session default): the file itself, or in
+    a directory ``_common_metadata``, else ``_metadata``, else the
+    first data file by path. Names Spark's file index hides
+    (``_``/``.`` prefixes such as ``_SUCCESS`` and ``.crc``, a
+    ``._COPYING_`` suffix) are skipped. Partition subdirectories add
+    columns no footer holds, so a subdirectory is an error."""
+    if not status.isDirectory():
+        return status
+    data, summary = [], {}
+    for st in fs.listStatus(status.getPath()):
+        name = st.getPath().getName()
+        if name in ("_common_metadata", "_metadata"):
+            summary[name] = st
+        elif name.startswith(("_", ".")) or name.endswith("._COPYING_"):
+            continue
+        elif st.isDirectory():
+            raise ValueError(f"footer_schema reads flat directories: {st.getPath()}")
+        else:
+            data.append(st)
+    data.sort(key=lambda st: st.getPath().toString())
+    candidates = [summary.get("_common_metadata"), summary.get("_metadata"), *data]
+    for st in candidates:
+        if st is not None:
+            return st
+    raise FileNotFoundError(f"no parquet data file under {status.getPath()}")
 
 
 #: Columns that fixture generations have stored as TIMESTAMP(NANOS)

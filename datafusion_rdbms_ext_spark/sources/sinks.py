@@ -487,6 +487,17 @@ def sink_clustered_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DECIMAL_DIR_CONF = "spark.datafusion_rdbms_ext.decimal_dir"
 
 
+def _money(spark: SparkSession) -> DataFrame:
+    """The money table: lineitem's price columns as decimal(38,4)."""
+    return spark.table("lineitem").select(
+        "l_orderkey",
+        "l_returnflag",
+        "l_linestatus",
+        F.col("l_extendedprice").cast("decimal(38,4)").alias("price"),
+        F.col("l_tax").cast("decimal(38,4)").alias("tax"),
+    )
+
+
 def decimal_money_path(spark: SparkSession, sf_dir: str) -> str:
     """Write a money table with decimal(38,4) columns once per session
     (memoized), returning the written path. The doubles in the fixture
@@ -497,18 +508,7 @@ def decimal_money_path(spark: SparkSession, sf_dir: str) -> str:
     if existing and os.path.isdir(existing):
         return existing
     out = tempfile.mkdtemp(prefix="sink_money_decimal_")
-    (
-        spark.table("lineitem")
-        .select(
-            "l_orderkey",
-            "l_returnflag",
-            "l_linestatus",
-            F.col("l_extendedprice").cast("decimal(38,4)").alias("price"),
-            F.col("l_tax").cast("decimal(38,4)").alias("tax"),
-        )
-        .write.mode("overwrite")
-        .parquet(out)
-    )
+    _money(spark).write.mode("overwrite").parquet(out)
     spark.conf.set(key, out)
     return out
 
@@ -552,7 +552,9 @@ def micro_decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     int128 accumulators — the disclosed price of exact money totals.
     Parquet stores decimal(38,4) as FIXED_LEN_BYTE_ARRAY(16), so
     column size is comparable to the doubles it replaces."""
-    money = spark.read.parquet(decimal_money_path(spark, sf_dir))
+    money = read_written(
+        spark, _money(spark).schema, decimal_money_path(spark, sf_dir)
+    )
     agg = money.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("price").alias("sum_price"),
@@ -2751,6 +2753,9 @@ def bloom_lineitem_root(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     bits.repartition(1).write.mode("overwrite").parquet(
         os.path.join(root, "index")
     )
+    # The month directories hold lineitem's columns (ship_month lives
+    # in the path).
+    _record_schemas(root, data=spark.table("lineitem"), index=bits)
     spark.conf.set(key, f"{root}|{m}")
     return root, m
 
@@ -2764,7 +2769,9 @@ def bloom_lookup_months(
     """Months whose Bloom bitmap contains ALL probe bits of the key —
     a no-false-negative superset of the months that hold it."""
     probes = sorted(set(_bloom_bits_py(orderkey, m)))
-    idx = spark.read.parquet(os.path.join(root, "index"))
+    idx = read_written(
+        spark, composed_schema(root, "index"), os.path.join(root, "index")
+    )
     rows = (
         idx.filter(F.col("bit").isin(probes))
         .groupBy("ship_month")
@@ -2809,7 +2816,7 @@ def sink_bloom_skip_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     months = bloom_lookup_months(spark, root, m, _BLOOM_LOOKUP_KEY)
     paths = [os.path.join(root, "data", f"ship_month={mo}") for mo in months]
     return (
-        spark.read.parquet(*paths)
+        read_written(spark, composed_schema(root, "data"), *paths)
         .filter(F.col("l_orderkey") == _BLOOM_LOOKUP_KEY)
         .select(
             F.col("l_linenumber").cast("int").alias("l_linenumber"),
@@ -3016,9 +3023,15 @@ def composed_skip_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict, int
     by_file = read_written(spark, lineitem.schema, data).select(
         F.input_file_name().alias("f"), "l_orderkey", "l_suppkey"
     )
+    # One pass for the zonemaps and the Bloom size: per-file key
+    # range and point-column NDV.
     stats = (
         by_file.groupBy("f")
-        .agg(F.min("l_orderkey").alias("mn"), F.max("l_orderkey").alias("mx"))
+        .agg(
+            F.min("l_orderkey").alias("mn"),
+            F.max("l_orderkey").alias("mx"),
+            F.countDistinct("l_suppkey").alias("ndv"),
+        )
         .collect()  # <= #files rows: manifest-sized, never data-sized
     )
     manifest = {
@@ -3029,14 +3042,9 @@ def composed_skip_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict, int
         _json.dump(manifest, fh)
     # Bloom bitmap per FILE over the point column, m self-scaled from
     # the fattest file's key count (the r7 knob-derivation rule).
-    keys = by_file.select("f", "l_suppkey").distinct()
-    max_ndv = (
-        keys.groupBy("f")
-        .agg(F.count(F.lit(1)).alias("ndv"))
-        .agg(F.max("ndv"))
-        .collect()[0][0]
-    )
+    max_ndv = max(r["ndv"] for r in stats)
     m = 1 << max(int(max_ndv * _BLOOM_LOAD) - 1, 1).bit_length()
+    keys = by_file.select("f", "l_suppkey").distinct()
     bits = keys.select(
         "f",
         F.explode(
@@ -3051,21 +3059,24 @@ def composed_skip_root(spark: SparkSession, sf_dir: str) -> tuple[str, dict, int
     bits.repartition(1).write.mode("overwrite").parquet(
         os.path.join(root, "bloom")
     )
-    with open(os.path.join(root, "schema.json"), "w") as fh:
-        _json.dump(
-            {
-                "data": lineitem.schema.jsonValue(),
-                "bloom": bits.schema.jsonValue(),
-            },
-            fh,
-        )
+    _record_schemas(root, data=lineitem, bloom=bits)
     spark.conf.set(key, f"{root}|{m}")
     return root, manifest, m
 
 
+def _record_schemas(root: str, **tables: DataFrame) -> None:
+    """Write a layout's ``schema.json``: the schema of each table the
+    layout wrote under ``root``, read back by :func:`composed_schema`."""
+    import json as _json
+
+    with open(os.path.join(root, "schema.json"), "w") as fh:
+        _json.dump({t: df.schema.jsonValue() for t, df in tables.items()}, fh)
+
+
 def composed_schema(root: str, table: str) -> dict:
-    """The recorded schema of the composed index's ``data`` or
-    ``bloom`` table."""
+    """The recorded schema of a layout's table: the composed index's
+    ``data`` or ``bloom``, the month-Bloom layout's ``data`` or
+    ``index``."""
     import json as _json
 
     with open(os.path.join(root, "schema.json")) as fh:

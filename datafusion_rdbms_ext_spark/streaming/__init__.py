@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import normalize_ts
+from ..catalog import footer_schema, normalize_ts, read_fixture
 from ..functions.compat import dsum, sql_dsum
 from ..queries.base import register
 from ..sources.connector import local_frame
@@ -50,9 +50,10 @@ _RUN_SEQ = [0]
 
 def _prepare_stream(spark: SparkSession, sf_dir: str) -> None:
     """Untimed bench prepass for streaming rows (VERDICT r10 next
-    #2a): table registration + the footer-read schema derivation for
-    the file stream happen off the clock. The per-run scenario
-    (fresh root, micro-batch drain) stays timed — it IS the operator."""
+    #2a): table registration + a first build of the file stream happen
+    off the clock. The per-run scenario (fresh root, micro-batch drain,
+    and the stream's driver-side footer read, about 10 ms) stays timed
+    — it IS the operator."""
     from ..queries.base import ensure_tables
 
     ensure_tables(spark, sf_dir)
@@ -66,21 +67,13 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     time). The driver regenerates the fixtures between rounds and has
     already switched the ts encoding once (TIMESTAMP(NANOS) →
     TIMESTAMP(MICROS), which Spark 4 reads as TIMESTAMP_NTZ), so the
-    schema is taken from the parquet footer via a batch read of the
-    same file rather than hard-coded, and the stream then goes through
-    the SAME normalization as the batch catalog (catalog.normalize_ts)
-    — streaming and batch cannot drift apart on type semantics."""
+    schema is read from the parquet footer on the driver
+    (catalog.footer_schema, no Spark job) rather than hard-coded, and
+    the stream then goes through the SAME normalization as the batch
+    catalog (catalog.normalize_ts) — streaming and batch cannot drift
+    apart on type semantics."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Footer probe memoized per (session, sf_dir): a dozen registered
-    # queries build this stream (the join queries twice each), and the
-    # file's schema cannot change within a session.
-    memo_key = f"spark.datafusion_rdbms_ext.events_schema.{abs(hash(sf_dir))}"
-    cached = spark.conf.get(memo_key, None)
-    if cached:
-        schema = T.StructType.fromJson(json.loads(cached))
-    else:
-        schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-        spark.conf.set(memo_key, json.dumps(schema.jsonValue()))
+    schema = footer_schema(spark, os.path.join(sf_dir, "events.parquet"))
     # The file-stream source wants a directory/glob, not a bare file;
     # the glob keeps the scan to events.parquet inside the shared dir.
     raw = (
@@ -1069,7 +1062,7 @@ def late_policy_replay(spark: SparkSession, sf_dir: str, root: str) -> str:
     the checkpoint-restored watermark. Returns the parquet out path.
     The restart test drives these same helpers through a THIRD drain
     and a late-batch redelivery (VERDICT r7 next #5)."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = read_fixture(spark, os.path.join(sf_dir, "events.parquet"))
     late_policy_land(spark, root, 1, ev.filter(F.dayofmonth("ts") >= _LATE_SPLIT_DAY))
     late_policy_drain(spark, root, ev.schema)
     late_policy_land(spark, root, 2, ev.filter(F.dayofmonth("ts") < _LATE_SPLIT_DAY))

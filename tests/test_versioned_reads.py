@@ -2,15 +2,17 @@
 
 Every manifest carries the ``schema`` of the files it lists, the
 delete sidecars have fixed schemas, a WAP stage is read with its
-staged frame's schema and the composed skipping index records the
-schemas of its data and Bloom tables. So building a snapshot, branch,
-stage or skipping-index read starts no Spark job (a bare
+staged frame's schema, the composed skipping index and the
+month-Bloom layout record the schemas of their tables and the money
+table is read with its writer's frame schema. So building a snapshot,
+branch, stage or skipping-index read starts no Spark job (a bare
 ``spark.read.parquet`` starts one to read a footer), and each read
 equals an inferred ``spark.read.parquet`` of the same files, rows and
 schema alike."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
@@ -26,13 +28,16 @@ from datafusion_rdbms_ext_spark.sources.sinks import (
     _REWRITE_HI,
     _REWRITE_KEY,
     _REWRITE_LO,
+    _money,
     _wap_stage,
+    bloom_lineitem_root,
     branched_corpus_root,
     compact_equality_deletes,
     compact_version,
     composed_schema,
     composed_skip_files,
     composed_skipping_index,
+    decimal_money_path,
     read_branch,
     read_version,
     read_written,
@@ -214,9 +219,31 @@ def test_composed_index_tables_read_as_inferred(spark, idx):
         )
 
 
-def test_every_manifest_records_its_schema(spark, root):
-    import glob
+def test_month_bloom_tables_read_as_inferred(spark):
+    """The month-Bloom layout's index and its month directories (the
+    lookup reads them by path, so ``ship_month`` is not a column)."""
+    ensure_tables(spark, SF_DIR)
+    lroot, _ = bloom_lineitem_root(spark, SF_DIR)
+    index = os.path.join(lroot, "index")
+    _same(
+        read_written(spark, composed_schema(lroot, "index"), index),
+        spark.read.parquet(index),
+    )
+    months = sorted(glob.glob(os.path.join(lroot, "data", "ship_month=*")))[:3]
+    assert months
+    _same(
+        read_written(spark, composed_schema(lroot, "data"), *months),
+        spark.read.parquet(*months),
+    )
 
+
+def test_money_table_reads_as_inferred(spark):
+    ensure_tables(spark, SF_DIR)
+    path = decimal_money_path(spark, SF_DIR)
+    _same(read_written(spark, _money(spark).schema, path), spark.read.parquet(path))
+
+
+def test_every_manifest_records_its_schema(spark, root):
     for mf in glob.glob(os.path.join(root, "v*.json")):
         with open(mf) as fh:
             m = json.load(fh)
